@@ -1147,8 +1147,8 @@ def load_ivf_pq_index(spark, path: str) -> IvfPqIndex:
     stored fingerprint against a recomputation over the loaded payload —
     round-tripped doubles are bit-exact in parquet, so any mismatch
     means corruption or a hand-edited store, and querying with it would
-    return plausible-looking garbage. The collect is bounded by the
-    index geometry (``n_lists + m·k`` rows), never by corpus size."""
+    return plausible-looking garbage. The driver read is bounded by
+    the index geometry (``n_lists + m·k`` rows), never by corpus size."""
     return _load_index_with_meta(spark, path)[0]
 
 
@@ -1165,15 +1165,14 @@ _INDEX_VECTORS_SCHEMA = (
 def _load_index_with_meta(spark, path: str):
     """:func:`load_ivf_pq_index` plus the raw meta row — the table
     loaders need ``coded_generation`` without paying a second read of
-    the meta parquet. The meta and vectors stores are collected in ONE
-    job (r14 — two sequential collects paid two job latencies for a
-    geometry-bounded read); the explicit schemas read a pre-generation
-    store's missing ``coded_generation`` as NULL exactly like the
-    per-store read did."""
+    the meta parquet. The meta and vectors stores are read on the
+    driver (``sources/store.py::read_two_stores`` — no Spark job for a
+    geometry-bounded read); the named schemas read a pre-generation
+    store's missing ``coded_generation`` as NULL."""
     from ons_utils_spark.sources.store import read_two_stores
 
     meta_rows, rows = read_two_stores(
-        spark, f"{path}/meta", _INDEX_META_SCHEMA,
+        f"{path}/meta", _INDEX_META_SCHEMA,
         f"{path}/vectors", _INDEX_VECTORS_SCHEMA,
     )
     if len(meta_rows) != 1:
@@ -1430,6 +1429,8 @@ def load_ivf_pq_table(spark, path: str) -> Tuple[SparkDF, IvfPqIndex]:
     coded table is a plain partitioned parquet read projected back to
     ``(id, codes, __list)`` — the ``batch_id`` growth partitioning is a
     storage detail — and probe filters still land in PartitionFilters.
+    The scan takes its schema from one parquet footer
+    (``sources/store.py::footer_schema``), so loading runs no Spark job.
 
     Pending :func:`ivf_pq_table_delete` tombstones (if any) are applied
     as a broadcast watermark anti-filter on the read — a map-side join
@@ -1439,14 +1440,16 @@ def load_ivf_pq_table(spark, path: str) -> Tuple[SparkDF, IvfPqIndex]:
     above the scan). :func:`ivf_pq_table_compact` applies tombstones
     physically and retires the substore."""
     from ons_utils_spark.sources.store import (
-        apply_tombstones, load_tombstone_watermarks,
+        apply_tombstones, footer_schema, load_tombstone_watermarks,
     )
 
     index, meta = _load_index_with_meta(spark, f"{path}/index")
     generation = _table_generation(meta, index)
     coded_path = f"{path}/coded_{generation}"
     try:
-        coded = spark.read.parquet(coded_path)
+        coded = spark.read.schema(footer_schema(coded_path)).parquet(
+            coded_path
+        )
     except Exception as exc:
         raise ValueError(
             f"index at {path!r} points to coded generation "
@@ -1534,14 +1537,15 @@ def _coded_table_delete(
     if len(set(ids)) != len(ids):
         raise ValueError("duplicate ids in delete batch")
     # Tombstone ids are written in the coded table's own id dtype so the
-    # watermark equi-join never falls back to a cast (schema read only —
-    # one parquet footer, no data scan).
+    # watermark equi-join never falls back to a cast (one parquet footer
+    # read on the driver, no Spark job).
     from pyspark.sql.types import StructField, StructType
 
-    id_type = (
-        spark.read.parquet(f"{store_path}/coded_{generation}")
-        .schema["id"].dataType
-    )
+    from ons_utils_spark.sources.store import footer_schema
+
+    id_type = footer_schema(
+        f"{store_path}/coded_{generation}"
+    )["id"].dataType
     ids_df = local_rows_df(
         spark, [(x,) for x in ids],
         StructType([StructField("id", id_type, nullable=False)]),

@@ -121,11 +121,14 @@ def ann_store_family(spark, store_path: str) -> str:
     """Which codec family a persisted ANN serving store belongs to —
     ``"pq"`` (:func:`pq.save_ivf_pq_table`) or ``"sq"``
     (:func:`similarity.save_sq_table`) — read from the index meta's
-    SCHEMA (one footer read, no data): the PQ meta carries the subspace
-    geometry (``sub_d``), the SQ meta the grid dimension (``dim``).
-    Lets the hybrid maintainer and the skew witness serve either
-    family without the caller naming the codec."""
-    cols = spark.read.parquet(f"{store_path}/index/meta").columns
+    schema in its parquet footer on the driver (no Spark job, no data
+    read): the PQ meta carries the subspace geometry (``sub_d``), the SQ
+    meta the grid dimension (``dim``). Lets the hybrid maintainer and
+    the skew witness serve either family without the caller naming the
+    codec."""
+    from ons_utils_spark.sources.store import footer_schema
+
+    cols = footer_schema(f"{store_path}/index/meta").fieldNames()
     if "sub_d" in cols:
         return "pq"
     if "dim" in cols:
@@ -165,29 +168,32 @@ def check_hybrid_store_sync(
     died permanently between them leaves one store ahead FOREVER, and
     nothing else would ever say so.
 
+    The BM25 mark is its stats partitions (an append and a delete each
+    write one). The ANN mark is its live generation's coded partitions
+    AND its tombstone partitions — an ANN delete writes only
+    tombstones, so without them every delete of both stores under one
+    ``batch_id`` would read as skew.
+
     Returns ``(bm25_max, ann_max)`` (``None`` for a store with no
-    batch partitions yet). Cost: two partition-column aggregates —
-    file listing, no data read. Skew is legal, so serving proceeds;
-    the warning tells the operator to restart (or repair) the
-    maintainer, whose replay of the missing batch heals the lag.
-    The ANN store may be either codec family (:func:`ann_store_family`
-    picks the loader).
+    batch partitions yet). Cost: partition listings and the index meta
+    read on the driver — no Spark job, no data read. Skew is legal, so
+    serving proceeds; the warning tells the operator to restart (or
+    repair) the maintainer, whose replay of the missing batch heals the
+    lag. The ANN store may be either codec family
+    (:func:`ann_store_family` picks the loader).
     """
     import warnings
 
-    bm25_max = (
-        spark.read.parquet(f"{bm25_store_path}/stats")
-        .agg(F.max("batch_id"))
-        .collect()[0][0]
-    )
+    from ons_utils_spark.operators.pq import _tombstones_path
+    from ons_utils_spark.sources.store import dir_exists, max_batch_id
+
+    bm25_max = max_batch_id(f"{bm25_store_path}/stats")
     generation = _ann_store_generation(spark, ivf_pq_store_path)
-    coded = spark.read.parquet(
-        f"{ivf_pq_store_path}/coded_{generation}"
-    )
-    ann_max = (
-        coded.agg(F.max("batch_id")).collect()[0][0]
-        if "batch_id" in coded.columns else None
-    )
+    tombs = _tombstones_path(ivf_pq_store_path, generation)
+    marks = [max_batch_id(f"{ivf_pq_store_path}/coded_{generation}")]
+    if dir_exists(tombs):
+        marks.append(max_batch_id(tombs))
+    ann_max = max((m for m in marks if m is not None), default=None)
     if bm25_max != ann_max:
         warnings.warn(
             f"hybrid store skew: BM25 index at {bm25_store_path!r} has "

@@ -837,7 +837,7 @@ def load_sq_index(spark, path: str) -> SqIndex:
     stored fingerprint against a recomputation over the loaded payload
     (parquet round-trips doubles bit-exactly — a mismatch means
     corruption, and serving with it would return plausible-looking
-    garbage). The collect is index-geometry-sized."""
+    garbage). The driver read is index-geometry-sized."""
     return _load_sq_index_with_meta(spark, path)[0]
 
 
@@ -853,14 +853,14 @@ def _load_sq_index_with_meta(spark, path: str):
     """:func:`load_sq_index` plus the raw meta row — the table loaders
     need ``coded_generation`` without a second read of the meta
     parquet (the PQ family's ``_load_index_with_meta`` twin). Meta and
-    vectors are collected in ONE job (r14); the explicit schemas read
-    pre-flag stores' missing ``bits``/``by_residual``/
-    ``coded_generation`` as NULL, which the geometry fallbacks below
-    already handle exactly like the per-store read did."""
+    vectors are read on the driver (``sources/store.py::
+    read_two_stores`` — no Spark job); the named schemas read pre-flag
+    stores' missing ``bits``/``by_residual``/``coded_generation`` as
+    NULL, which the geometry fallbacks below handle."""
     from ons_utils_spark.sources.store import read_two_stores
 
     meta_rows, rows = read_two_stores(
-        spark, f"{path}/meta", _SQ_INDEX_META_SCHEMA,
+        f"{path}/meta", _SQ_INDEX_META_SCHEMA,
         f"{path}/vectors", _SQ_INDEX_VECTORS_SCHEMA,
     )
     if len(meta_rows) != 1:
@@ -1125,17 +1125,20 @@ def load_sq_table(spark, path: str) -> "tuple[SparkDF, SqIndex]":
     PartitionFilters. Pending :func:`ivf_sq_table_delete` tombstones
     are applied as the same broadcast watermark anti-filter the PQ
     loader uses — nothing on the tombstone-free path, no extra shuffle
-    with pending deletes."""
+    with pending deletes. Like the PQ loader, the scan takes its schema
+    from one parquet footer, so loading runs no Spark job."""
     from ons_utils_spark.operators.pq import _tombstones_path
     from ons_utils_spark.sources.store import (
-        apply_tombstones, load_tombstone_watermarks,
+        apply_tombstones, footer_schema, load_tombstone_watermarks,
     )
 
     index, meta = _load_sq_index_with_meta(spark, f"{path}/index")
     generation = _sq_table_generation(meta, path)
     coded_path = f"{path}/coded_{generation}"
     try:
-        coded = spark.read.parquet(coded_path)
+        coded = spark.read.schema(footer_schema(coded_path)).parquet(
+            coded_path
+        )
     except Exception as exc:
         raise ValueError(
             f"SQ index at {path!r} points to coded generation "

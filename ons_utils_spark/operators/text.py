@@ -1621,39 +1621,50 @@ def load_bm25_index(spark, path: str, defer_witness: bool = False):
     either half missing or stale, even at a coinciding row count —
     fails loudly, not with garbage scores.
 
-    The returned ``stats`` is a DRIVER-LOCAL one-row relation built from
-    the row this load already collected for validation (r14): it is
-    independent of the store files (safe to serve after the store
-    directory is gone) and its known-1-row size means the scorers'
-    stats broadcast costs no store read.
+    The one-row stats table is read on the driver
+    (``sources/store.py::read_small_store`` — no Spark job), and the
+    returned ``stats`` is a DRIVER-LOCAL one-row relation built from
+    that row: it is independent of the store files (safe to serve after
+    the store directory is gone) and its known-1-row size means the
+    scorers' stats broadcast costs no store read. The postings scan
+    takes its schema from one parquet footer, so only the witness
+    aggregate runs as a Spark job.
 
     ``defer_witness=True`` returns ``(postings, stats, validate)``
     instead: the witness rides the first consumer's materialization as
     an observation rather than a dedicated full-index job — see
     :func:`_deferred_postings_witness` for the caller contract (fully
     materialize first, then call ``validate()`` before serving)."""
-    stats = spark.read.parquet(f"{path}/stats")
-    if "n_postings" not in stats.columns or "postings_xor" not in stats.columns:
+    from ons_utils_spark.sources.store import (
+        footer_schema, read_small_store,
+    )
+
+    stats_path, postings_path = f"{path}/stats", f"{path}/postings"
+    stats = read_small_store(stats_path)
+    if (
+        "n_postings" not in stats.column_names
+        or "postings_xor" not in stats.column_names
+    ):
         raise ValueError(
             f"BM25 index stats at {path!r} lacks the consistency "
             "witness columns (n_postings, postings_xor) — a pre-witness "
             "or foreign store; rebuild it with bm25_index_build + "
             "save_bm25_index"
         )
-    # take(2), not count()+collect(): one job reads the one-row table
-    # AND proves it is one-row (a second row, if any, shows up in the
-    # same bounded read) — the old pair paid two driver-blocking jobs
-    # for one tiny parquet read.
-    head = stats.take(2)
-    if len(head) != 1:
-        n_rows = len(head) if len(head) < 2 else stats.count()
+    if stats.num_rows != 1:
         raise ValueError(
-            f"BM25 index stats at {path!r} has {n_rows} rows — expected "
-            "exactly 1; the store is torn or not a BM25 index"
+            f"BM25 index stats at {path!r} has {stats.num_rows} rows — "
+            "expected exactly 1; the store is torn or not a BM25 index"
         )
-    postings = spark.read.parquet(f"{path}/postings")
-    row = head[0]
-    stats_local = local_rows_df(spark, [row], stats.schema)
+    postings = spark.read.schema(footer_schema(postings_path)).parquet(
+        postings_path
+    )
+    row = stats.to_pylist()[0]
+    stats_schema = footer_schema(stats_path)
+    stats_local = local_rows_df(
+        spark, [tuple(row[c] for c in stats_schema.fieldNames())],
+        stats_schema,
+    )
     if defer_witness:
         observed, validate = _deferred_postings_witness(
             postings, row["n_postings"], row["postings_xor"], repr(path),
@@ -1895,57 +1906,33 @@ def load_bm25_index_incremental(
     loudly (re-run the delete with its ``batch_id`` to repair), never
     serves rows without their stats decrement or vice versa.
 
-    The returned ``stats`` is a DRIVER-LOCAL one-row relation (r14):
-    its four aggregates fold in the SAME single job as the validation
-    read of the per-batch stats table (previously the consumers re-ran
-    that fold as their own job), and it is independent of the store
-    files. ``defer_witness=True`` returns ``(postings, stats,
-    validate)`` — the postings witness rides the first consumer's
-    materialization (see :func:`_deferred_postings_witness`; the
-    tombstone-delta witness, when deletes exist, stays an eager check
-    over the tiny tombstone store)."""
+    The per-batch stats rows are read and folded on the DRIVER
+    (:func:`_fold_incremental_stats` — no Spark job): the served
+    4-column stats, the postings witness targets and, once deletes
+    exist, the tombstone witness targets. The returned ``stats`` is a
+    DRIVER-LOCAL one-row relation, independent of the store files. The
+    postings and tombstone scans take their schemas from one parquet
+    footer each; what remains as Spark jobs are the two witness
+    aggregates over them (the tombstone one only once deletes exist),
+    and the tombstone watermarks fold on the driver
+    (``sources/store.py::load_tombstone_watermarks``).
+    ``defer_witness=True`` returns ``(postings, stats, validate)`` —
+    the postings witness rides the first consumer's materialization
+    (see :func:`_deferred_postings_witness`; the tombstone-delta
+    witness, when deletes exist, stays an eager check over the tiny
+    tombstone store)."""
     from pyspark.sql import functions as F
 
     from ons_utils_spark.sources.store import (
-        apply_tombstones, dir_exists,
+        apply_tombstones, dir_exists, footer_schema,
+        load_tombstone_watermarks,
     )
 
-    raw_stats = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(f"{store_path}/stats")
+    row = _fold_incremental_stats(store_path)
+    postings_path = f"{store_path}/postings"
+    raw_postings = spark.read.schema(footer_schema(postings_path)).parquet(
+        postings_path
     )
-    if (
-        "n_postings" not in raw_stats.columns
-        or "postings_xor" not in raw_stats.columns
-    ):
-        raise ValueError(
-            f"incremental BM25 index at {store_path!r} lacks the "
-            "consistency witness columns (n_postings, postings_xor) — "
-            "a pre-witness or foreign store; re-ingest through "
-            "bm25_index_append"
-        )
-    raw_postings = spark.read.parquet(f"{store_path}/postings")
-    # ONE validation job over the per-batch stats rows: the served
-    # 4-column stats fold, the postings witness fold, and (when the
-    # store has seen deletes) the tombstone delta fold are aggregates
-    # over the SAME tiny table — fold them all in one job instead of
-    # sequential collects, and return the served stats as driver-local
-    # rows (the consumers' own stats job disappears).
-    val_aggs = [
-        F.sum("n").alias("n"),
-        F.sum("total_dl").alias("total_dl"),
-        F.coalesce(F.sum("n_postings"), F.lit(0)).alias("n_postings"),
-        F.coalesce(F.bit_xor("postings_xor"), F.lit(0)).alias(
-            "postings_xor"
-        ),
-    ]
-    has_tomb_stats = "n_tombstones" in raw_stats.columns
-    if has_tomb_stats:
-        val_aggs += [
-            F.coalesce(F.sum("n_tombstones"), F.lit(0)).alias("nt"),
-            F.coalesce(F.bit_xor("tombstones_xor"), F.lit(0)).alias("tx"),
-        ]
-    row = raw_stats.agg(*val_aggs).collect()[0]
     stats = local_rows_df(
         spark,
         [(row["n"], row["total_dl"], row["n_postings"],
@@ -1970,13 +1957,12 @@ def load_bm25_index_incremental(
         )
     tomb_path = f"{store_path}/tombstones"
     have_dir = dir_exists(tomb_path)
-    if have_dir or has_tomb_stats:
-        if has_tomb_stats:
-            want_nt, want_tx = row["nt"], row["tx"]
-        else:
-            want_nt, want_tx = 0, 0
+    if have_dir or row["nt"] is not None:
+        want_nt, want_tx = row["nt"] or 0, row["tx"] or 0
         if have_dir:
-            tombs = spark.read.parquet(tomb_path)
+            tombs = spark.read.schema(footer_schema(tomb_path)).parquet(
+                tomb_path
+            )
             have = tombs.agg(
                 F.count(F.lit(1)).alias("nt"),
                 F.coalesce(
@@ -1987,7 +1973,7 @@ def load_bm25_index_incremental(
                 ).alias("tx"),
             ).collect()[0]
         else:
-            tombs, have = None, {"nt": 0, "tx": 0}
+            have = {"nt": 0, "tx": 0}
         if have["nt"] != want_nt or have["tx"] != want_tx:
             raise ValueError(
                 f"BM25 index at {store_path!r} has a torn DELETE: the "
@@ -1999,20 +1985,65 @@ def load_bm25_index_incremental(
                 "with its explicit batch_id to repair (both partitions "
                 "are statically overwritten)."
             )
-        if tombs is not None and have["nt"]:
-            wm = tombs.groupBy("id").agg(
-                F.max("batch_id").alias("__dead_upto")
-            )
+        if have["nt"]:
             # raw_postings is the OBSERVED frame in deferred mode, so
             # the witness still aggregates the pre-tombstone store rows
             # (the stored stats count them all) while the served
             # postings apply the watermark filter above it.
-            postings = apply_tombstones(raw_postings, wm).select(
-                "term", "id", "tf", "dl"
-            )
+            postings = apply_tombstones(
+                raw_postings, load_tombstone_watermarks(spark, tomb_path)
+            ).select("term", "id", "tf", "dl")
     if defer_witness:
         return postings, stats, validate
     return postings, stats
+
+
+def _fold_incremental_stats(store_path: str) -> dict:
+    """Fold an incremental BM25 store's per-batch stats rows on the
+    driver (``sources/store.py::read_small_store`` — no Spark job) →
+    ``n``/``total_dl`` (the served sums), ``n_postings``/
+    ``postings_xor`` (the postings witness targets) and ``nt``/``tx``
+    (the tombstone witness targets — ``None`` until a delete has
+    written its stats delta). The NULL rules of the Spark aggregates
+    this replaces: sums skip NULLs, which is how a column absent from
+    older batches reads, and the witness folds coalesce to 0."""
+    import operator
+    from functools import reduce
+
+    from ons_utils_spark.sources.store import read_small_store
+
+    table = read_small_store(f"{store_path}/stats")
+    if (
+        "n_postings" not in table.column_names
+        or "postings_xor" not in table.column_names
+    ):
+        raise ValueError(
+            f"incremental BM25 index at {store_path!r} lacks the "
+            "consistency witness columns (n_postings, postings_xor) — "
+            "a pre-witness or foreign store; re-ingest through "
+            "bm25_index_append"
+        )
+    cols = table.to_pydict()
+
+    def vals(c):
+        return [v for v in cols.get(c, ()) if v is not None]
+
+    def total(c):
+        v = vals(c)
+        return sum(v) if v else None
+
+    def xor(c):
+        return reduce(operator.xor, vals(c), 0)
+
+    deletes = "n_tombstones" in cols
+    return {
+        "n": total("n"),
+        "total_dl": total("total_dl"),
+        "n_postings": total("n_postings") or 0,
+        "postings_xor": xor("postings_xor"),
+        "nt": (total("n_tombstones") or 0) if deletes else None,
+        "tx": xor("tombstones_xor") if deletes else None,
+    }
 
 
 def bm25_index_compact(spark, store_path: str) -> None:
@@ -2101,12 +2132,15 @@ def bm25_index_delete(
     holding an append's row raises. ``batch_id`` must be ≥ 0: a delete
     is only meaningful relative to the append order. O(ids) driver
     memory; the store is never rewritten (see :func:`bm25_index_vacuum`
-    for physical application)."""
+    for physical application). The stats partition, the prior
+    tombstones and the postings schema are read on the driver; the
+    live-id lookup over the postings is the one Spark scan."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
 
     from ons_utils_spark.sources.store import (
-        append_tombstones, dir_exists,
+        append_tombstones, apply_tombstones, dir_exists, footer_schema,
+        load_tombstone_watermarks, read_small_store,
     )
 
     if batch_id is None or int(batch_id) < 0:
@@ -2126,16 +2160,19 @@ def bm25_index_delete(
         )
     if len(set(ids)) != len(ids):
         raise ValueError("duplicate ids in delete batch")
-    raw_postings = spark.read.parquet(f"{store_path}/postings")
+    postings_path = f"{store_path}/postings"
+    raw_postings = spark.read.schema(footer_schema(postings_path)).parquet(
+        postings_path
+    )
     # Refuse a batch_id collision with an APPEND before writing anything:
     # both operations statically overwrite stats/batch_id=<id>, so
     # sharing one would silently erase the other's stats row on replay.
     stats_part = f"{store_path}/stats/batch_id={batch_id}"
     if dir_exists(stats_part):
-        existing = spark.read.parquet(stats_part)
-        if (
-            "n_tombstones" not in existing.columns
-            or existing.where(F.col("n_postings") != 0).limit(1).count()
+        existing = read_small_store(stats_part)
+        if "n_tombstones" not in existing.column_names or any(
+            v not in (None, 0)
+            for v in existing.column("n_postings").to_pylist()
         ):
             raise ValueError(
                 f"batch_id {batch_id} already holds an APPEND's stats "
@@ -2151,28 +2188,11 @@ def bm25_index_delete(
         spark, [(x,) for x in ids],
         StructType([StructField("id", id_type, nullable=False)]),
     )
-    view = raw_postings.where(F.col("batch_id") <= batch_id)
     tomb_path = f"{store_path}/tombstones"
-    if dir_exists(tomb_path):
-        prior = (
-            spark.read.parquet(tomb_path)
-            .where(F.col("batch_id") < batch_id)
-            .groupBy("id")
-            .agg(F.max("batch_id").alias("__dead_upto"))
-            .withColumnRenamed("id", "__tomb_id")
-        )
-        view = (
-            view.join(
-                F.broadcast(prior),
-                view["id"] == prior["__tomb_id"],
-                "left",
-            )
-            .where(
-                F.col("__dead_upto").isNull()
-                | (F.col("__dead_upto") < F.col("batch_id"))
-            )
-            .drop("__tomb_id", "__dead_upto")
-        )
+    view = apply_tombstones(
+        raw_postings.where(F.col("batch_id") <= batch_id),
+        load_tombstone_watermarks(spark, tomb_path, before=batch_id),
+    )
     dead = (
         view.join(F.broadcast(ids_df.withColumnRenamed("id", "__del_id")),
                   view["id"] == F.col("__del_id"), "left_semi")
@@ -2247,8 +2267,8 @@ def bm25_index_vacuum(spark, store_path: str) -> None:
 
     repair_swap_debris(store_path)
     # Validates both witnesses and applies the watermark filter.
-    postings, stats = load_bm25_index_incremental(spark, store_path)
-    row = stats.collect()[0]
+    postings, _ = load_bm25_index_incremental(spark, store_path)
+    row = _fold_incremental_stats(store_path)
     live = postings.agg(
         F.count(F.lit(1)).alias("__np"),
         F.coalesce(

@@ -353,3 +353,37 @@ class TestHybridStoreSync:
         )
         with pytest.warns(UserWarning, match="hybrid store skew"):
             retrieval.check_hybrid_store_sync(spark, bm25, ann)
+
+    def test_append_and_delete_to_both_stores_is_silent(
+        self, spark, tmp_path
+    ):
+        """An ANN delete writes only tombstones, a BM25 delete a stats
+        partition: the ANN high-water mark counts its live generation's
+        tombstone partitions, so deleting the same ids from both stores
+        under one batch_id is not skew."""
+        import warnings
+
+        from ons_utils_spark.operators import pq, retrieval, text
+
+        full, bm25, ann = self._stores(spark, tmp_path)
+        text.bm25_index_append(
+            full.where("doc_id >= 2"), "doc_id", "text", bm25, batch_id=1
+        )
+        pq.ivf_pq_table_append(
+            full.where("doc_id >= 2"), ann, id_col="doc_id", batch_id=1
+        )
+        text.bm25_index_delete(spark, bm25, [0, 3], batch_id=2)
+        pq.ivf_pq_table_delete(spark, ann, [0, 3], batch_id=2)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            b, a = retrieval.check_hybrid_store_sync(spark, bm25, ann)
+        assert b == 2 and a == 2
+
+    def test_bm25_only_delete_warns(self, spark, tmp_path):
+        from ons_utils_spark.operators import retrieval, text
+
+        _, bm25, ann = self._stores(spark, tmp_path)
+        text.bm25_index_delete(spark, bm25, [1], batch_id=1)
+        with pytest.warns(UserWarning, match="hybrid store skew"):
+            b, a = retrieval.check_hybrid_store_sync(spark, bm25, ann)
+        assert b == 1 and a == 0
