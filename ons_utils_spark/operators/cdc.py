@@ -169,39 +169,23 @@ def ann_table_apply_cdc(
     the ``hybrid_ingest_writer`` recipe). Same even/odd split as the
     BM25 apply; deletes are pure tombstone filters (unknown ids are
     legal no-ops there), inserts encode with the STORED index."""
-    from ons_utils_spark.operators.retrieval import ann_store_family
+    from ons_utils_spark.operators.retrieval import ann_store_codec
+    from ons_utils_spark.sources.store import (
+        coded_table_append, coded_table_delete,
+    )
 
-    family = ann_store_family(changes.sparkSession, store_path)
+    spark = changes.sparkSession
+    codec = ann_store_codec(spark, store_path)
     del_batch, ins_batch = cdc_batch_ids(batch_id)
     delete_ids, inserts = split_cdc_batch(changes, id_col, op_col)
-    if family == "pq":
-        from ons_utils_spark.operators.pq import (
-            ivf_pq_table_append, ivf_pq_table_delete,
+    if delete_ids:
+        coded_table_delete(
+            codec, spark, store_path, delete_ids, batch_id=del_batch
         )
-
-        if delete_ids:
-            ivf_pq_table_delete(
-                changes.sparkSession, store_path, delete_ids,
-                batch_id=del_batch,
-            )
-        ivf_pq_table_append(
-            inserts, store_path, id_col=id_col, vec_col=vec_col,
-            batch_id=ins_batch, method=method,
-        )
-    else:
-        from ons_utils_spark.operators.similarity import (
-            ivf_sq_table_append, ivf_sq_table_delete,
-        )
-
-        if delete_ids:
-            ivf_sq_table_delete(
-                changes.sparkSession, store_path, delete_ids,
-                batch_id=del_batch,
-            )
-        ivf_sq_table_append(
-            inserts, store_path, id_col=id_col, vec_col=vec_col,
-            batch_id=ins_batch, method=method,
-        )
+    coded_table_append(
+        codec, inserts, store_path, id_col=id_col, vec_col=vec_col,
+        batch_id=ins_batch, method=method,
+    )
 
 
 #: Bound on the number of logical batches one history replay will walk.

@@ -42,6 +42,19 @@ from ons_utils_spark.operators.semantic import (
     kmeans_lloyd,
     resolve_train,
 )
+from ons_utils_spark.sources.store import (
+    INDEX_FORMAT_VERSION,
+    CodedTableCodec,
+    _check_residual_flag,
+    _tag_residual,
+    coded_table_append,
+    coded_table_compact,
+    coded_table_delete,
+    coded_table_load,
+    coded_table_save,
+    read_index_artifact,
+    write_index_artifact,
+)
 
 
 def _check_geometry(dim: int, m: int) -> int:
@@ -675,7 +688,7 @@ def ivf_pq_build(
     )
     # Geometry tag IN DATA: codes from one geometry scored in the other
     # are plausible-looking garbage, so every scorer rejects a flag
-    # mismatch via _coded_residual_flag. The flag rides as COLUMN
+    # mismatch via _check_residual_flag. The flag rides as COLUMN
     # METADATA on `codes` — part of the schema, so it survives
     # select/filter/cache AND a parquet round-trip (unlike the Python
     # attribute this replaces, which any DataFrame-producing call
@@ -702,30 +715,6 @@ def _residual_transform(src: SparkDF, vec_col: str, coarse) -> SparkDF:
             lambda a, b: a - b,
         ),
     )
-
-
-def _tag_residual(coded: SparkDF, by_residual: bool) -> SparkDF:
-    """Stamp the build geometry onto the coded table as column metadata
-    (see :func:`ivf_pq_build`'s tag comment)."""
-    return coded.withMetadata(
-        "codes", {"ons_ivfpq_residual": bool(by_residual)}
-    )
-
-
-def _coded_residual_flag(coded: SparkDF) -> "bool | None":
-    """The coded table's build-geometry flag, or ``None`` when unknown.
-
-    Reads the ``codes`` column metadata stamped by :func:`ivf_pq_build`
-    / :func:`ivf_pq_encode`; falls back to the legacy
-    ``_ons_ivfpq_residual`` Python attribute for frames produced by
-    older builds that are still alive in a session."""
-    try:
-        md = coded.schema["codes"].metadata
-    except Exception:  # noqa: BLE001 — no codes column: not a coded table
-        md = None
-    if md and "ons_ivfpq_residual" in md:
-        return bool(md["ons_ivfpq_residual"])
-    return getattr(coded, "_ons_ivfpq_residual", None)
 
 
 def ivf_pq_topk(
@@ -764,14 +753,7 @@ def ivf_pq_topk(
     switch to the Arrow fold — measured 15.2 s → 0.39 s per query
     (SCALING.md §PQ geometry), scores bit-identical.
     """
-    built_residual = _coded_residual_flag(coded)
-    if built_residual is not None and built_residual != by_residual:
-        raise ValueError(
-            f"coded table was built with by_residual={built_residual} "
-            f"but this query scores with by_residual={by_residual} — "
-            "codes from one geometry scored in the other are "
-            "meaningless; pass the same flag to both"
-        )
+    _check_residual_flag(coded, by_residual)
     q = [float(v) for v in query_vec]
     dim = len(codebooks) * len(codebooks[0][0])
     if len(q) != dim:
@@ -996,6 +978,11 @@ class IvfPqIndex(NamedTuple):
     def dim(self) -> int:
         return self.m * self.sub_d
 
+    @property
+    def codec(self) -> CodedTableCodec:
+        """The family's coded-table codec, :data:`PQ_CODEC`."""
+        return PQ_CODEC
+
 
 def _index_fingerprint(
     coarse: List[List[float]],
@@ -1082,7 +1069,14 @@ def make_ivf_pq_index(
     )
 
 
-_INDEX_FORMAT_VERSION = 1
+_INDEX_META_SCHEMA = (
+    "format_version int, by_residual boolean, round_dp int, "
+    "n_lists int, m int, k int, sub_d int, fingerprint string, "
+    "coded_generation string"
+)
+_INDEX_VECTORS_SCHEMA = (
+    "component string, subspace int, idx int, vec array<double>"
+)
 
 
 def save_ivf_pq_index(
@@ -1090,19 +1084,14 @@ def save_ivf_pq_index(
     coded_generation: "str | None" = None,
 ) -> None:
     """Persist an :class:`IvfPqIndex` as two small parquet tables under
-    ``path`` — ``vectors/`` (one row per coarse centroid / codebook
-    entry) and ``meta/`` (one row: geometry flags + fingerprint).
+    ``path`` (``sources/store.py::write_index_artifact``, meta written
+    last) — ``vectors/`` (one row per coarse centroid / codebook entry)
+    and ``meta/`` (one row: geometry flags + fingerprint).
 
-    This is the artifact :mod:`sources.store` never had a shape for
-    (index payloads aren't mergeable deltas): a serving session calls
-    :func:`load_ivf_pq_index` instead of re-running ``m`` Lloyd fits,
-    and the build↔query geometry guard validates against the STORED
-    flags rather than a Python attribute that any transformation drops.
-    ``meta/`` is written LAST, so a crash mid-save leaves a store that
-    :func:`load_ivf_pq_index` rejects (no meta) rather than a silently
-    truncated index. Overwrites any index already at ``path`` (same
-    non-ACID stance as the rest of ``sources/`` — an ACID table format
-    is the production answer for concurrent readers).
+    A serving session calls :func:`load_ivf_pq_index` instead of
+    re-running ``m`` Lloyd fits, and the build↔query geometry guard
+    validates against the STORED flags rather than a Python attribute
+    that any transformation drops.
 
     ``coded_generation`` is :func:`save_ivf_pq_table`'s commit record —
     the name of the coded directory THIS index write pairs with
@@ -1121,25 +1110,15 @@ def save_ivf_pq_index(
         [("rotation", -1, j, r) for j, r in enumerate(index.rotation)]
         if index.rotation is not None else []
     )
-    vectors = local_rows_df(
-        spark, rows,
-        "component string, subspace int, idx int, vec array<double>",
-    )
-    meta = local_rows_df(
-        spark,
-        [(
-            _INDEX_FORMAT_VERSION, index.by_residual, index.round_dp,
+    write_index_artifact(
+        spark, path, rows, _INDEX_VECTORS_SCHEMA,
+        (
+            INDEX_FORMAT_VERSION, index.by_residual, index.round_dp,
             index.n_lists, index.m, index.k, index.sub_d,
             index.fingerprint, coded_generation,
-        )],
-        "format_version int, by_residual boolean, round_dp int, "
-        "n_lists int, m int, k int, sub_d int, fingerprint string, "
-        "coded_generation string",
+        ),
+        _INDEX_META_SCHEMA,
     )
-    # coalesce(1): the whole payload is n_lists + m·k rows — a FAISS
-    # IVF65536,PQ16x8 geometry is ~70k rows, still one small file.
-    vectors.coalesce(1).write.mode("overwrite").parquet(f"{path}/vectors")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def load_ivf_pq_index(spark, path: str) -> IvfPqIndex:
@@ -1152,41 +1131,13 @@ def load_ivf_pq_index(spark, path: str) -> IvfPqIndex:
     return _load_index_with_meta(spark, path)[0]
 
 
-_INDEX_META_SCHEMA = (
-    "format_version int, by_residual boolean, round_dp int, "
-    "n_lists int, m int, k int, sub_d int, fingerprint string, "
-    "coded_generation string"
-)
-_INDEX_VECTORS_SCHEMA = (
-    "component string, subspace int, idx int, vec array<double>"
-)
-
-
 def _load_index_with_meta(spark, path: str):
-    """:func:`load_ivf_pq_index` plus the raw meta row — the table
-    loaders need ``coded_generation`` without paying a second read of
-    the meta parquet. The meta and vectors stores are read on the
-    driver (``sources/store.py::read_two_stores`` — no Spark job for a
-    geometry-bounded read); the named schemas read a pre-generation
-    store's missing ``coded_generation`` as NULL."""
-    from ons_utils_spark.sources.store import read_two_stores
-
-    meta_rows, rows = read_two_stores(
-        f"{path}/meta", _INDEX_META_SCHEMA,
-        f"{path}/vectors", _INDEX_VECTORS_SCHEMA,
+    """:func:`load_ivf_pq_index` plus the raw meta row, whose
+    ``coded_generation`` the table lifecycle needs — one driver read
+    (``sources/store.py::read_index_artifact``), no Spark job."""
+    meta, rows = read_index_artifact(
+        path, _INDEX_META_SCHEMA, _INDEX_VECTORS_SCHEMA, "IVF×PQ"
     )
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"index meta at {path!r} has {len(meta_rows)} rows — "
-            "expected exactly 1; the store is corrupt or not an index"
-        )
-    meta = meta_rows[0]
-    if meta["format_version"] != _INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"index at {path!r} has format_version "
-            f"{meta['format_version']} — this build reads "
-            f"{_INDEX_FORMAT_VERSION}"
-        )
     coarse_rows = sorted(
         (r["idx"], list(r["vec"])) for r in rows if r["component"] == "coarse"
     )
@@ -1248,6 +1199,32 @@ def _load_index_with_meta(spark, path: str):
     return index, meta
 
 
+def _assign_lists(df: SparkDF, index, vec_col: str, method: str):
+    """The coarse half of a stored-index encode, shared by
+    :func:`ivf_pq_encode` and ``similarity.ivf_sq_encode`` →
+    ``(frame, column to encode)``: raw vectors rotate into an OPQ
+    index's space (the same :func:`rotate_vectors` the build-time
+    corpus went through, so append ≡ one-shot parity carries over to
+    rotated stores), ``__list`` is the build's final Lloyd argmin over
+    the stored coarse centroids (``method`` resolved by ``n_lists``),
+    and a residual index encodes ``__rvec``
+    (:func:`_residual_transform`)."""
+    if index.rotation is not None:
+        df = rotate_vectors(df, vec_col, index.rotation)
+    vecs = df.withColumn(
+        "__vv", array_dot(F.col(vec_col), F.col(vec_col))
+    )
+    src = _assign(
+        vecs, vec_col, index.coarse_centroids,
+        _resolve_method(method, index.n_lists),
+    ).withColumn("__list", F.col("__cluster"))
+    if not index.by_residual:
+        return src, vec_col
+    return (
+        _residual_transform(src, vec_col, index.coarse_centroids), "__rvec"
+    )
+
+
 def ivf_pq_encode(
     df: SparkDF,
     index: IvfPqIndex,
@@ -1285,24 +1262,7 @@ def ivf_pq_encode(
             "ivf_pq_encode produces (id, codes, __list); encode plain "
             "PQ codes with pq_build's codebooks instead"
         )
-    if index.rotation is not None:
-        # OPQ store: centroids and codebooks live in the rotated space;
-        # raw batches rotate on the way in — the same rotate_vectors
-        # the build-time corpus went through, so append ≡ one-shot
-        # parity carries over to rotated stores (and therefore to the
-        # table append, streaming, and CDC paths that call here).
-        df = rotate_vectors(df, vec_col, index.rotation)
-    coarse_method = _resolve_method(method, index.n_lists)
-    vecs = df.withColumn(
-        "__vv", array_dot(F.col(vec_col), F.col(vec_col))
-    )
-    src = _assign(
-        vecs, vec_col, index.coarse_centroids, coarse_method
-    ).withColumn("__list", F.col("__cluster"))
-    enc_col = vec_col
-    if index.by_residual:
-        src = _residual_transform(src, vec_col, index.coarse_centroids)
-        enc_col = "__rvec"
+    src, enc_col = _assign_lists(df, index, vec_col, method)
     sub_d = index.sub_d
     m = index.m
     # No checkpoint (unlike pq_build's slice projection): encode-only
@@ -1326,157 +1286,23 @@ def save_ivf_pq_table(
     index: IvfPqIndex,
     path: str,
 ) -> None:
-    """Persist the WHOLE IVF×PQ serving artifact in one call: the coded
-    table partitioned by ``__list`` under
-    ``<path>/coded_<fingerprint>`` (so a probe's ``__list IN (...)``
-    filter prunes whole partition directories — the billion-vector
-    serving layout) and the fingerprinted index under ``<path>/index``.
-    :func:`load_ivf_pq_table` restores both; a serving session then
-    answers queries having trained nothing and read only
-    ``n_lists + m·k`` index rows plus the probed partitions.
-
-    Crash pairing: the coded directory is keyed by the index
-    fingerprint PLUS a per-save nonce and written FIRST; the index
-    write (which records that generation name) is the commit point. A
-    crash in between leaves the OLD index paired with the OLD coded
-    generation (both untouched — the nonce means even a SAME-INDEX
-    re-save or a re-encoded/grown corpus never overwrites the live
-    directory in place, closing the partial-overwrite tear a
-    fingerprint-only key had). Superseded ``coded_*`` directories are
-    deleted best-effort after the commit; stragglers are harmless
-    (never read) and are retried on the next save.
-
-    Layout: rows land under ``batch_id=-1/__list=<j>/`` — the same
-    two-level partitioning :func:`ivf_pq_table_append` grows batch by
-    batch, so a base save plus any number of appends stay ONE
-    partition-discoverable table with ``__list`` pruning intact."""
-    if "__list" not in coded.columns:
-        raise ValueError(
-            "coded table has no __list column — save_ivf_pq_table "
-            "persists an IVF×PQ build (ivf_pq_build output); for plain "
-            "PQ codes save the index alone and write the codes yourself"
-        )
-    if not index.coarse_centroids:
-        raise ValueError(
-            "index has no coarse centroids (plain-PQ index) — it cannot "
-            "drive probe selection over a __list-partitioned table"
-        )
-    built_residual = _coded_residual_flag(coded)
-    if built_residual is not None and built_residual != index.by_residual:
-        raise ValueError(
-            f"coded table was built with by_residual={built_residual} "
-            f"but the index says by_residual={index.by_residual} — "
-            "persisting a mismatched pair would serve garbage distances"
-        )
-    import uuid
-
-    generation = f"{index.fingerprint}_{uuid.uuid4().hex[:8]}"
-    (
-        # static overwrite for the same reason as ivf_pq_table_append:
-        # the nonce makes the target fresh, but a session's dynamic
-        # partitionOverwriteMode must never change what a re-save of
-        # an existing path means.
-        coded.withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("batch_id", "__list")
-        .parquet(f"{path}/coded_{generation}")
-    )
-    save_ivf_pq_index(
-        coded.sparkSession, index, f"{path}/index",
-        coded_generation=generation,
-    )
-    # Commit done — drop superseded coded_* generations (best-effort:
-    # a failure here leaves unread garbage, never a wrong answer).
-    from pyarrow import fs as pafs
-
-    from ons_utils_spark.sources.store import _resolve_fs
-
-    try:
-        filesystem, root = _resolve_fs(path)
-        keep = f"coded_{generation}"
-        for info in filesystem.get_file_info(
-            pafs.FileSelector(root, recursive=False)
-        ):
-            if (
-                info.type == pafs.FileType.Directory
-                and info.base_name.startswith("coded_")
-                and info.base_name != keep
-            ):
-                filesystem.delete_dir(info.path)
-    except Exception:  # noqa: BLE001 — cleanup only, commit already done
-        pass
-
-
-def _table_generation(meta, index: IvfPqIndex) -> str:
-    """The coded generation an index's (already-loaded) meta row
-    committed with. Falls back to the pre-nonce name ``<fingerprint>``
-    for stores written before the generation column existed (their
-    coded dir was keyed by fingerprint alone)."""
-    gen = (
-        meta["coded_generation"] if "coded_generation" in meta else None
-    )
-    return gen if gen is not None else index.fingerprint
+    """Persist the WHOLE IVF×PQ serving artifact in one call — the
+    coded table (an :func:`ivf_pq_build` / :func:`ivf_pq_encode` output)
+    partitioned by ``__list`` and the fingerprinted index;
+    :func:`load_ivf_pq_table` restores both, so a serving session
+    trains nothing and reads only ``n_lists + m·k`` index rows plus the
+    probed partitions. ``sources/store.py::coded_table_save`` bound to
+    :data:`PQ_CODEC` (commit protocol in that module's docstring)."""
+    coded_table_save(PQ_CODEC, coded, index, path)
 
 
 def load_ivf_pq_table(spark, path: str) -> Tuple[SparkDF, IvfPqIndex]:
-    """Load a serving artifact written by :func:`save_ivf_pq_table`
-    (plus any :func:`ivf_pq_table_append` batches) → ``(coded, index)``
-    ready for :func:`ivf_pq_query`. The index is fingerprint-validated
-    and PICKS the coded generation (the nonce-keyed directory it was
-    committed with) — a torn save, including a same-index re-save, can
-    therefore never serve mismatched or partially-written pairs. The
-    coded table is a plain partitioned parquet read projected back to
-    ``(id, codes, __list)`` — the ``batch_id`` growth partitioning is a
-    storage detail — and probe filters still land in PartitionFilters.
-    The scan takes its schema from one parquet footer
-    (``sources/store.py::footer_schema``), so loading runs no Spark job.
-
-    Pending :func:`ivf_pq_table_delete` tombstones (if any) are applied
-    as a broadcast watermark anti-filter on the read — a map-side join
-    against one folded row per deleted id, so the common tombstone-free
-    store pays nothing and a store with pending deletes pays no extra
-    shuffle; ``__list`` partition pruning is untouched (the filter sits
-    above the scan). :func:`ivf_pq_table_compact` applies tombstones
-    physically and retires the substore."""
-    from ons_utils_spark.sources.store import (
-        apply_tombstones, footer_schema, load_tombstone_watermarks,
-    )
-
-    index, meta = _load_index_with_meta(spark, f"{path}/index")
-    generation = _table_generation(meta, index)
-    coded_path = f"{path}/coded_{generation}"
-    try:
-        coded = spark.read.schema(footer_schema(coded_path)).parquet(
-            coded_path
-        )
-    except Exception as exc:
-        raise ValueError(
-            f"index at {path!r} points to coded generation "
-            f"{generation} but {coded_path!r} is unreadable — either "
-            "the store was torn by a crashed or manual edit (re-run "
-            "save_ivf_pq_table), or the base save was EMPTY and "
-            "nothing has been appended yet (an empty parquet write "
-            "carries no schema; the bootstrap-from-stream pattern is "
-            "fine, but the first ivf_pq_table_append must land before "
-            "the first load)"
-        ) from exc
-    if "batch_id" in coded.columns:
-        wm = load_tombstone_watermarks(
-            spark, _tombstones_path(path, generation)
-        )
-        coded = apply_tombstones(coded, wm).select("id", "codes", "__list")
-    return coded, index
-
-
-def _tombstones_path(store_path: str, generation: str) -> str:
-    """The tombstone substore paired with one coded generation. The name
-    deliberately starts with ``coded_`` so :func:`save_ivf_pq_table`'s
-    post-commit sweep retires it together with the generation it
-    annotates — a re-save or a tombstone-applying compaction rebuilds
-    the live set from scratch, at which point stale deletes must not
-    outlive the rows they referred to."""
-    return f"{store_path}/coded_{generation}__tombstones"
+    """Load a :func:`save_ivf_pq_table` store (plus any appends and
+    deletes) → ``(coded, index)`` ready for :func:`ivf_pq_query`, with
+    no Spark job — ``sources/store.py::coded_table_load`` bound to
+    :data:`PQ_CODEC`. Also serves the pre-generation layout (coded
+    rows under ``coded_<fingerprint>``, no ``batch_id``)."""
+    return coded_table_load(PQ_CODEC, spark, path)
 
 
 def ivf_pq_table_delete(
@@ -1485,74 +1311,13 @@ def ivf_pq_table_delete(
     ids: Sequence,
     batch_id: int,
 ) -> None:
-    """Delete vectors from a :func:`save_ivf_pq_table` store by id —
-    the maintenance operation between append and compaction (the GDPR /
-    stale-document path): a tombstone batch lands under the live coded
-    generation and every loader (:func:`load_ivf_pq_table`, and
-    therefore all serving entry points) filters the dead rows out;
-    :func:`ivf_pq_table_compact` later applies the deletes physically.
-    Nothing in the coded table or the index artifact is touched — a
-    delete is O(ids), never a rewrite.
-
-    Semantics (``sources/store.py::append_tombstones``): the tombstone
-    kills every row for that id written at or before ``batch_id``
-    (base-save rows included), and a LATER :func:`ivf_pq_table_append`
-    of the same id serves again — delete-then-reinsert is the update
-    idiom. ``batch_id`` is required and non-negative for exactly that
-    ordering reason; a streaming maintainer passes its micro-batch id
-    (replay statically overwrites the same tombstone partition —
-    exactly-once), and an append and a delete must NOT share a
-    ``batch_id`` (each would overwrite the other's partition on
-    replay). Deleting an id the store never held is a no-op filter,
-    not an error — the caller cannot be expected to know the live set.
-    """
-    index, meta = _load_index_with_meta(spark, f"{store_path}/index")
-    generation = _table_generation(meta, index)
-    if generation == index.fingerprint:
-        raise ValueError(
-            f"store at {store_path!r} uses the pre-generation layout "
-            "(no batch_id partitioning) — its rows carry no order for "
-            "the tombstone watermark to compare against; re-save it "
-            "once with save_ivf_pq_table"
-        )
-    _coded_table_delete(spark, store_path, generation, ids, batch_id)
-
-
-def _coded_table_delete(
-    spark, store_path: str, generation: str, ids: Sequence, batch_id: int
-) -> None:
-    """Validated tombstone append against one coded generation — shared
-    by :func:`ivf_pq_table_delete` and the SQ twin (the two table
-    layouts are identical below the index artifact)."""
-    from ons_utils_spark.sources.store import append_tombstones
-
-    ids = list(ids)
-    if not ids:
-        raise ValueError("delete batch is empty — nothing to tombstone")
-    if any(x is None for x in ids):
-        raise ValueError(
-            "delete batch holds a NULL id — a NULL never equi-joins, "
-            "so the delete would silently not happen"
-        )
-    if len(set(ids)) != len(ids):
-        raise ValueError("duplicate ids in delete batch")
-    # Tombstone ids are written in the coded table's own id dtype so the
-    # watermark equi-join never falls back to a cast (one parquet footer
-    # read on the driver, no Spark job).
-    from pyspark.sql.types import StructField, StructType
-
-    from ons_utils_spark.sources.store import footer_schema
-
-    id_type = footer_schema(
-        f"{store_path}/coded_{generation}"
-    )["id"].dataType
-    ids_df = local_rows_df(
-        spark, [(x,) for x in ids],
-        StructType([StructField("id", id_type, nullable=False)]),
-    )
-    append_tombstones(
-        ids_df, _tombstones_path(store_path, generation), batch_id
-    )
+    """Delete vectors from a :func:`save_ivf_pq_table` store by id: a
+    tombstone batch every loader filters on, applied physically by
+    :func:`ivf_pq_table_compact` — ``sources/store.py::
+    coded_table_delete`` bound to :data:`PQ_CODEC`. A tombstone kills
+    every row for its id written at or before ``batch_id``; a LATER
+    :func:`ivf_pq_table_append` of the id serves again."""
+    coded_table_delete(PQ_CODEC, spark, store_path, ids, batch_id)
 
 
 def ivf_pq_table_append(
@@ -1564,96 +1329,13 @@ def ivf_pq_table_append(
     method: str = "auto",
 ) -> None:
     """Append one batch of NEW vectors to a :func:`save_ivf_pq_table`
-    store: encode them with the STORED index (:func:`ivf_pq_encode` —
-    no retraining, so every already-persisted code stays valid) and
-    land them as a ``batch_id`` partition inside the live coded
-    generation. After any number of appends,
-    :func:`load_ivf_pq_table` serves the union — bit-identical to a
-    one-shot build-and-save over the full corpus (pinned in tests),
-    with ``__list`` partition pruning intact.
-
-    Contract (the :func:`ons_utils_spark.operators.text.
-    bm25_index_append` twin): every vector in a batch must be NEW to
-    the store — appended rows are plain additional serving rows, so
-    re-ingesting an id serves duplicate candidates. A streaming replay
-    (same non-negative ``batch_id``) statically overwrites exactly its
-    own partition, making checkpointed at-least-once retries
-    exactly-once; sentinel appends (``batch_id=None``, landing in
-    ``batch_id=-1``) are NOT retry-safe. A crash mid-append leaves at
-    worst a partial ``batch_id`` partition (the base generation and
-    the index are untouched) — re-running the append with its explicit
-    ``batch_id`` repairs it.
-
-    The batch is validated in ONE aggregate pass before anything is
-    written: NULL vectors/elements and dimension mismatches against
-    the stored geometry raise — a durable store must never absorb rows
-    the scorer would turn into garbage distances or worker-side
-    errors. An empty SENTINEL batch raises too (a caller mistake); an
-    empty batch WITH an id instead truncates its own partition — the
-    replay-truncate rule, so a replay whose rows now filter out still
-    erases the first attempt's rows and a streaming maintainer never
-    crash-loops on an empty micro-batch.
-    """
-    spark = df.sparkSession
-    index, meta = _load_index_with_meta(spark, f"{store_path}/index")
-    generation = _table_generation(meta, index)
-    if generation == index.fingerprint:
-        raise ValueError(
-            f"store at {store_path!r} uses the pre-generation layout "
-            "(coded directory keyed by fingerprint alone, no batch_id "
-            "partitioning) — appending would corrupt partition "
-            "discovery; re-save it once with save_ivf_pq_table"
-        )
-    if batch_id is not None and int(batch_id) < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}) — negative ids "
-            "collide with the base-save sentinel partition batch_id=-1"
-        )
-    bad_vec = (
-        F.col(vec_col).isNull()
-        | (F.size(vec_col) != index.dim)
-        | F.exists(vec_col, lambda x: x.isNull())
-    )
-    chk = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(bad_vec.cast("int")).alias("bad"),
-    ).collect()[0]
-    if chk["n"] == 0 and batch_id is None:
-        # An empty SENTINEL append is a caller mistake (nothing to
-        # encode, nothing it could repair). An empty batch WITH an id
-        # falls through: the partitioned_delta_append replay-truncate
-        # rule — a checkpointed replay whose rows now come out empty
-        # must still overwrite (truncate) its own partition, or stale
-        # rows from the first attempt survive; and a streaming
-        # maintainer must not crash-loop on an empty micro-batch.
-        raise ValueError("append batch is empty — nothing to encode")
-    if chk["bad"]:
-        raise ValueError(
-            f"append batch has {chk['bad']} row(s) whose {vec_col!r} is "
-            f"NULL, has a NULL element, or is not {index.dim}-dim — the "
-            "stored index cannot encode them; fix the batch upstream"
-        )
-    coded = ivf_pq_encode(df, index, id_col, vec_col, method=method)
-    target = f"{store_path}/coded_{generation}"
-    if batch_id is None:
-        (
-            coded.withColumn("batch_id", F.lit(-1))
-            .write.mode("append")
-            .partitionBy("batch_id", "__list")
-            .parquet(target)
-        )
-        return
-    (
-        # partitionOverwriteMode pinned STATIC at the writer: under a
-        # session's dynamic mode, a replay would only overwrite the
-        # __list partitions present in THIS run's rows — an empty
-        # replay would delete nothing and a different __list spread
-        # would leave stale partitions behind, breaking the
-        # replay-truncate guarantee the docstring makes.
-        coded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__list")
-        .parquet(f"{target}/batch_id={int(batch_id)}")
+    store, encoded with the STORED index (:func:`ivf_pq_encode`) as a
+    ``batch_id`` partition — ``sources/store.py::coded_table_append``
+    bound to :data:`PQ_CODEC`. After any number of appends
+    :func:`load_ivf_pq_table` serves the union, bit-identical to a
+    one-shot build-and-save over the full corpus (pinned in tests)."""
+    coded_table_append(
+        PQ_CODEC, df, store_path, id_col, vec_col, batch_id, method
     )
 
 
@@ -1816,16 +1498,7 @@ def ivf_pq_batch_topk(
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    built_residual = _coded_residual_flag(coded)
-    if built_residual is not None and built_residual != index.by_residual:
-        # Same guard as ivf_pq_topk/save_ivf_pq_table — residual codes
-        # scored with raw LUTs (or vice versa) are plausible-looking
-        # garbage distances, never an error downstream.
-        raise ValueError(
-            f"coded table was built with by_residual={built_residual} "
-            f"but the index says by_residual={index.by_residual} — "
-            "codes from one geometry scored in the other are meaningless"
-        )
+    _check_residual_flag(coded, index.by_residual)
     rows = queries.select(query_id_col, vec_col).collect()
     _check_query_ids([r[0] for r in rows], query_id_col)
     qids = [r[0] for r in rows]
@@ -2133,56 +1806,23 @@ def ivf_pq_batch_topk_refined(
 
 
 def ivf_pq_table_compact(spark, store_path: str) -> None:
-    """Compact an incrementally-grown IVF×PQ serving table — the ANN
-    twin of ``text.bm25_index_compact``: every :func:`ivf_pq_table_append`
-    leaves one ``batch_id`` partition inside the live coded generation,
-    and on a long-lived store partition DISCOVERY (batches × lists
-    directories), not the read itself, comes to dominate load time.
-    Compaction collapses the generation to the sentinel
-    ``batch_id=-1/__list=<j>/`` layout — exactly what
-    :func:`load_ivf_pq_table` serves, so values are unchanged, probe
-    pruning keeps its directory structure, and the rewrite promotes
-    via ``compact_store``'s crash-repairing rename-aside swap. The
-    index artifact is untouched (codes don't change), so the
-    generation pairing stays committed throughout.
+    """Compact an incrementally-grown IVF×PQ serving table to the
+    sentinel ``batch_id=-1/__list=<j>/`` layout, applying pending
+    deletes — ``sources/store.py::coded_table_compact`` bound to
+    :data:`PQ_CODEC`. Compact only while the streaming maintainer is
+    stopped."""
+    coded_table_compact(PQ_CODEC, spark, store_path)
 
-    **Writer-stopped caveat** (same as the BM25 twin): a checkpointed
-    replay of a compacted ``batch_id`` can no longer overwrite its own
-    partition — it would re-APPEND those vectors as duplicate serving
-    rows. Compact only while the streaming maintainer is stopped and
-    its checkpoint has advanced past every batch being compacted.
 
-    With pending :func:`ivf_pq_table_delete` tombstones, compaction
-    routes through :func:`save_ivf_pq_table` instead of the in-place
-    partition rewrite: the live (tombstone-filtered) rows land in a
-    FRESH nonce generation, the index write is the commit point, and
-    the post-commit sweep retires the old generation AND its tombstone
-    substore together. That pairing is what makes applying deletes
-    crash-safe — an in-place rewrite that then dropped the tombstones
-    would have a window where compacted rows (all rewritten to the
-    sentinel ``batch_id=-1``) are re-killed by the stale watermarks,
-    silently erasing every delete-then-reinsert row. A crash anywhere
-    here leaves the OLD generation + tombstones serving the identical
-    live set.
-    """
-    from ons_utils_spark.sources.store import compact_store, dir_exists
-
-    index, meta = _load_index_with_meta(spark, f"{store_path}/index")
-    generation = _table_generation(meta, index)
-    if generation == index.fingerprint:
-        raise ValueError(
-            f"store at {store_path!r} uses the pre-generation layout "
-            "(no batch_id partitioning) — there is nothing to compact; "
-            "re-save it once with save_ivf_pq_table to migrate"
-        )
-    coded, _ = load_ivf_pq_table(spark, store_path)
-    if dir_exists(_tombstones_path(store_path, generation)):
-        save_ivf_pq_table(coded, index, store_path)
-        return
-    compact_store(
-        coded, f"{store_path}/coded_{generation}",
-        partition_cols=("batch_id", "__list"),
-    )
+#: The IVF×PQ codec of the coded serving table (``sources/store.py``).
+PQ_CODEC = CodedTableCodec(
+    family="pq",
+    label="IVF×PQ",
+    save_index=save_ivf_pq_index,
+    load_index_with_meta=_load_index_with_meta,
+    encode=ivf_pq_encode,
+    batch_topk=ivf_pq_batch_topk,
+)
 
 
 def opq_train(

@@ -139,21 +139,17 @@ def ann_store_family(spark, store_path: str) -> str:
     )
 
 
-def _ann_store_generation(spark, store_path: str) -> str:
-    """The live coded generation of either family's store."""
-    if ann_store_family(spark, store_path) == "pq":
-        from ons_utils_spark.operators.pq import (
-            _load_index_with_meta, _table_generation,
-        )
+def ann_store_codec(spark, store_path: str):
+    """The ``sources/store.py::CodedTableCodec`` of a persisted ANN
+    serving store — :data:`pq.PQ_CODEC` or :data:`similarity.SQ_CODEC`,
+    as :func:`ann_store_family` reads it from the index meta footer (no
+    Spark job). Every maintainer and loader that serves either family
+    passes this value to the ``coded_table_*`` lifecycle."""
+    from ons_utils_spark.operators.pq import PQ_CODEC
+    from ons_utils_spark.operators.similarity import SQ_CODEC
 
-        index, meta = _load_index_with_meta(spark, f"{store_path}/index")
-        return _table_generation(meta, index)
-    from ons_utils_spark.operators.similarity import (
-        _load_sq_index_with_meta, _sq_table_generation,
-    )
-
-    _, meta = _load_sq_index_with_meta(spark, f"{store_path}/index")
-    return _sq_table_generation(meta, store_path)
+    codecs = {c.family: c for c in (PQ_CODEC, SQ_CODEC)}
+    return codecs[ann_store_family(spark, store_path)]
 
 
 def check_hybrid_store_sync(
@@ -169,10 +165,9 @@ def check_hybrid_store_sync(
     nothing else would ever say so.
 
     The BM25 mark is its stats partitions (an append and a delete each
-    write one). The ANN mark is its live generation's coded partitions
-    AND its tombstone partitions — an ANN delete writes only
-    tombstones, so without them every delete of both stores under one
-    ``batch_id`` would read as skew.
+    write one). The ANN mark is ``sources/store.py::
+    coded_table_max_batch_id`` — its live generation's coded AND
+    tombstone partitions, since an ANN delete writes only tombstones.
 
     Returns ``(bm25_max, ann_max)`` (``None`` for a store with no
     batch partitions yet). Cost: partition listings and the index meta
@@ -180,24 +175,21 @@ def check_hybrid_store_sync(
     serving proceeds; the warning tells the operator to restart (or
     repair) the maintainer, whose replay of the missing batch heals the
     lag. The ANN store may be either codec family
-    (:func:`ann_store_family` picks the loader).
+    (:func:`ann_store_codec`), and the warning names it.
     """
     import warnings
 
-    from ons_utils_spark.operators.pq import _tombstones_path
-    from ons_utils_spark.sources.store import dir_exists, max_batch_id
+    from ons_utils_spark.sources.store import (
+        coded_table_max_batch_id, max_batch_id,
+    )
 
+    codec = ann_store_codec(spark, ivf_pq_store_path)
     bm25_max = max_batch_id(f"{bm25_store_path}/stats")
-    generation = _ann_store_generation(spark, ivf_pq_store_path)
-    tombs = _tombstones_path(ivf_pq_store_path, generation)
-    marks = [max_batch_id(f"{ivf_pq_store_path}/coded_{generation}")]
-    if dir_exists(tombs):
-        marks.append(max_batch_id(tombs))
-    ann_max = max((m for m in marks if m is not None), default=None)
+    ann_max = coded_table_max_batch_id(codec, spark, ivf_pq_store_path)
     if bm25_max != ann_max:
         warnings.warn(
             f"hybrid store skew: BM25 index at {bm25_store_path!r} has "
-            f"max batch_id {bm25_max} but the IVF×PQ table at "
+            f"max batch_id {bm25_max} but the {codec.label} table at "
             f"{ivf_pq_store_path!r} has {ann_max} — legal for one "
             "trigger interval while the maintainer runs, but if it is "
             "stopped this lag is permanent; restarting it replays the "
@@ -211,23 +203,18 @@ def load_hybrid_stores(spark, bm25_store_path: str, ivf_pq_store_path: str):
     """Load BOTH hybrid serving stores for :func:`hybrid_batch_topk` →
     ``(postings, stats, coded, index)`` — the incremental BM25 fold
     (witness-validated) plus the ANN serving table of EITHER codec
-    family (:func:`ann_store_family` picks the loader; the returned
-    index's type then routes :func:`hybrid_batch_topk`'s ANN half) —
-    after running :func:`check_hybrid_store_sync`, so a
-    permanently-skewed pair warns at the moment someone starts serving
-    from it."""
+    family (:func:`ann_store_codec`; the returned index carries its
+    codec, which routes :func:`hybrid_batch_topk`'s ANN half) — after
+    running :func:`check_hybrid_store_sync`, so a permanently-skewed
+    pair warns at the moment someone starts serving from it."""
     from ons_utils_spark.operators.text import load_bm25_index_incremental
+    from ons_utils_spark.sources.store import coded_table_load
 
     check_hybrid_store_sync(spark, bm25_store_path, ivf_pq_store_path)
     postings, stats = load_bm25_index_incremental(spark, bm25_store_path)
-    if ann_store_family(spark, ivf_pq_store_path) == "pq":
-        from ons_utils_spark.operators.pq import load_ivf_pq_table
-
-        coded, index = load_ivf_pq_table(spark, ivf_pq_store_path)
-    else:
-        from ons_utils_spark.operators.similarity import load_sq_table
-
-        coded, index = load_sq_table(spark, ivf_pq_store_path)
+    coded, index = coded_table_load(
+        ann_store_codec(spark, ivf_pq_store_path), spark, ivf_pq_store_path
+    )
     return postings, stats, coded, index
 
 
@@ -255,10 +242,10 @@ def hybrid_batch_topk(
     (``terms_col``) AND an embedding (``vec_col``); the BM25 inverted
     index answers the lexical half (`bm25_batch_topk_indexed` — pruned
     postings read, no corpus scan) and the ANN serving table the ANN
-    half. ``index`` picks the codec: an :class:`pq.IvfPqIndex` routes
-    to `ivf_pq_batch_topk` (union-of-probes pruned scan, one Arrow
-    pass), a :class:`similarity.SqIndex` to `ivf_sq_batch_topk` (same
-    shape, grid decode instead of LUTs) — RRF is rank-space, so the
+    half. ``index.codec.batch_topk`` scores it: `ivf_pq_batch_topk`
+    for an :class:`pq.IvfPqIndex` (union-of-probes pruned scan, one
+    Arrow pass), `ivf_sq_batch_topk` for a :class:`similarity.SqIndex`
+    (same shape, grid decode instead of LUTs) — RRF is rank-space, so the
     fusion is codec-agnostic by construction and the serving matrix's
     two families are interchangeable here. Each retriever returns its
     ``retriever_topk`` per query; fusion is k-row work (module
@@ -268,10 +255,6 @@ def hybrid_batch_topk(
     ``(w_lexical, w_ann)`` for weighted RRF (see :func:`rrf_fuse`);
     ``None`` = unweighted.
     """
-    from ons_utils_spark.operators.pq import ivf_pq_batch_topk
-    from ons_utils_spark.operators.similarity import (
-        SqIndex, ivf_sq_batch_topk,
-    )
     from ons_utils_spark.operators.text import bm25_batch_topk_indexed
 
     lex = bm25_batch_topk_indexed(
@@ -284,11 +267,7 @@ def hybrid_batch_topk(
         # whatever the input name; realign so rrf_fuse's join keys and
         # the ANN half (which echoes the caller's name) agree.
         lex = lex.withColumnRenamed("query_id", query_id_col)
-    ann_scorer = (
-        ivf_sq_batch_topk if isinstance(index, SqIndex) else
-        ivf_pq_batch_topk
-    )
-    ann = ann_scorer(
+    ann = index.codec.batch_topk(
         coded, index, queries.select(query_id_col, vec_col),
         query_id_col=query_id_col, vec_col=vec_col,
         n_probe=n_probe, topk=retriever_topk,

@@ -33,6 +33,19 @@ from ons_utils_spark.functions.arrays import (
     cosine_similarity,
 )
 from ons_utils_spark.functions.localrel import local_rows_df
+from ons_utils_spark.sources.store import (
+    INDEX_FORMAT_VERSION,
+    CodedTableCodec,
+    _check_residual_flag,
+    _tag_residual,
+    coded_table_append,
+    coded_table_compact,
+    coded_table_delete,
+    coded_table_load,
+    coded_table_save,
+    read_index_artifact,
+    write_index_artifact,
+)
 
 
 def cosine_topk(
@@ -549,9 +562,7 @@ def ivf_sq_build(
     Returns ``(coded, coarse_centroids, vmin, vmax)`` with ``coded`` =
     ``(id, codes array<int>, __list)``.
     """
-    from ons_utils_spark.operators.pq import (
-        _residual_transform, _tag_residual,
-    )
+    from ons_utils_spark.operators.pq import _residual_transform
     from ons_utils_spark.operators.semantic import kmeans_lloyd
 
     assigned, coarse = kmeans_lloyd(
@@ -602,17 +613,9 @@ def ivf_sq_topk(
     (bounded by the probe count, never ``n_lists``). Must match the
     build flag — the column-metadata geometry tag raises on mismatch.
     """
-    from ons_utils_spark.operators.pq import _coded_residual_flag
     from ons_utils_spark.operators.semantic import _py_dot
 
-    built = _coded_residual_flag(coded)
-    if built is not None and built != by_residual:
-        raise ValueError(
-            f"coded table was built with by_residual={built} but this "
-            f"query scores with by_residual={by_residual} — codes from "
-            "one geometry scored in the other are meaningless; pass "
-            "the same flag to both"
-        )
+    _check_residual_flag(coded, by_residual)
     q = [float(v) for v in query_vec]
     if len(q) != len(vmin):
         raise ValueError(f"query dim {len(q)} != trained dim {len(vmin)}")
@@ -701,6 +704,11 @@ class SqIndex(NamedTuple):
     def dim(self) -> int:
         return len(self.vmin)
 
+    @property
+    def codec(self) -> CodedTableCodec:
+        """The family's coded-table codec, :data:`SQ_CODEC`."""
+        return SQ_CODEC
+
 
 def _sq_fingerprint(coarse, vmin, vmax, round_dp: int,
                     bits: int = 8, by_residual: bool = False,
@@ -787,7 +795,12 @@ def make_sq_index(
     )
 
 
-_SQ_INDEX_FORMAT_VERSION = 1
+_SQ_INDEX_META_SCHEMA = (
+    "format_version int, round_dp int, n_lists int, dim int, "
+    "fingerprint string, coded_generation string, bits int, "
+    "by_residual boolean"
+)
+_SQ_INDEX_VECTORS_SCHEMA = "component string, idx int, vec array<double>"
 
 
 def save_sq_index(
@@ -795,15 +808,11 @@ def save_sq_index(
     coded_generation: "str | None" = None,
 ) -> None:
     """Persist a :class:`SqIndex` as two small parquet tables under
-    ``path`` — ``vectors/`` (coarse centroids + the two grid rows) and
-    ``meta/`` (geometry + fingerprint), meta written LAST so a crash
-    mid-save leaves a store :func:`load_sq_index` rejects rather than
-    a silently truncated index. Same non-ACID overwrite stance as the
-    PQ index store.
-
-    ``coded_generation`` is :func:`save_sq_table`'s commit record —
-    the name of the coded directory THIS index write pairs with
-    (fingerprint + per-save nonce). NULL for standalone index stores.
+    ``path`` (``sources/store.py::write_index_artifact``, meta written
+    last) — ``vectors/`` (coarse centroids + the two grid rows) and
+    ``meta/`` (geometry + fingerprint). ``coded_generation`` is
+    :func:`save_sq_table`'s commit record; NULL for standalone index
+    stores.
     """
     rows = [
         ("coarse", j, c) for j, c in enumerate(index.coarse_centroids)
@@ -814,22 +823,15 @@ def save_sq_index(
         [("rotation", j, r) for j, r in enumerate(index.rotation)]
         if index.rotation is not None else []
     )
-    vectors = local_rows_df(
-        spark, rows, "component string, idx int, vec array<double>"
-    )
-    meta = local_rows_df(
-        spark,
-        [(
-            _SQ_INDEX_FORMAT_VERSION, index.round_dp, index.n_lists,
+    write_index_artifact(
+        spark, path, rows, _SQ_INDEX_VECTORS_SCHEMA,
+        (
+            INDEX_FORMAT_VERSION, index.round_dp, index.n_lists,
             index.dim, index.fingerprint, coded_generation, index.bits,
             index.by_residual,
-        )],
-        "format_version int, round_dp int, n_lists int, dim int, "
-        "fingerprint string, coded_generation string, bits int, "
-        "by_residual boolean",
+        ),
+        _SQ_INDEX_META_SCHEMA,
     )
-    vectors.coalesce(1).write.mode("overwrite").parquet(f"{path}/vectors")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
 def load_sq_index(spark, path: str) -> SqIndex:
@@ -841,40 +843,15 @@ def load_sq_index(spark, path: str) -> SqIndex:
     return _load_sq_index_with_meta(spark, path)[0]
 
 
-_SQ_INDEX_META_SCHEMA = (
-    "format_version int, round_dp int, n_lists int, dim int, "
-    "fingerprint string, coded_generation string, bits int, "
-    "by_residual boolean"
-)
-_SQ_INDEX_VECTORS_SCHEMA = "component string, idx int, vec array<double>"
-
-
 def _load_sq_index_with_meta(spark, path: str):
-    """:func:`load_sq_index` plus the raw meta row — the table loaders
-    need ``coded_generation`` without a second read of the meta
-    parquet (the PQ family's ``_load_index_with_meta`` twin). Meta and
-    vectors are read on the driver (``sources/store.py::
-    read_two_stores`` — no Spark job); the named schemas read pre-flag
-    stores' missing ``bits``/``by_residual``/``coded_generation`` as
-    NULL, which the geometry fallbacks below handle."""
-    from ons_utils_spark.sources.store import read_two_stores
-
-    meta_rows, rows = read_two_stores(
-        f"{path}/meta", _SQ_INDEX_META_SCHEMA,
-        f"{path}/vectors", _SQ_INDEX_VECTORS_SCHEMA,
+    """:func:`load_sq_index` plus the raw meta row — one driver read
+    (``sources/store.py::read_index_artifact``), no Spark job. The
+    named schema reads pre-flag stores' missing ``bits`` /
+    ``by_residual`` / ``coded_generation`` as NULL, which the geometry
+    fallbacks below handle."""
+    meta, rows = read_index_artifact(
+        path, _SQ_INDEX_META_SCHEMA, _SQ_INDEX_VECTORS_SCHEMA, "IVF×SQ"
     )
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"SQ index meta at {path!r} has {len(meta_rows)} rows — "
-            "expected exactly 1; the store is corrupt or not an index"
-        )
-    meta = meta_rows[0]
-    if meta["format_version"] != _SQ_INDEX_FORMAT_VERSION:
-        raise ValueError(
-            f"SQ index at {path!r} has format_version "
-            f"{meta['format_version']} — this build reads "
-            f"{_SQ_INDEX_FORMAT_VERSION}"
-        )
     coarse_rows = sorted(
         (r["idx"], [float(x) for x in r["vec"]])
         for r in rows if r["component"] == "coarse"
@@ -960,35 +937,14 @@ def ivf_sq_encode(
     Returns the same ``(id, codes, __list)`` shape as
     :func:`ivf_sq_build`.
     """
-    from ons_utils_spark.operators.semantic import _assign, _resolve_method
+    from ons_utils_spark.operators.pq import _assign_lists
 
     if not index.coarse_centroids:
         raise ValueError(
             "index has no coarse centroids (plain-SQ index) — encode "
             "plain SQ codes with sq_encode(vmin, vmax) instead"
         )
-    from ons_utils_spark.operators.pq import (
-        _residual_transform, _tag_residual,
-    )
-
-    if index.rotation is not None:
-        # OPQ store: grid and centroids live in the rotated space; raw
-        # batches rotate on the way in (the pq.ivf_pq_encode rule), so
-        # append / streaming / CDC work on raw vectors here too.
-        from ons_utils_spark.operators.pq import rotate_vectors
-
-        df = rotate_vectors(df, vec_col, index.rotation)
-    coarse_method = _resolve_method(method, index.n_lists)
-    vecs = df.withColumn(
-        "__vv", array_dot(F.col(vec_col), F.col(vec_col))
-    )
-    src = _assign(
-        vecs, vec_col, index.coarse_centroids, coarse_method
-    ).withColumn("__list", F.col("__cluster"))
-    enc_col = vec_col
-    if index.by_residual:
-        src = _residual_transform(src, vec_col, index.coarse_centroids)
-        enc_col = "__rvec"
+    src, enc_col = _assign_lists(df, index, vec_col, method)
     return _tag_residual(
         sq_encode(
             src, index.vmin, index.vmax, id_col=id_col, vec_col=enc_col,
@@ -1020,141 +976,16 @@ def ivf_sq_query(
     )
 
 
-def _require_ivf_sq_index(index: SqIndex, what: str) -> None:
-    if not index.coarse_centroids:
-        raise ValueError(
-            f"index has no coarse centroids (plain-SQ index) — {what} "
-            "needs probe selection over a __list-partitioned table; "
-            "use sq_adc_topk for plain-SQ serving"
-        )
-
-
 def save_sq_table(coded: SparkDF, index: SqIndex, path: str) -> None:
-    """Persist the WHOLE IVF×SQ serving artifact in one call — the SQ
-    twin of :func:`pq.save_ivf_pq_table`, same commit protocol: the
-    coded table lands partitioned ``batch_id=-1/__list=<j>/`` under a
-    fingerprint+nonce-keyed ``<path>/coded_<generation>`` directory
-    (probe filters prune whole partition directories; the nonce means
-    even a same-index re-save or a re-encoded corpus never overwrites
-    the live directory in place), and the index write — which records
-    that generation name — is the commit point. A crash in between
-    leaves the OLD index paired with the OLD coded generation, both
-    untouched. Superseded ``coded_*`` directories are deleted
-    best-effort after the commit; stragglers are never read.
-    """
-    if "__list" not in coded.columns:
-        raise ValueError(
-            "coded table has no __list column — save_sq_table persists "
-            "an IVF×SQ build (ivf_sq_build output); for plain SQ codes "
-            "save the index alone and write the codes yourself"
-        )
-    _require_ivf_sq_index(index, "save_sq_table")
-    from ons_utils_spark.operators.pq import _coded_residual_flag
-
-    built = _coded_residual_flag(coded)
-    if built is not None and built != index.by_residual:
-        raise ValueError(
-            f"coded table was built with by_residual={built} but the "
-            f"index says by_residual={index.by_residual} — persisting "
-            "a mismatched pair would serve garbage distances"
-        )
-    import uuid
-
-    generation = f"{index.fingerprint}_{uuid.uuid4().hex[:8]}"
-    (
-        # Static overwrite: the nonce makes the target fresh, but a
-        # session's dynamic partitionOverwriteMode must never change
-        # what a re-save of an existing path means (the PQ rule).
-        coded.withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("batch_id", "__list")
-        .parquet(f"{path}/coded_{generation}")
-    )
-    save_sq_index(
-        coded.sparkSession, index, f"{path}/index",
-        coded_generation=generation,
-    )
-    # Commit done — drop superseded coded_* generations (best-effort: a
-    # failure here leaves unread garbage, never a wrong answer).
-    from pyarrow import fs as pafs
-
-    from ons_utils_spark.sources.store import _resolve_fs
-
-    try:
-        filesystem, root = _resolve_fs(path)
-        keep = f"coded_{generation}"
-        for info in filesystem.get_file_info(
-            pafs.FileSelector(root, recursive=False)
-        ):
-            if (
-                info.type == pafs.FileType.Directory
-                and info.base_name.startswith("coded_")
-                and info.base_name != keep
-            ):
-                filesystem.delete_dir(info.path)
-    except Exception:  # noqa: BLE001 — cleanup only, commit already done
-        pass
-
-
-def _sq_table_generation(meta, store_path: str) -> str:
-    """The coded generation an SQ index's (already-loaded) meta row
-    committed with; raises for index-only stores (unlike the PQ
-    family there is no pre-nonce SQ table layout to fall back to)."""
-    gen = (
-        meta["coded_generation"] if "coded_generation" in meta else None
-    )
-    if gen is None:
-        raise ValueError(
-            f"SQ index at {store_path!r} carries no coded-generation "
-            "commit record — it is an index-only store "
-            "(save_sq_index), not a serving table; create one with "
-            "save_sq_table"
-        )
-    return gen
+    """:func:`pq.save_ivf_pq_table` for IVF×SQ —
+    ``sources/store.py::coded_table_save`` bound to :data:`SQ_CODEC`."""
+    coded_table_save(SQ_CODEC, coded, index, path)
 
 
 def load_sq_table(spark, path: str) -> "tuple[SparkDF, SqIndex]":
-    """Load a serving artifact written by :func:`save_sq_table` (plus
-    any :func:`ivf_sq_table_append` batches) → ``(coded, index)`` ready
-    for :func:`ivf_sq_query` / :func:`ivf_sq_batch_topk`. The index is
-    fingerprint-validated and PICKS the coded generation it committed
-    with — a torn save can never serve a mismatched or partially
-    written pair. The ``batch_id`` growth partitioning is a storage
-    detail, projected away; ``__list`` probe filters still land in
-    PartitionFilters. Pending :func:`ivf_sq_table_delete` tombstones
-    are applied as the same broadcast watermark anti-filter the PQ
-    loader uses — nothing on the tombstone-free path, no extra shuffle
-    with pending deletes. Like the PQ loader, the scan takes its schema
-    from one parquet footer, so loading runs no Spark job."""
-    from ons_utils_spark.operators.pq import _tombstones_path
-    from ons_utils_spark.sources.store import (
-        apply_tombstones, footer_schema, load_tombstone_watermarks,
-    )
-
-    index, meta = _load_sq_index_with_meta(spark, f"{path}/index")
-    generation = _sq_table_generation(meta, path)
-    coded_path = f"{path}/coded_{generation}"
-    try:
-        coded = spark.read.schema(footer_schema(coded_path)).parquet(
-            coded_path
-        )
-    except Exception as exc:
-        raise ValueError(
-            f"SQ index at {path!r} points to coded generation "
-            f"{generation} but {coded_path!r} is unreadable — either "
-            "the store was torn by a crash or manual edit (re-run "
-            "save_sq_table), or the base save was EMPTY and nothing "
-            "has been appended yet (an empty parquet write carries no "
-            "schema; the first ivf_sq_table_append must land before "
-            "the first load)"
-        ) from exc
-    if "batch_id" in coded.columns:
-        wm = load_tombstone_watermarks(
-            spark, _tombstones_path(path, generation)
-        )
-        coded = apply_tombstones(coded, wm).select("id", "codes", "__list")
-    return coded, index
+    """:func:`pq.load_ivf_pq_table` for IVF×SQ —
+    ``sources/store.py::coded_table_load`` bound to :data:`SQ_CODEC`."""
+    return coded_table_load(SQ_CODEC, spark, path)
 
 
 def ivf_sq_table_delete(
@@ -1163,20 +994,9 @@ def ivf_sq_table_delete(
     ids: "Sequence",
     batch_id: int,
 ) -> None:
-    """Delete vectors from a :func:`save_sq_table` store by id — the SQ
-    twin of :func:`pq.ivf_pq_table_delete`, identical contract and
-    shared machinery (``pq._coded_table_delete``): a tombstone batch
-    under the live coded generation kills every row for that id written
-    at or before ``batch_id``; a LATER :func:`ivf_sq_table_append` of
-    the same id serves again (delete-then-reinsert is the update
-    idiom); :func:`ivf_sq_table_compact` applies deletes physically via
-    a fresh-generation re-save. O(ids), never a rewrite; an append and
-    a delete must not share a ``batch_id``."""
-    from ons_utils_spark.operators.pq import _coded_table_delete
-
-    _, meta = _load_sq_index_with_meta(spark, f"{store_path}/index")
-    generation = _sq_table_generation(meta, store_path)
-    _coded_table_delete(spark, store_path, generation, ids, batch_id)
+    """:func:`pq.ivf_pq_table_delete` for IVF×SQ —
+    ``sources/store.py::coded_table_delete`` bound to :data:`SQ_CODEC`."""
+    coded_table_delete(SQ_CODEC, spark, store_path, ids, batch_id)
 
 
 def ivf_sq_table_append(
@@ -1187,107 +1007,17 @@ def ivf_sq_table_append(
     batch_id: "int | None" = None,
     method: str = "auto",
 ) -> None:
-    """Append one batch of NEW vectors to a :func:`save_sq_table`
-    store — the SQ twin of :func:`pq.ivf_pq_table_append`, identical
-    contract: the batch is encoded with the STORED index
-    (:func:`ivf_sq_encode` — no retraining, every persisted code stays
-    valid; out-of-grid values clamp to the grid edges, FAISS SQ's
-    out-of-sample rule) and lands as a ``batch_id`` partition inside
-    the live coded generation, so :func:`load_sq_table` serves the
-    union bit-identically to a one-shot build-and-save (pinned in
-    tests) with ``__list`` pruning intact.
-
-    Every vector must be NEW to the store (appended rows are plain
-    additional serving rows). A streaming replay (same non-negative
-    ``batch_id``) statically overwrites exactly its own partition —
-    exactly-once under checkpointed retries; sentinel appends
-    (``batch_id=None`` → ``batch_id=-1``) are NOT retry-safe. The
-    batch is validated in ONE aggregate pass before anything is
-    written: NULL vectors/elements and dimension mismatches raise; an
-    empty SENTINEL batch raises (caller mistake); an empty batch WITH
-    an id truncates its own partition (the replay-truncate rule — a
-    streaming maintainer never crash-loops on an empty micro-batch).
-    """
-    spark = df.sparkSession
-    index, meta = _load_sq_index_with_meta(spark, f"{store_path}/index")
-    generation = _sq_table_generation(meta, store_path)
-    _require_ivf_sq_index(index, "ivf_sq_table_append")
-    if batch_id is not None and int(batch_id) < 0:
-        raise ValueError(
-            f"batch_id must be >= 0 (got {batch_id}) — negative ids "
-            "collide with the base-save sentinel partition batch_id=-1"
-        )
-    bad_vec = (
-        F.col(vec_col).isNull()
-        | (F.size(vec_col) != index.dim)
-        | F.exists(vec_col, lambda x: x.isNull())
-    )
-    chk = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(bad_vec.cast("int")).alias("bad"),
-    ).collect()[0]
-    if chk["n"] == 0 and batch_id is None:
-        raise ValueError("append batch is empty — nothing to encode")
-    if chk["bad"]:
-        raise ValueError(
-            f"append batch has {chk['bad']} row(s) whose {vec_col!r} is "
-            f"NULL, has a NULL element, or is not {index.dim}-dim — the "
-            "stored index cannot encode them; fix the batch upstream"
-        )
-    coded = ivf_sq_encode(df, index, id_col, vec_col, method=method)
-    target = f"{store_path}/coded_{generation}"
-    if batch_id is None:
-        (
-            coded.withColumn("batch_id", F.lit(-1))
-            .write.mode("append")
-            .partitionBy("batch_id", "__list")
-            .parquet(target)
-        )
-        return
-    (
-        # partitionOverwriteMode pinned STATIC at the writer — the PQ
-        # twin's replay-truncate guarantee: a replay overwrites its
-        # WHOLE batch partition whatever __list spread this run has.
-        coded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("__list")
-        .parquet(f"{target}/batch_id={int(batch_id)}")
+    """:func:`pq.ivf_pq_table_append` for IVF×SQ —
+    ``sources/store.py::coded_table_append`` bound to :data:`SQ_CODEC`."""
+    coded_table_append(
+        SQ_CODEC, df, store_path, id_col, vec_col, batch_id, method
     )
 
 
 def ivf_sq_table_compact(spark, store_path: str) -> None:
-    """Compact an incrementally-grown IVF×SQ serving table — the SQ
-    twin of :func:`pq.ivf_pq_table_compact`: collapse the generation's
-    ``batch_id`` partitions to the sentinel ``batch_id=-1/__list=<j>/``
-    layout via ``compact_store``'s crash-repairing rename-aside swap.
-    Values unchanged, ``__list`` pruning keeps its directory structure,
-    the index artifact (and its generation pairing) untouched.
-
-    **Writer-stopped caveat** (as for the PQ/BM25 twins): a
-    checkpointed replay of a compacted ``batch_id`` would re-APPEND
-    those vectors — compact only while the streaming maintainer is
-    stopped and its checkpoint has advanced past every compacted batch.
-
-    With pending :func:`ivf_sq_table_delete` tombstones, compaction
-    routes through :func:`save_sq_table` instead (the PQ rule, see
-    :func:`pq.ivf_pq_table_compact`): the live rows land in a fresh
-    nonce generation, the index commit retires the old generation and
-    its tombstones TOGETHER — an in-place rewrite would re-kill
-    delete-then-reinsert rows through the stale watermarks.
-    """
-    from ons_utils_spark.operators.pq import _tombstones_path
-    from ons_utils_spark.sources.store import compact_store, dir_exists
-
-    index, meta = _load_sq_index_with_meta(spark, f"{store_path}/index")
-    generation = _sq_table_generation(meta, store_path)
-    coded, _ = load_sq_table(spark, store_path)
-    if dir_exists(_tombstones_path(store_path, generation)):
-        save_sq_table(coded, index, store_path)
-        return
-    compact_store(
-        coded, f"{store_path}/coded_{generation}",
-        partition_cols=("batch_id", "__list"),
-    )
+    """:func:`pq.ivf_pq_table_compact` for IVF×SQ —
+    ``sources/store.py::coded_table_compact`` bound to :data:`SQ_CODEC`."""
+    coded_table_compact(SQ_CODEC, spark, store_path)
 
 
 def ivf_sq_batch_topk(
@@ -1337,20 +1067,18 @@ def ivf_sq_batch_topk(
     from ons_utils_spark.operators.pq import (
         _check_query_ids,
         _codes_matrix,
-        _coded_residual_flag,
         _fold_dots,
         _fold_sq,
         _two_phase_batch_topk,
     )
 
-    _require_ivf_sq_index(index, "batch retrieval")
-    built = _coded_residual_flag(coded)
-    if built is not None and built != index.by_residual:
+    if not index.coarse_centroids:
         raise ValueError(
-            f"coded table was built with by_residual={built} but the "
-            f"index says by_residual={index.by_residual} — codes from "
-            "one geometry scored in the other are meaningless"
+            "index has no coarse centroids (plain-SQ index) — batch "
+            "retrieval needs probe selection over a __list-partitioned "
+            "table; use sq_adc_topk for plain-SQ serving"
         )
+    _check_residual_flag(coded, index.by_residual)
     rows = queries.select(query_id_col, vec_col).collect()
     _check_query_ids([r[0] for r in rows], query_id_col)
     qids = [r[0] for r in rows]
@@ -1453,6 +1181,17 @@ def ivf_sq_batch_topk(
         F.round(F.col("__adc_sum"), round_dp).alias("adc_dist"),
     )
     return _two_phase_batch_topk(scored, topk, query_id_col)
+
+
+#: The IVF×SQ codec of the coded serving table (``sources/store.py``).
+SQ_CODEC = CodedTableCodec(
+    family="sq",
+    label="IVF×SQ",
+    save_index=save_sq_index,
+    load_index_with_meta=_load_sq_index_with_meta,
+    encode=ivf_sq_encode,
+    batch_topk=ivf_sq_batch_topk,
+)
 
 
 #: Largest candidate shortlist mmr_rerank will greedy-select over. MMR

@@ -22,11 +22,34 @@ rows scale with the corpus, so they stay Spark scans; each gets an
 explicit schema from ONE parquet footer (:func:`footer_schema`), so no
 scan pays Spark's schema-inference job either.
 
+**Coded-table lifecycle.** The IVF×PQ and IVF×SQ serving tables share
+one store, written and read by the ``coded_table_*`` functions below;
+a family differs only in its :class:`CodedTableCodec` value
+(``pq.PQ_CODEC``, ``similarity.SQ_CODEC``), which carries the index
+artifact I/O, the stored-index encoder and the batch scorer. A save
+writes the coded rows under ``<path>/coded_<fingerprint>_<nonce>``
+(``batch_id=-1/__list=<j>/``) and THEN the index, whose meta row
+records that generation name: the index write is the commit point, so
+a crash (or a same-index re-save) never tears the live pair, and
+superseded ``coded_*`` directories are swept after the commit. Appends
+land as ``batch_id`` partitions inside the live generation (the
+replay-truncate rule of :func:`partitioned_delta_append`); deletes are
+tombstones in ``coded_<generation>__tombstones``, applied on load as a
+watermark anti-filter. Compaction without tombstones rewrites the
+generation in place (:func:`compact_store`); with tombstones it
+re-saves the live rows as a fresh generation, so the commit retires
+the old rows and their tombstones together. An index meta with no
+generation record is the pre-generation PQ layout only if
+``coded_<fingerprint>`` exists — which loads, but refuses every other
+verb — and otherwise an index saved alone, which is not a table.
+
 LLM-data-pipeline extension (no reference twin — the reference's I/O
 surface stops at CSV/Hive reads, SURVEY.md §2.1).
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame as SparkDF, functions as F
 
@@ -230,6 +253,7 @@ def partitioned_delta_append(
     delta: SparkDF,
     path: str,
     batch_id: "int | None" = None,
+    partition_cols: "tuple[str, ...]" = ("batch_id",),
 ) -> None:
     """Write one batch's mergeable deltas into an append-only store.
 
@@ -259,6 +283,13 @@ def partitioned_delta_append(
     with the batch-caller sentinel partition ``batch_id=-1``, and the
     unconditional overwrite would silently destroy every accumulated
     batch-mode delta).
+
+    ``partition_cols`` is the store's physical partitioning, led by
+    ``batch_id`` as in :func:`compact_store`; the coded serving tables
+    pass ``("batch_id", "__list")``. A replay's overwrite is pinned
+    STATIC at the writer: under a session's dynamic mode it would only
+    replace the inner partitions present in THIS run's rows, so an
+    empty replay would truncate nothing.
     """
     if "batch_id" in delta.columns:
         raise ValueError(
@@ -284,11 +315,16 @@ def partitioned_delta_append(
         (
             delta.withColumn("batch_id", F.lit(-1))
             .write.mode("append")
-            .partitionBy("batch_id")
+            .partitionBy(*partition_cols)
             .parquet(path)
         )
         return
-    delta.write.mode("overwrite").parquet(f"{path}/batch_id={int(batch_id)}")
+    (
+        delta.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy(*partition_cols[1:])
+        .parquet(f"{path}/batch_id={int(batch_id)}")
+    )
 
 
 def compact_store(
@@ -548,3 +584,390 @@ def apply_tombstones(
         )
         .drop("__tomb_id", "__dead_upto")
     )
+
+
+# ---------------------------------------------------------------------
+# Coded serving tables (IVF×PQ, IVF×SQ) — see the module docstring.
+# ---------------------------------------------------------------------
+
+#: ``format_version`` every index artifact's meta row carries.
+INDEX_FORMAT_VERSION = 1
+
+
+class CodedTableCodec(NamedTuple):
+    """One codec family of the coded serving table: a fixed value
+    defined next to its family (``pq.PQ_CODEC``, ``similarity.
+    SQ_CODEC``) and passed to the ``coded_table_*`` functions, which
+    never branch on the family. The family's index type exposes
+    ``coarse_centroids``, ``dim``, ``by_residual`` and ``fingerprint``;
+    everything else about it stays behind these four functions."""
+
+    #: Short name, as ``retrieval.ann_store_family`` reports it.
+    family: str
+    #: Name for messages, e.g. ``"IVF×PQ"``.
+    label: str
+    #: ``(spark, index, path, coded_generation=None)`` — write the
+    #: index artifact (through :func:`write_index_artifact`).
+    save_index: Callable
+    #: ``(spark, path) -> (index, meta row)`` — read and
+    #: fingerprint-validate it (through :func:`read_index_artifact`).
+    load_index_with_meta: Callable
+    #: ``(df, index, id_col, vec_col, method=) -> (id, codes, __list)``
+    #: — encode with the stored index, no training.
+    encode: Callable
+    #: ``(coded, index, queries, query_id_col=, vec_col=, n_probe=,
+    #: topk=) -> (query_id, id, adc_dist)``.
+    batch_topk: Callable
+
+
+def write_index_artifact(
+    spark, path: str, vectors, vectors_schema: str, meta, meta_schema: str
+) -> None:
+    """Write an index artifact as two small one-file parquet tables:
+    ``vectors/`` (the payload rows) and ``meta/`` (the one ``meta``
+    row). ``meta/`` is written LAST, so a crash mid-save leaves a store
+    :func:`read_index_artifact` rejects rather than a silently
+    truncated index. Overwrites any index at ``path`` (the non-ACID
+    stance of the rest of ``sources/``)."""
+    from ons_utils_spark.functions.localrel import local_rows_df
+
+    # coalesce(1): the payload is bounded by the index geometry — a
+    # FAISS IVF65536,PQ16x8 geometry is ~70k rows, still one small file.
+    local_rows_df(spark, vectors, vectors_schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/vectors")
+    local_rows_df(spark, [meta], meta_schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/meta")
+
+
+def read_index_artifact(
+    path: str, meta_schema: str, vectors_schema: str, label: str
+):
+    """Read an index artifact written by :func:`write_index_artifact`
+    on the driver → ``(meta row, vector rows)``, checking that the meta
+    is one row of :data:`INDEX_FORMAT_VERSION`. The named schemas read
+    a column older stores lack (e.g. ``coded_generation``) as NULL;
+    the payload's geometry and fingerprint are the codec's to check."""
+    meta_rows, rows = read_two_stores(
+        f"{path}/meta", meta_schema, f"{path}/vectors", vectors_schema
+    )
+    if len(meta_rows) != 1:
+        raise ValueError(
+            f"{label} index meta at {path!r} has {len(meta_rows)} rows — "
+            "expected exactly 1; the store is corrupt or not an index"
+        )
+    meta = meta_rows[0]
+    if meta["format_version"] != INDEX_FORMAT_VERSION:
+        raise ValueError(
+            f"{label} index at {path!r} has format_version "
+            f"{meta['format_version']} — this build reads "
+            f"{INDEX_FORMAT_VERSION}"
+        )
+    return meta, rows
+
+
+def _tag_residual(coded: SparkDF, by_residual: bool) -> SparkDF:
+    """Stamp the build geometry onto a coded table as ``codes`` column
+    metadata, which survives select/filter/cache and a parquet
+    round-trip (``pq.ivf_pq_build``'s tag comment)."""
+    return coded.withMetadata(
+        "codes", {"ons_ivfpq_residual": bool(by_residual)}
+    )
+
+
+def _check_residual_flag(coded: SparkDF, by_residual: bool) -> None:
+    """Refuse a coded table whose build-geometry flag disagrees with
+    ``by_residual``: residual codes scored or stored as raw ones (or
+    vice versa) give plausible-looking garbage distances, never an
+    error downstream. The flag is the ``codes`` column metadata stamped
+    by :func:`_tag_residual`, falling back to the legacy
+    ``_ons_ivfpq_residual`` Python attribute for frames produced by
+    older builds that are still alive in a session; an untagged table
+    passes."""
+    try:
+        md = coded.schema["codes"].metadata
+    except Exception:  # noqa: BLE001 — no codes column: not a coded table
+        md = None
+    if md and "ons_ivfpq_residual" in md:
+        built = bool(md["ons_ivfpq_residual"])
+    else:
+        built = getattr(coded, "_ons_ivfpq_residual", None)
+    if built is not None and built != bool(by_residual):
+        raise ValueError(
+            f"coded table was built with by_residual={built} but is "
+            f"used with by_residual={bool(by_residual)} — codes from one "
+            "geometry scored in the other are meaningless; pass the "
+            "same flag to both"
+        )
+
+
+def _tombstones_path(store_path: str, generation: str) -> str:
+    """The tombstone substore paired with one coded generation. The name
+    deliberately starts with ``coded_`` so :func:`coded_table_save`'s
+    post-commit sweep retires it together with the generation it
+    annotates — a re-save or a tombstone-applying compaction rebuilds
+    the live set from scratch, at which point stale deletes must not
+    outlive the rows they referred to."""
+    return f"{store_path}/coded_{generation}__tombstones"
+
+
+def coded_table_generation(
+    codec: CodedTableCodec, spark, store_path: str,
+    refuse_legacy: "str | None" = None,
+):
+    """``(index, generation)`` of a coded serving table: the
+    fingerprint-validated index and the ``coded_<generation>``
+    directory its last save committed — one driver read, no Spark job.
+
+    An index meta whose ``coded_generation`` is NULL is the
+    pre-generation layout (coded rows keyed by fingerprint alone, no
+    ``batch_id`` partitioning) only if ``coded_<fingerprint>`` exists;
+    the generation is then the fingerprint, unless ``refuse_legacy``
+    (why the calling verb cannot run on that layout) is given, which
+    raises. Without that directory the store is an index saved alone,
+    not a serving table, and every verb raises."""
+    index, meta = codec.load_index_with_meta(spark, f"{store_path}/index")
+    generation = meta["coded_generation"]
+    if generation is not None:
+        return index, generation
+    if not dir_exists(f"{store_path}/coded_{index.fingerprint}"):
+        raise ValueError(
+            f"{codec.label} index at {store_path!r} carries no "
+            "coded-generation commit record — it is an index-only store "
+            "(an index save alone), not a serving table; create one with "
+            f"the {codec.label} table save"
+        )
+    if refuse_legacy:
+        raise ValueError(
+            f"store at {store_path!r} uses the pre-generation layout "
+            "(coded directory keyed by fingerprint alone, no batch_id "
+            f"partitioning) — {refuse_legacy}; re-save it once with the "
+            f"{codec.label} table save"
+        )
+    return index, index.fingerprint
+
+
+def coded_table_save(
+    codec: CodedTableCodec, coded: SparkDF, index, path: str
+) -> None:
+    """Persist a whole coded serving table: the coded rows (a
+    ``__list``-carrying build or encode output) as a fresh generation
+    ``<path>/coded_<fingerprint>_<nonce>``, partitioned
+    ``batch_id=-1/__list=<j>/`` so a probe's ``__list IN (...)`` filter
+    prunes whole directories, then the index under ``<path>/index``
+    recording that generation — the commit point. A crash in between
+    leaves the OLD index paired with the OLD generation, both untouched;
+    the nonce means even a same-index re-save never overwrites the live
+    directory. Superseded ``coded_*`` directories (tombstones included)
+    are deleted best-effort after the commit; stragglers are never
+    read and go on the next save."""
+    import uuid
+
+    from pyarrow import fs as pafs
+
+    if "__list" not in coded.columns:
+        raise ValueError(
+            f"coded table has no __list column — the {codec.label} table "
+            "save persists an IVF build; for plain codes save the index "
+            "alone and write the codes yourself"
+        )
+    if not index.coarse_centroids:
+        raise ValueError(
+            "index has no coarse centroids (plain index) — it cannot "
+            "drive probe selection over a __list-partitioned table"
+        )
+    _check_residual_flag(coded, index.by_residual)
+    generation = f"{index.fingerprint}_{uuid.uuid4().hex[:8]}"
+    keep = f"coded_{generation}"
+    partitioned_delta_append(
+        coded, f"{path}/{keep}", partition_cols=("batch_id", "__list")
+    )
+    codec.save_index(
+        coded.sparkSession, index, f"{path}/index",
+        coded_generation=generation,
+    )
+    try:
+        filesystem, root = _resolve_fs(path)
+        for info in filesystem.get_file_info(
+            pafs.FileSelector(root, recursive=False)
+        ):
+            if (
+                info.type == pafs.FileType.Directory
+                and info.base_name.startswith("coded_")
+                and info.base_name != keep
+            ):
+                filesystem.delete_dir(info.path)
+    except Exception:  # noqa: BLE001 — cleanup only, commit already done
+        pass
+
+
+def _live_coded_rows(
+    codec: CodedTableCodec, spark, path: str, generation: str
+) -> SparkDF:
+    """One generation's serving rows ``(id, codes, __list)``: a scan
+    with its schema from one parquet footer (no Spark job) and pending
+    tombstones applied as a broadcast watermark anti-filter above it,
+    so ``__list`` pruning still lands in PartitionFilters."""
+    coded_path = f"{path}/coded_{generation}"
+    try:
+        coded = spark.read.schema(footer_schema(coded_path)).parquet(
+            coded_path
+        )
+    except Exception as exc:
+        raise ValueError(
+            f"{codec.label} index at {path!r} points to coded generation "
+            f"{generation} but {coded_path!r} is unreadable — either the "
+            "store was torn by a crashed or manual edit (re-run the table "
+            "save), or the base save was EMPTY and nothing has been "
+            "appended yet (an empty parquet write carries no schema; the "
+            "bootstrap-from-stream pattern is fine, but the first append "
+            "must land before the first load)"
+        ) from exc
+    if "batch_id" not in coded.columns:  # the pre-generation layout
+        return coded
+    wm = load_tombstone_watermarks(spark, _tombstones_path(path, generation))
+    return apply_tombstones(coded, wm).select("id", "codes", "__list")
+
+
+def coded_table_load(codec: CodedTableCodec, spark, path: str):
+    """Load a coded serving table → ``(coded, index)``: the committed
+    generation's live rows (:func:`_live_coded_rows`) and the index
+    that picked it, so a torn save can never serve a mismatched or
+    partially written pair. Runs no Spark job."""
+    index, generation = coded_table_generation(codec, spark, path)
+    return _live_coded_rows(codec, spark, path, generation), index
+
+
+def coded_table_append(
+    codec: CodedTableCodec,
+    df: SparkDF,
+    store_path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    batch_id: "int | None" = None,
+    method: str = "auto",
+) -> None:
+    """Append one batch of NEW vectors: encode them with the STORED
+    index (``codec.encode`` — no retraining, every persisted code stays
+    valid) and land them as a ``batch_id`` partition inside the live
+    generation, through :func:`partitioned_delta_append` — a replay of
+    the same non-negative ``batch_id`` statically overwrites exactly
+    its own partition; sentinel appends (``batch_id=None``) are not
+    retry-safe. The batch is validated in ONE aggregate pass before
+    anything is written: NULL vectors or elements and dimension
+    mismatches raise. An empty SENTINEL batch raises (a caller
+    mistake); an empty batch WITH an id truncates its own partition
+    (the replay-truncate rule, so a streaming maintainer never
+    crash-loops on an empty micro-batch)."""
+    index, generation = coded_table_generation(
+        codec, df.sparkSession, store_path,
+        refuse_legacy="appending would corrupt partition discovery",
+    )
+    bad_vec = (
+        F.col(vec_col).isNull()
+        | (F.size(vec_col) != index.dim)
+        | F.exists(vec_col, lambda x: x.isNull())
+    )
+    chk = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(bad_vec.cast("int")).alias("bad"),
+    ).collect()[0]
+    if chk["n"] == 0 and batch_id is None:
+        raise ValueError("append batch is empty — nothing to encode")
+    if chk["bad"]:
+        raise ValueError(
+            f"append batch has {chk['bad']} row(s) whose {vec_col!r} is "
+            f"NULL, has a NULL element, or is not {index.dim}-dim — the "
+            "stored index cannot encode them; fix the batch upstream"
+        )
+    partitioned_delta_append(
+        codec.encode(df, index, id_col, vec_col, method=method),
+        f"{store_path}/coded_{generation}", batch_id,
+        partition_cols=("batch_id", "__list"),
+    )
+
+
+def coded_table_delete(
+    codec: CodedTableCodec, spark, store_path: str, ids: Sequence,
+    batch_id: int,
+) -> None:
+    """Delete vectors by id: one tombstone batch under the live
+    generation (:func:`append_tombstones` — it kills every row for the
+    id written at or before ``batch_id``, and a LATER append of the id
+    serves again). O(ids), never a rewrite; the ids are written in the
+    coded table's own id dtype (one footer read) so the watermark
+    equi-join never casts. Deleting an id the store never held is a
+    no-op filter; an append and a delete must not share a
+    ``batch_id``."""
+    from pyspark.sql.types import StructField, StructType
+
+    from ons_utils_spark.functions.localrel import local_rows_df
+
+    _, generation = coded_table_generation(
+        codec, spark, store_path,
+        refuse_legacy="its rows carry no order for the tombstone "
+        "watermark to compare against",
+    )
+    ids = list(ids)
+    if not ids:
+        raise ValueError("delete batch is empty — nothing to tombstone")
+    if any(x is None for x in ids):
+        raise ValueError(
+            "delete batch holds a NULL id — a NULL never equi-joins, "
+            "so the delete would silently not happen"
+        )
+    if len(set(ids)) != len(ids):
+        raise ValueError("duplicate ids in delete batch")
+    id_type = footer_schema(f"{store_path}/coded_{generation}")["id"].dataType
+    ids_df = local_rows_df(
+        spark, [(x,) for x in ids],
+        StructType([StructField("id", id_type, nullable=False)]),
+    )
+    append_tombstones(
+        ids_df, _tombstones_path(store_path, generation), batch_id
+    )
+
+
+def coded_table_compact(
+    codec: CodedTableCodec, spark, store_path: str
+) -> None:
+    """Collapse the live generation's ``batch_id`` partitions to the
+    sentinel ``batch_id=-1/__list=<j>/`` layout. Without pending
+    tombstones this is :func:`compact_store`'s crash-repairing
+    rename-aside rewrite in place; the index (and its generation
+    pairing) is untouched. With them, the live rows are re-saved as a
+    FRESH generation (:func:`coded_table_save`): an in-place rewrite
+    moves every row to batch ``-1``, where the stale watermarks would
+    re-kill delete-then-reinsert rows, whereas the commit retires the
+    old generation and its tombstones together.
+
+    Compact only while the streaming maintainer is stopped and its
+    checkpoint has advanced past every compacted batch: a replay of a
+    compacted ``batch_id`` would re-append those vectors."""
+    index, generation = coded_table_generation(
+        codec, spark, store_path, refuse_legacy="there is nothing to compact",
+    )
+    coded = _live_coded_rows(codec, spark, store_path, generation)
+    if dir_exists(_tombstones_path(store_path, generation)):
+        coded_table_save(codec, coded, index, store_path)
+        return
+    compact_store(
+        coded, f"{store_path}/coded_{generation}",
+        partition_cols=("batch_id", "__list"),
+    )
+
+
+def coded_table_max_batch_id(
+    codec: CodedTableCodec, spark, store_path: str
+) -> "int | None":
+    """The coded table's high-water mark: the largest ``batch_id`` over
+    its live generation's coded AND tombstone partitions (a delete
+    writes only tombstones) — listings only, no Spark job. ``None``
+    before the first append or delete."""
+    _, generation = coded_table_generation(codec, spark, store_path)
+    marks = [max_batch_id(f"{store_path}/coded_{generation}")]
+    tombs = _tombstones_path(store_path, generation)
+    if dir_exists(tombs):
+        marks.append(max_batch_id(tombs))
+    return max((m for m in marks if m is not None), default=None)

@@ -360,18 +360,11 @@ def ivf_pq_ingest_writer(
     micro-batches truncate their own partition (the append's
     replay-truncate rule) instead of failing the query.
     """
+    from ons_utils_spark.operators.pq import PQ_CODEC
 
-    def process(batch, batch_id: int) -> None:
-        from ons_utils_spark.operators.pq import ivf_pq_table_append
-
-        ivf_pq_table_append(
-            batch, store_path, id_col=id_col, vec_col=vec_col,
-            batch_id=batch_id, method=method,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _coded_table_ingest_writer(
+        PQ_CODEC, stream_df, store_path, checkpoint_dir, id_col, vec_col,
+        method,
     )
 
 
@@ -384,29 +377,26 @@ def ivf_sq_ingest_writer(
     vec_col: str = "embedding",
     method: str = "auto",
 ):
-    """Maintain a persisted IVF×SQ serving table over a vector stream —
-    the SQ twin of :func:`ivf_pq_ingest_writer`, identical contract:
-    each micro-batch is encoded with the STORED index
-    (``operators/similarity.py::ivf_sq_encode`` — no retraining,
-    out-of-grid values clamp to the grid edges) and appended as its own
-    ``batch_id`` partition inside the live coded generation
-    (``ivf_sq_table_append``). ``load_sq_table`` → ``ivf_sq_query`` /
-    ``ivf_sq_batch_topk`` then serve everything ingested so far,
-    bit-identical to a one-shot build over the full corpus.
+    """:func:`ivf_pq_ingest_writer` for an IVF×SQ table (``similarity.
+    SQ_CODEC``)."""
+    from ons_utils_spark.operators.similarity import SQ_CODEC
 
-    The store must already exist (``save_sq_table`` — grid and coarse
-    centroids trained once, offline). A checkpointed replay statically
-    overwrites exactly its own ``batch_id`` partition — at-least-once
-    delivery becomes effectively exactly-once — which is why
-    ``checkpoint_dir`` is REQUIRED; empty micro-batches truncate their
-    own partition (the append's replay-truncate rule).
-    """
+    return _coded_table_ingest_writer(
+        SQ_CODEC, stream_df, store_path, checkpoint_dir, id_col, vec_col,
+        method,
+    )
+
+
+def _coded_table_ingest_writer(
+    codec, stream_df, store_path, checkpoint_dir, id_col, vec_col, method
+):
+    """The body of both coded-table ingest writers: each micro-batch is
+    one ``sources/store.py::coded_table_append`` under its batch id."""
+    from ons_utils_spark.sources.store import coded_table_append
 
     def process(batch, batch_id: int) -> None:
-        from ons_utils_spark.operators.similarity import ivf_sq_table_append
-
-        ivf_sq_table_append(
-            batch, store_path, id_col=id_col, vec_col=vec_col,
+        coded_table_append(
+            codec, batch, store_path, id_col=id_col, vec_col=vec_col,
             batch_id=batch_id, method=method,
         )
 
@@ -431,10 +421,11 @@ def hybrid_ingest_writer(
     micro-batch carries text AND an embedding per document, and one
     ``foreachBatch`` hook appends its postings/stats deltas to the
     incremental BM25 index (``text.bm25_index_append``) and its
-    stored-index-encoded codes to the IVF×PQ serving table
-    (``pq.ivf_pq_table_append``). ``retrieval.hybrid_batch_topk`` then
-    serves fused lexical+ANN retrieval over everything ingested so far
-    — the end-to-end streaming story for hybrid corpus curation.
+    stored-index-encoded codes to the ANN serving table
+    (``sources/store.py::coded_table_append``).
+    ``retrieval.hybrid_batch_topk`` then serves fused lexical+ANN
+    retrieval over everything ingested so far — the end-to-end
+    streaming story for hybrid corpus curation.
 
     Exactly-once per store: both appends key their writes by the SAME
     micro-batch id, and each is individually replay-idempotent (static
@@ -449,14 +440,15 @@ def hybrid_ingest_writer(
     interval, which is acceptable for retrieval serving and
     self-healing on the next trigger. The ANN store must exist
     (``save_ivf_pq_table`` OR ``save_sq_table`` — index trained
-    offline, the FAISS model; the codec family is auto-detected from
-    the store meta, so the maintainer serves EITHER family) and the
-    BM25 store is created by its first append. The per-store contracts
-    apply: new documents only, checkpoint REQUIRED.
+    offline, the FAISS model; ``retrieval.ann_store_codec`` reads the
+    codec from the store meta, so the maintainer serves EITHER family)
+    and the BM25 store is created by its first append. The per-store
+    contracts apply: new documents only, checkpoint REQUIRED.
     """
-    from ons_utils_spark.operators.retrieval import ann_store_family
+    from ons_utils_spark.operators.retrieval import ann_store_codec
+    from ons_utils_spark.sources.store import coded_table_append
 
-    ann_family = ann_store_family(stream_df.sparkSession, ivf_pq_store_path)
+    codec = ann_store_codec(stream_df.sparkSession, ivf_pq_store_path)
 
     def process(batch, batch_id: int) -> None:
         from ons_utils_spark.operators.text import bm25_index_append
@@ -468,22 +460,10 @@ def hybrid_ingest_writer(
         bm25_index_append(
             batch, id_col, text_col, bm25_store_path, batch_id=batch_id
         )
-        if ann_family == "pq":
-            from ons_utils_spark.operators.pq import ivf_pq_table_append
-
-            ivf_pq_table_append(
-                batch, ivf_pq_store_path, id_col=id_col, vec_col=vec_col,
-                batch_id=batch_id, method=method,
-            )
-        else:
-            from ons_utils_spark.operators.similarity import (
-                ivf_sq_table_append,
-            )
-
-            ivf_sq_table_append(
-                batch, ivf_pq_store_path, id_col=id_col, vec_col=vec_col,
-                batch_id=batch_id, method=method,
-            )
+        coded_table_append(
+            codec, batch, ivf_pq_store_path, id_col=id_col,
+            vec_col=vec_col, batch_id=batch_id, method=method,
+        )
 
     return (
         stream_df.writeStream.foreachBatch(process)
@@ -588,9 +568,10 @@ def rag_ingest_writer(
     """
     from pyspark.sql import functions as F
 
-    from ons_utils_spark.operators.retrieval import ann_store_family
+    from ons_utils_spark.operators.retrieval import ann_store_codec
+    from ons_utils_spark.sources.store import coded_table_append
 
-    ann_family = ann_store_family(stream_df.sparkSession, ann_store_path)
+    codec = ann_store_codec(stream_df.sparkSession, ann_store_path)
 
     def process(batch, batch_id: int) -> None:
         from ons_utils_spark.operators.text import (
@@ -626,22 +607,10 @@ def rag_ingest_writer(
             chunks, "__chunk_key", "chunk_text", bm25_store_path,
             batch_id=batch_id,
         )
-        if ann_family == "pq":
-            from ons_utils_spark.operators.pq import ivf_pq_table_append
-
-            ivf_pq_table_append(
-                chunks, ann_store_path, id_col="__chunk_key",
-                vec_col="embedding", batch_id=batch_id, method=method,
-            )
-        else:
-            from ons_utils_spark.operators.similarity import (
-                ivf_sq_table_append,
-            )
-
-            ivf_sq_table_append(
-                chunks, ann_store_path, id_col="__chunk_key",
-                vec_col="embedding", batch_id=batch_id, method=method,
-            )
+        coded_table_append(
+            codec, chunks, ann_store_path, id_col="__chunk_key",
+            vec_col="embedding", batch_id=batch_id, method=method,
+        )
 
     return (
         stream_df.writeStream.foreachBatch(process)

@@ -1067,6 +1067,20 @@ class TestIvfPqTableAppend:
         lc, _ = pq.load_ivf_pq_table(spark, path)
         assert lc.count() == 20
 
+    def test_index_only_store_refused(self, spark, tmp_path):
+        """A save_ivf_pq_index store (no coded-generation commit record
+        and no pre-generation coded directory) is not a serving table —
+        loads, appends and deletes must say so."""
+        vecs, full, coded, idx, path = self._split_store(spark, tmp_path)
+        iopath = str(tmp_path / "index_only")
+        pq.save_ivf_pq_index(spark, idx, f"{iopath}/index")
+        with pytest.raises(ValueError, match="index-only"):
+            pq.load_ivf_pq_table(spark, iopath)
+        with pytest.raises(ValueError, match="index-only"):
+            pq.ivf_pq_table_append(full.limit(1), iopath, batch_id=0)
+        with pytest.raises(ValueError, match="index-only"):
+            pq.ivf_pq_table_delete(spark, iopath, [0], batch_id=0)
+
     def test_pre_generation_store_rejected(self, spark, tmp_path):
         # A store whose index lacks the coded_generation record (r10
         # layout: coded dir keyed by fingerprint, __list at the root) —

@@ -351,7 +351,7 @@ class TestHybridStoreSync:
         text.bm25_index_append(
             full.where("doc_id >= 2"), "doc_id", "text", bm25, batch_id=1
         )
-        with pytest.warns(UserWarning, match="hybrid store skew"):
+        with pytest.warns(UserWarning, match="hybrid store skew.*IVF×SQ"):
             retrieval.check_hybrid_store_sync(spark, bm25, ann)
 
     def test_append_and_delete_to_both_stores_is_silent(

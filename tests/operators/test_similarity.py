@@ -988,7 +988,7 @@ class TestSqTableAppend:
 
     def test_index_only_store_refused(self, spark, tmp_path):
         """A save_sq_index store (no coded-generation commit record) is
-        not a serving table — loads and appends must say so."""
+        not a serving table — loads, appends and deletes must say so."""
         from ons_utils_spark.operators import similarity as sim
 
         vecs, full, coded, idx, path = _sq_split_store(spark, tmp_path)
@@ -998,6 +998,8 @@ class TestSqTableAppend:
             sim.load_sq_table(spark, iopath)
         with pytest.raises(ValueError, match="index-only"):
             sim.ivf_sq_table_append(full.limit(1), iopath, batch_id=0)
+        with pytest.raises(ValueError, match="index-only"):
+            sim.ivf_sq_table_delete(spark, iopath, [0], batch_id=0)
 
     def test_resave_never_tears_live_generation(self, spark, tmp_path):
         """Same-index re-save writes a FRESH nonce-keyed generation and
@@ -1032,6 +1034,7 @@ class TestIvfSqTableCompact:
         from pyspark.sql import functions as F
 
         from ons_utils_spark.operators import similarity as sim
+        from ons_utils_spark.sources.store import coded_table_generation
 
         vecs, full, coded, idx, path = _sq_split_store(spark, tmp_path)
         sim.ivf_sq_table_append(
@@ -1046,9 +1049,7 @@ class TestIvfSqTableCompact:
         assert sorted(map(tuple, lc.collect())) == before
         assert li == idx
         # All rows collapsed into the sentinel batch partition.
-        gen_dir = sim._sq_table_generation(
-            sim._load_sq_index_with_meta(spark, f"{path}/index")[1], path
-        )
+        gen_dir = coded_table_generation(sim.SQ_CODEC, spark, path)[1]
         raw = spark.read.parquet(f"{path}/coded_{gen_dir}")
         assert raw.select("batch_id").distinct().collect()[0][0] == -1
         # A post-compaction append still folds in.

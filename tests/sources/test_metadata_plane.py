@@ -24,6 +24,7 @@ from ons_utils_spark.operators import similarity as SIM
 from ons_utils_spark.operators import text as T
 from ons_utils_spark.sources.store import (
     append_tombstones,
+    coded_table_generation,
     footer_schema,
     load_tombstone_watermarks,
     max_batch_id,
@@ -64,6 +65,12 @@ def count_jobs(spark):
         jobs.extend(tracker.getJobIdsForGroup(group))
 
 
+def _generation(spark, ann):
+    """The live coded generation of either family's store."""
+    codec = retrieval.ann_store_codec(spark, ann)
+    return coded_table_generation(codec, spark, ann)[1]
+
+
 TEXTS = [
     "spark engine merge", "rareword vector stream", "spark filler words",
     "engine spark engine", "vector merge words", "stream engine rareword",
@@ -80,25 +87,40 @@ def _docs(spark):
     ).localCheckpoint(eager=True)
 
 
-def _ann_store(spark, docs, path, family):
-    """An empty base save of ``family``'s serving table — the shape the
-    hybrid maintainer bootstraps from."""
+def _build(docs, family):
+    """``(coded, index)`` of a small ``family`` build over ``docs``."""
     if family == "pq":
         coded, coarse, cbs = PQ.ivf_pq_build(
             docs, "doc_id", "embedding", dim=8, n_lists=2, m=2, k=2,
             coarse_iter=1, n_iter=1,
         )
-        PQ.save_ivf_pq_table(
-            coded.where("id < 0"), PQ.make_ivf_pq_index(coarse, cbs), path
-        )
-        return PQ.ivf_pq_table_append, PQ.ivf_pq_table_delete
+        return coded, PQ.make_ivf_pq_index(coarse, cbs)
     coded, coarse, vmin, vmax = SIM.ivf_sq_build(
         docs, "doc_id", "embedding", dim=8, n_lists=2, coarse_iter=1
     )
-    SIM.save_sq_table(
-        coded.where("id < 0"), SIM.make_sq_index(coarse, vmin, vmax), path
-    )
-    return SIM.ivf_sq_table_append, SIM.ivf_sq_table_delete
+    return coded, SIM.make_sq_index(coarse, vmin, vmax)
+
+
+#: Each family's public table verbs: save, load, append, delete, compact.
+VERBS = {
+    "pq": (
+        PQ.save_ivf_pq_table, PQ.load_ivf_pq_table, PQ.ivf_pq_table_append,
+        PQ.ivf_pq_table_delete, PQ.ivf_pq_table_compact,
+    ),
+    "sq": (
+        SIM.save_sq_table, SIM.load_sq_table, SIM.ivf_sq_table_append,
+        SIM.ivf_sq_table_delete, SIM.ivf_sq_table_compact,
+    ),
+}
+
+
+def _ann_store(spark, docs, path, family):
+    """An empty base save of ``family``'s serving table — the shape the
+    hybrid maintainer bootstraps from."""
+    coded, index = _build(docs, family)
+    save, _, append, delete, _ = VERBS[family]
+    save(coded.where("id < 0"), index, path)
+    return append, delete
 
 
 @pytest.fixture(scope="module", params=["pq", "sq"])
@@ -172,10 +194,43 @@ class TestZeroJobMetadata:
         assert stats.collect()[0]["n"] == 5
 
 
+class TestCodedTableJobs:
+    @pytest.mark.parametrize("family", ["pq", "sq"])
+    def test_per_verb_job_counts(self, spark, tmp_path, family):
+        """Both codecs run the one coded-table lifecycle, so each verb
+        launches the same bounded number of Spark jobs for either."""
+        save, load, append, delete, compact = VERBS[family]
+        docs = _docs(spark)
+        coded, index = _build(docs, family)
+        path = str(tmp_path / "ann")
+        with count_jobs(spark) as saved:
+            save(coded.where("id < 3"), index, path)
+        with count_jobs(spark) as appended:
+            append(docs.where("doc_id >= 3"), path, id_col="doc_id",
+                   batch_id=0)
+        with count_jobs(spark) as loaded:
+            load(spark, path)
+        with count_jobs(spark) as compacted:
+            compact(spark, path)
+        with count_jobs(spark) as deleted:
+            delete(spark, path, [1, 4], batch_id=1)
+        with count_jobs(spark) as compacted_tombstones:
+            compact(spark, path)
+        assert len(saved) <= 3, saved
+        assert len(appended) <= 3, appended
+        assert loaded == []
+        assert len(deleted) <= 2, deleted
+        assert len(compacted) <= 2, compacted
+        assert len(compacted_tombstones) <= 4, compacted_tombstones
+        assert sorted(
+            r["id"] for r in load(spark, path)[0].collect()
+        ) == [0, 2, 3, 5]
+
+
 class TestDriverReader:
     def test_list_partitioned_coded_table_reads_in_full(self, spark, hybrid):
         _, ann = hybrid
-        gen = retrieval._ann_store_generation(spark, ann)
+        gen = _generation(spark, ann)
         coded = f"{ann}/coded_{gen}"
         assert any(
             d.startswith("__list=")
@@ -190,7 +245,7 @@ class TestDriverReader:
 
     def test_footer_schema_matches_spark_inference(self, spark, hybrid):
         bm25, ann = hybrid
-        gen = retrieval._ann_store_generation(spark, ann)
+        gen = _generation(spark, ann)
         for path in (f"{ann}/coded_{gen}", f"{bm25}/postings",
                      f"{bm25}/tombstones", f"{ann}/index/meta"):
             inferred = spark.read.parquet(path).schema
@@ -242,6 +297,10 @@ class TestDriverReader:
             coarse_iter=1, n_iter=1,
         )
         idx = PQ.make_ivf_pq_index(coarse, cbs)
+        # The pre-generation layout: coded rows keyed by fingerprint.
+        coded.write.partitionBy("__list").parquet(
+            str(tmp_path / f"coded_{idx.fingerprint}")
+        )
         path = str(tmp_path / "index")
         PQ.save_ivf_pq_index(spark, idx, path)
         old = [
@@ -255,7 +314,9 @@ class TestDriverReader:
         assert "coded_generation" not in footer_schema(f"{path}/meta").names
         index, meta = PQ._load_index_with_meta(spark, path)
         assert meta["coded_generation"] is None
-        assert PQ._table_generation(meta, index) == idx.fingerprint
+        assert coded_table_generation(
+            PQ.PQ_CODEC, spark, str(tmp_path)
+        ) == (index, idx.fingerprint)
 
     def test_replay_truncated_partition_does_not_count(
         self, spark, tmp_path
@@ -267,7 +328,7 @@ class TestDriverReader:
         PQ.ivf_pq_table_append(
             docs.where("doc_id < 0"), path, id_col="doc_id", batch_id=3
         )
-        gen = retrieval._ann_store_generation(spark, path)
+        gen = _generation(spark, path)
         coded = f"{path}/coded_{gen}"
         assert os.path.isdir(f"{coded}/batch_id=3")
         spark_max = spark.read.parquet(coded).agg(F.max("batch_id"))
