@@ -1,11 +1,10 @@
 """Centralized ``Dataset.observe`` metric retrieval with a bounded wait.
 
-The engine fuses witness/count aggregates into a materializing job by
+The engine fuses count aggregates into a materializing job by
 attaching them with ``Dataset.observe`` and reading the metrics after
-the action (build witnesses on the postings checkpoint, candidate
-counts on the hot-gram checkpoint, deferred load witnesses on the first
-consumer's materialization). That relies on a Spark-version fact, pinned
-here ONCE: in Spark 3.5/4.x, ``localCheckpoint(eager=True)`` (and any
+the action (candidate counts on the hot-gram and similarity-candidate
+checkpoints). That relies on a Spark-version fact, pinned here ONCE:
+in Spark 3.5/4.x, ``localCheckpoint(eager=True)`` (and any
 other full action) runs under ``withAction``, which reports
 ``CollectMetrics`` results to the attached ``Observation``.
 

@@ -202,7 +202,7 @@ def check_hybrid_store_sync(
 def load_hybrid_stores(spark, bm25_store_path: str, ivf_pq_store_path: str):
     """Load BOTH hybrid serving stores for :func:`hybrid_batch_topk` →
     ``(postings, stats, coded, index)`` — the incremental BM25 fold
-    (witness-validated) plus the ANN serving table of EITHER codec
+    (manifest-checked) plus the ANN serving table of EITHER codec
     family (:func:`ann_store_codec`; the returned index carries its
     codec, which routes :func:`hybrid_batch_topk`'s ANN half) — after
     running :func:`check_hybrid_store_sync`, so a permanently-skewed

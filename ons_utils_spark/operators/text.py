@@ -1448,17 +1448,12 @@ def bm25_index_build(df, id_col: str, text_col: str):
     ``postings`` is one row per (document, distinct term):
     ``(term, id, tf, dl)`` — term frequency and document length
     DENORMALIZED onto every posting so a query never joins back to the
-    corpus. ``stats`` is ONE row ``(n, total_dl, n_postings,
-    postings_xor)`` of exact integers: document count and total token
-    count (``avgdl`` is derived at query time by the same single
-    division :func:`bm25_scores` uses, so indexed scores are
-    bit-identical to corpus-scan scores) plus the cross-store
-    consistency WITNESS the loaders validate — the postings row count
-    AND the ``bit_xor(xxhash64(term, id, tf, dl))`` content hash
-    (order-independent, mergeable across batches by xor). A torn save
-    or append — postings without their stats, or stale stats under
-    fresh postings, even at a COINCIDING row count — fails loudly on
-    load instead of serving silently wrong idf/avgdl.
+    corpus. ``stats`` is ONE row ``(n, total_dl, n_postings)`` of exact
+    integers: document count and total token count (``avgdl`` is
+    derived at query time by the same single division
+    :func:`bm25_scores` uses, so indexed scores are bit-identical to
+    corpus-scan scores) and the postings row count, each document's
+    distinct terms summed.
 
     This is the retrieval twin of the PQ serving artifact
     (``pq.save_ivf_pq_table``): :func:`bm25_scores` re-tokenizes the
@@ -1467,25 +1462,17 @@ def bm25_index_build(df, id_col: str, text_col: str):
     term-sorted, and every query reads only its terms' row groups.
 
     ONE corpus scan: the tokenized projection is checkpointed and feeds
-    both the postings aggregate and the stats aggregate (the scorers
-    rightly avoid materializing token arrays because they run per
-    query; a build runs once per corpus/batch, and the checkpoint
-    spills to executor disk). The postings aggregate is checkpointed
-    too — and the ``(n_postings, postings_xor)`` witness is OBSERVED on
-    that same materialization (``Dataset.observe`` fires on the eager
-    checkpoint), not recomputed by a second full-pass job: count and
-    bit_xor are order-independent, so the observed values are
-    bit-identical to a post-hoc aggregate over the checkpointed rows.
+    both the postings aggregate (checkpointed too) and the stats
+    aggregate (the scorers rightly avoid materializing token arrays
+    because they run per query; a build runs once per corpus/batch, and
+    the checkpoint spills to executor disk).
     """
-    from pyspark.sql import Observation, functions as F
-
-    from ons_utils_spark.functions.observed import get_observed
+    from pyspark.sql import functions as F
 
     toks = df.select(
         F.col(id_col).alias("id"),
         F.coalesce(tokenize(text_col), F.array()).alias("__toks"),
     ).localCheckpoint(eager=True)
-    obs = Observation()
     postings = (
         toks.select(
             "id",
@@ -1495,24 +1482,14 @@ def bm25_index_build(df, id_col: str, text_col: str):
         .groupBy("term", "id", "dl")
         .agg(F.count(F.lit(1)).alias("tf"))
         .select("term", "id", "tf", "dl")
-        .observe(obs, *_postings_witness_aggs())
         .localCheckpoint(eager=True)
     )
-    # Bounded wait + same-aggregates fallback (functions/observed.py
-    # pins the observe-fires-on-eager-checkpoint Spark assumption).
-    witness = get_observed(
-        obs, fallback_df=postings, fallback_aggs=_postings_witness_aggs()
-    )
-    stats = (
-        toks.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.size("__toks")).alias("total_dl"),
-        )
-        # Cast explicitly: F.lit(python_int) types by VALUE (int32 when
-        # it fits), which would make the per-batch stats files disagree
-        # on width and break the loader's mergeSchema read.
-        .withColumn("n_postings", F.lit(witness["__np"]).cast("long"))
-        .withColumn("postings_xor", F.lit(witness["__px"]).cast("long"))
+    stats = toks.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.size("__toks")).alias("total_dl"),
+        F.coalesce(
+            F.sum(F.size(F.array_distinct("__toks"))), F.lit(0)
+        ).cast("long").alias("n_postings"),
     )
     return postings, stats
 
@@ -1521,161 +1498,72 @@ def save_bm25_index(postings, stats, path: str) -> None:
     """Persist a BM25 index under ``path``: ``postings/`` range-sorted
     by term (parquet row-group min/max stats on the sort column turn a
     query's term filter into row-group PRUNING — the scan reads the
-    queried terms' neighborhoods, not the corpus vocabulary) and
-    ``stats/`` (one exact-integer row, written LAST).
+    queried terms' neighborhoods, not the corpus vocabulary), then
+    ``stats/``, one ``(n, total_dl, postings_files)`` row written LAST
+    whose manifest names the postings files just written — the commit
+    record (``sources/store.py``'s BM25 commit manifest). A crash
+    between the two overwrites leaves new postings files that the
+    previous stats row does not name, which :func:`load_bm25_index`
+    refuses."""
+    from pyspark.sql import functions as F
 
-    Crash pairing: stats-last alone is NOT enough when overwriting an
-    existing index — a crash between the two overwrites leaves NEW
-    postings under the PREVIOUS save's stats, both individually intact.
-    The loader therefore validates stats' ``n_postings`` witness
-    against the actual postings row count; a torn overwrite fails
-    loudly on load (a rebuild of the IDENTICAL corpus collides on the
-    witness, but then the stats are also identical — harmless)."""
+    from ons_utils_spark.sources.store import file_manifest
+
     (
         postings.repartitionByRange("term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
         .parquet(f"{path}/postings")
     )
-    stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    manifest = file_manifest(f"{path}/postings")
+    stats.select(
+        "n", "total_dl", F.lit(manifest).alias("postings_files")
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
 
 
-def _postings_witness_aggs():
-    """The (count, content-xor) witness aggregates — ONE definition
-    shared by the build-side observation, both loaders' dedicated
-    validation jobs, and the deferred-witness observations."""
-    return [
-        F.count(F.lit(1)).alias("__np"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64("term", "id", "tf", "dl")), F.lit(0)
-        ).alias("__px"),
-    ]
+def _local_stats(spark, n, total_dl):
+    """The scorers' stats as a DRIVER-LOCAL one-row relation: independent
+    of the store files (safe to serve after the store directory is gone),
+    and its known 1-row size means the stats broadcast costs no read."""
+    return local_rows_df(spark, [(n, total_dl)], "n bigint, total_dl bigint")
 
 
-def _raise_torn_postings(have_n, have_xor, want_n, want_xor, where: str,
-                         repair: str) -> None:
-    if have_n != want_n or have_xor != want_xor:
-        raise ValueError(
-            f"BM25 index at {where} is torn: stats expect "
-            f"{want_n} posting rows (content xor {want_xor}) but the "
-            f"store holds {have_n} (xor {have_xor}) — a "
-            f"write crashed between the postings and stats halves. "
-            f"{repair}"
-        )
-
-
-def _check_postings_witness(postings, want_n, want_xor, where: str,
-                            repair: str) -> None:
-    """Validate the (count, content-xor) cross-store witness — shared by
-    both loaders. The xor catches tears the count alone cannot (a stale
-    stats row whose posting count happens to coincide with the new
-    postings — e.g. a reworded corpus with the same (term, id) shape)."""
-    have = postings.agg(*_postings_witness_aggs()).collect()[0]
-    _raise_torn_postings(
-        have["__np"], have["__px"], want_n, want_xor, where, repair
-    )
-
-
-def _deferred_postings_witness(postings, want_n, want_xor, where: str,
-                               repair: str):
-    """Attach the witness aggregates to ``postings`` as an OBSERVATION
-    instead of running a dedicated full-index job (r13 verdict ask #1 —
-    the build side has worked this way since r13; this is the LOAD-side
-    twin). Returns ``(observed_postings, validate)``.
-
-    The caller contract: run one FULL materialization of (a derivation
-    of) the returned frame — e.g. an eager ``localCheckpoint`` of a
-    pruned fragment — then call ``validate()``, BEFORE serving anything
-    derived from the store. Catalyst never pushes filters below the
-    ``CollectMetrics`` node, so the witness aggregates the WHOLE store
-    whatever the consumer prunes; that first scan therefore reads the
-    full index — exactly the bytes the dedicated witness job read — and
-    the consumer's own filter runs above it. ``validate()`` raises the
-    same torn-store error as the eager check; if the observed metrics
-    do not arrive (a future Spark stops reporting CollectMetrics for
-    the action), it falls back to the dedicated aggregate job — the
-    pre-r14 protocol."""
-    from pyspark.sql import Observation
-
-    from ons_utils_spark.functions.observed import get_observed
-
-    obs = Observation()
-    observed = postings.observe(obs, *_postings_witness_aggs())
-
-    def validate() -> None:
-        have = get_observed(
-            obs, fallback_df=postings,
-            fallback_aggs=_postings_witness_aggs(),
-        )
-        _raise_torn_postings(
-            have["__np"], have["__px"], want_n, want_xor, where, repair
-        )
-
-    return observed, validate
-
-
-def load_bm25_index(spark, path: str, defer_witness: bool = False):
+def load_bm25_index(spark, path: str):
     """Load a :func:`save_bm25_index` store → ``(postings, stats)``
-    ready for :func:`bm25_topk_indexed`. Validates the stats row count
-    AND the (count, content-xor) cross-store witness, so a torn save —
-    either half missing or stale, even at a coinciding row count —
-    fails loudly, not with garbage scores.
-
-    The one-row stats table is read on the driver
-    (``sources/store.py::read_small_store`` — no Spark job), and the
-    returned ``stats`` is a DRIVER-LOCAL one-row relation built from
-    that row: it is independent of the store files (safe to serve after
-    the store directory is gone) and its known-1-row size means the
-    scorers' stats broadcast costs no store read. The postings scan
-    takes its schema from one parquet footer, so only the witness
-    aggregate runs as a Spark job.
-
-    ``defer_witness=True`` returns ``(postings, stats, validate)``
-    instead: the witness rides the first consumer's materialization as
-    an observation rather than a dedicated full-index job — see
-    :func:`_deferred_postings_witness` for the caller contract (fully
-    materialize first, then call ``validate()`` before serving)."""
+    ready for :func:`bm25_topk_indexed`, in 0 Spark jobs: the one-row
+    stats table is read on the driver
+    (``sources/store.py::read_small_store``), its manifest is checked
+    against the postings listing — a torn save fails loudly, not with
+    garbage scores — and the postings scan takes its schema from one
+    parquet footer."""
     from ons_utils_spark.sources.store import (
-        footer_schema, read_small_store,
+        check_file_manifest, footer_schema, read_small_store,
     )
 
     stats_path, postings_path = f"{path}/stats", f"{path}/postings"
     stats = read_small_store(stats_path)
-    if (
-        "n_postings" not in stats.column_names
-        or "postings_xor" not in stats.column_names
-    ):
-        raise ValueError(
-            f"BM25 index stats at {path!r} lacks the consistency "
-            "witness columns (n_postings, postings_xor) — a pre-witness "
-            "or foreign store; rebuild it with bm25_index_build + "
-            "save_bm25_index"
-        )
     if stats.num_rows != 1:
         raise ValueError(
             f"BM25 index stats at {path!r} has {stats.num_rows} rows — "
             "expected exactly 1; the store is torn or not a BM25 index"
         )
+    row = stats.to_pylist()[0]
+    if row.get("postings_files") is None:
+        raise ValueError(
+            f"BM25 index stats at {path!r} lacks the consistency "
+            "witness (the postings_files manifest) — an older or foreign "
+            "store; rebuild it with bm25_index_build + save_bm25_index"
+        )
+    check_file_manifest(
+        postings_path, [row["postings_files"]],
+        f"BM25 index at {path!r} is torn: its postings files are not the "
+        "ones its stats row records — a save crashed between the postings "
+        "and stats halves. Re-run save_bm25_index.",
+    )
     postings = spark.read.schema(footer_schema(postings_path)).parquet(
         postings_path
     )
-    row = stats.to_pylist()[0]
-    stats_schema = footer_schema(stats_path)
-    stats_local = local_rows_df(
-        spark, [tuple(row[c] for c in stats_schema.fieldNames())],
-        stats_schema,
-    )
-    if defer_witness:
-        observed, validate = _deferred_postings_witness(
-            postings, row["n_postings"], row["postings_xor"], repr(path),
-            "Re-run save_bm25_index.",
-        )
-        return observed, stats_local, validate
-    _check_postings_witness(
-        postings, row["n_postings"], row["postings_xor"], repr(path),
-        "Re-run save_bm25_index.",
-    )
-    return postings, stats_local
+    return postings, _local_stats(spark, row["n"], row["total_dl"])
 
 
 # Above this many query terms the indexed scan swaps its pushdown
@@ -1854,243 +1742,163 @@ def bm25_index_append(
     exactly-once. The Count-Min compaction caveat applies to ``stats/``
     (sum-merged): compact only while the writer is stopped.
 
-    Crash pairing: the two appends are not atomic — postings land
-    FIRST, and a crash before the stats append leaves a torn store,
-    which :func:`load_bm25_index_incremental` DETECTS (the summed
-    ``n_postings`` witness stops matching the postings row count) and
-    refuses to serve. Recovery: with an explicit ``batch_id``, simply
-    re-run the append — the partition overwrite repairs both halves;
-    sentinel (``batch_id=None``) appends are NOT retry-safe (a blind
-    re-run double-appends the postings that did land), so retryable
-    batch ingestion should always pass a unique non-negative
-    ``batch_id``.
+    Crash pairing: the postings partition lands FIRST; the stats row,
+    written last, carries the manifest of the postings files this
+    append wrote (``sources/store.py``'s BM25 commit manifest), so a
+    crash in between leaves files no stats row names, which
+    :func:`load_bm25_index_incremental` refuses to serve. Recovery:
+    with an explicit ``batch_id``, simply re-run the append — the
+    partition overwrite repairs both halves; sentinel
+    (``batch_id=None``) appends are NOT retry-safe (a blind re-run
+    double-appends the postings that did land), so retryable batch
+    ingestion should always pass a unique non-negative ``batch_id``.
     """
-    from ons_utils_spark.sources.store import partitioned_delta_append
-
-    postings, stats = bm25_index_build(df, id_col, text_col)
-    partitioned_delta_append(
-        postings, f"{store_path}/postings", batch_id=batch_id
-    )
-    partitioned_delta_append(stats, f"{store_path}/stats", batch_id=batch_id)
-
-
-def load_bm25_index_incremental(
-    spark, store_path: str, defer_witness: bool = False
-):
-    """Fold an incremental BM25 index store → ``(postings, stats)``
-    ready for :func:`bm25_topk_indexed` /
-    :func:`bm25_batch_topk_indexed`. Postings from disjoint new-doc
-    batches union without conflict; the per-batch stats rows SUM into
-    the one exact-integer row the scorers expect — so after any number
-    of appends the served scores are bit-identical to a one-shot
-    :func:`bm25_index_build` over the full corpus (pinned in tests).
-
-    Cross-store consistency is VALIDATED on every load: the summed
-    ``n_postings`` count AND the xor-merged ``postings_xor`` content
-    hash must match the postings store (disjoint batches make xor the
-    exact merge), so a torn append — postings without their stats row,
-    from a crash between the two writes, even at a coinciding count —
-    fails loudly instead of silently serving undercounted
-    ``n``/``avgdl``, where a term's folded ``df`` could even exceed
-    ``n`` and NULL its idf.
-
-    Pending :func:`bm25_index_delete` tombstones (if any) are applied
-    on read: the folded ``n``/``total_dl`` already carry the deletes'
-    exact negative stats deltas, and the postings read is filtered by
-    the broadcast per-id watermark (``sources/store.py::
-    apply_tombstones``) — served scores stay bit-identical to a
-    one-shot build over the LIVE corpus. The delete pairing has its own
-    witness: each delete's stats delta records its tombstone partition's
-    (count, content-xor), folded and validated against the actual
-    tombstone store here — a crash between a delete's two writes fails
-    loudly (re-run the delete with its ``batch_id`` to repair), never
-    serves rows without their stats decrement or vice versa.
-
-    The per-batch stats rows are read and folded on the DRIVER
-    (:func:`_fold_incremental_stats` — no Spark job): the served
-    4-column stats, the postings witness targets and, once deletes
-    exist, the tombstone witness targets. The returned ``stats`` is a
-    DRIVER-LOCAL one-row relation, independent of the store files. The
-    postings and tombstone scans take their schemas from one parquet
-    footer each; what remains as Spark jobs are the two witness
-    aggregates over them (the tombstone one only once deletes exist),
-    and the tombstone watermarks fold on the driver
-    (``sources/store.py::load_tombstone_watermarks``).
-    ``defer_witness=True`` returns ``(postings, stats, validate)`` —
-    the postings witness rides the first consumer's materialization
-    (see :func:`_deferred_postings_witness`; the tombstone-delta
-    witness, when deletes exist, stays an eager check over the tiny
-    tombstone store)."""
     from pyspark.sql import functions as F
 
     from ons_utils_spark.sources.store import (
-        apply_tombstones, dir_exists, footer_schema,
+        file_manifest, partitioned_delta_append,
+    )
+
+    postings, stats = bm25_index_build(df, id_col, text_col)
+    postings_path = f"{store_path}/postings"
+    part = -1 if batch_id is None else batch_id
+    before = file_manifest(postings_path, part) if batch_id is None else None
+    partitioned_delta_append(postings, postings_path, batch_id=batch_id)
+    manifest = file_manifest(postings_path, part, since=before)
+    partitioned_delta_append(
+        stats.select("n", "total_dl", F.lit(manifest).alias("postings_files")),
+        f"{store_path}/stats", batch_id=batch_id,
+    )
+
+
+def load_bm25_index_incremental(spark, store_path: str):
+    """Fold an incremental BM25 index store → ``(postings, stats)``
+    ready for :func:`bm25_topk_indexed` /
+    :func:`bm25_batch_topk_indexed`, in 0 Spark jobs. Postings from
+    disjoint new-doc batches union without conflict; the per-batch
+    stats rows SUM into the one exact-integer row the scorers expect —
+    so after any number of appends the served scores are bit-identical
+    to a one-shot :func:`bm25_index_build` over the full corpus (pinned
+    in tests).
+
+    Every load checks the commit manifests on the driver
+    (``sources/store.py::check_file_manifest``): the postings listing
+    must be exactly the files the append stats rows record, and the
+    tombstone listing exactly the files the delete stats rows record,
+    so a write torn between its two halves fails loudly instead of
+    serving wrong ``n``/``avgdl`` — or rows without their stats
+    decrement. Pending :func:`bm25_index_delete` tombstones are applied
+    on read: the folded ``n``/``total_dl`` already carry the deletes'
+    exact negative stats deltas, and the postings read is filtered by
+    the broadcast per-id watermark (``sources/store.py::
+    apply_tombstones``, folded on the driver) — served scores stay
+    bit-identical to a one-shot build over the LIVE corpus. The
+    returned ``stats`` is a driver-local one-row relation."""
+    from ons_utils_spark.sources.store import (
+        apply_tombstones, check_file_manifest, footer_schema,
         load_tombstone_watermarks,
     )
 
     row = _fold_incremental_stats(store_path)
     postings_path = f"{store_path}/postings"
+    tomb_path = f"{store_path}/tombstones"
+    check_file_manifest(
+        postings_path, row["postings_files"],
+        f"BM25 index at {store_path!r} is torn: its postings files are not "
+        "the ones its stats rows record — an append crashed between the "
+        "postings and stats halves. Re-run the append with its explicit "
+        "batch_id to repair (the partition overwrite replaces both "
+        "halves).",
+    )
+    check_file_manifest(
+        tomb_path, row["tombstone_files"],
+        f"BM25 index at {store_path!r} has a torn DELETE: its tombstone "
+        "files are not the ones its stats deltas record — a delete "
+        "crashed between its tombstone and stats writes (or the tombstone "
+        "directory was edited). Re-run the delete with its explicit "
+        "batch_id to repair (both partitions are statically overwritten).",
+    )
     raw_postings = spark.read.schema(footer_schema(postings_path)).parquet(
         postings_path
     )
-    stats = local_rows_df(
-        spark,
-        [(row["n"], row["total_dl"], row["n_postings"],
-          row["postings_xor"])],
-        "n bigint, total_dl bigint, n_postings bigint, "
-        "postings_xor bigint",
-    )
-    repair = (
-        "Re-run the append with its explicit batch_id to repair (the "
-        "partition overwrite replaces both halves)."
-    )
-    if defer_witness:
-        raw_postings, validate = _deferred_postings_witness(
-            raw_postings, row["n_postings"], row["postings_xor"],
-            repr(store_path), repair,
-        )
-    postings = raw_postings.select("term", "id", "tf", "dl")
-    if not defer_witness:
-        _check_postings_witness(
-            postings, row["n_postings"], row["postings_xor"],
-            repr(store_path), repair,
-        )
-    tomb_path = f"{store_path}/tombstones"
-    have_dir = dir_exists(tomb_path)
-    if have_dir or row["nt"] is not None:
-        want_nt, want_tx = row["nt"] or 0, row["tx"] or 0
-        if have_dir:
-            tombs = spark.read.schema(footer_schema(tomb_path)).parquet(
-                tomb_path
-            )
-            have = tombs.agg(
-                F.count(F.lit(1)).alias("nt"),
-                F.coalesce(
-                    F.bit_xor(
-                        F.xxhash64("id", F.col("batch_id").cast("int"))
-                    ),
-                    F.lit(0),
-                ).alias("tx"),
-            ).collect()[0]
-        else:
-            have = {"nt": 0, "tx": 0}
-        if have["nt"] != want_nt or have["tx"] != want_tx:
-            raise ValueError(
-                f"BM25 index at {store_path!r} has a torn DELETE: the "
-                f"folded stats deltas expect {want_nt} tombstone row(s) "
-                f"(content xor {want_tx}) but the tombstone store holds "
-                f"{have['nt']} (xor {have['tx']}) — a delete crashed "
-                "between its tombstone and stats writes (or the "
-                "tombstone directory was edited). Re-run the delete "
-                "with its explicit batch_id to repair (both partitions "
-                "are statically overwritten)."
-            )
-        if have["nt"]:
-            # raw_postings is the OBSERVED frame in deferred mode, so
-            # the witness still aggregates the pre-tombstone store rows
-            # (the stored stats count them all) while the served
-            # postings apply the watermark filter above it.
-            postings = apply_tombstones(
-                raw_postings, load_tombstone_watermarks(spark, tomb_path)
-            ).select("term", "id", "tf", "dl")
-    if defer_witness:
-        return postings, stats, validate
-    return postings, stats
+    postings = apply_tombstones(
+        raw_postings, load_tombstone_watermarks(spark, tomb_path)
+    ).select("term", "id", "tf", "dl")
+    return postings, _local_stats(spark, row["n"], row["total_dl"])
 
 
 def _fold_incremental_stats(store_path: str) -> dict:
     """Fold an incremental BM25 store's per-batch stats rows on the
     driver (``sources/store.py::read_small_store`` — no Spark job) →
-    ``n``/``total_dl`` (the served sums), ``n_postings``/
-    ``postings_xor`` (the postings witness targets) and ``nt``/``tx``
-    (the tombstone witness targets — ``None`` until a delete has
-    written its stats delta). The NULL rules of the Spark aggregates
-    this replaces: sums skip NULLs, which is how a column absent from
-    older batches reads, and the witness folds coalesce to 0."""
-    import operator
-    from functools import reduce
-
+    ``n``/``total_dl`` (the served sums; a column absent from a file
+    reads as NULL there and sums skip NULLs, as the ``mergeSchema``
+    Spark read did) and the recorded ``postings_files`` /
+    ``tombstone_files`` manifests. An append row records postings, a
+    delete row tombstones; a row recording neither is from an older
+    format and refused."""
     from ons_utils_spark.sources.store import read_small_store
 
-    table = read_small_store(f"{store_path}/stats")
-    if (
-        "n_postings" not in table.column_names
-        or "postings_xor" not in table.column_names
+    cols = read_small_store(
+        f"{store_path}/stats",
+        ["n", "total_dl", "postings_files", "tombstone_files"],
+    ).to_pydict()
+    if any(
+        p is None and t is None
+        for p, t in zip(cols["postings_files"], cols["tombstone_files"])
     ):
         raise ValueError(
             f"incremental BM25 index at {store_path!r} lacks the "
-            "consistency witness columns (n_postings, postings_xor) — "
-            "a pre-witness or foreign store; re-ingest through "
-            "bm25_index_append"
+            "consistency witness (a postings_files or tombstone_files "
+            "manifest on every stats row) — an older or foreign store; "
+            "rebuild it: re-ingest through bm25_index_append"
         )
-    cols = table.to_pydict()
-
-    def vals(c):
-        return [v for v in cols.get(c, ()) if v is not None]
 
     def total(c):
-        v = vals(c)
+        v = [x for x in cols[c] if x is not None]
         return sum(v) if v else None
 
-    def xor(c):
-        return reduce(operator.xor, vals(c), 0)
-
-    deletes = "n_tombstones" in cols
     return {
         "n": total("n"),
         "total_dl": total("total_dl"),
-        "n_postings": total("n_postings") or 0,
-        "postings_xor": xor("postings_xor"),
-        "nt": (total("n_tombstones") or 0) if deletes else None,
-        "tx": xor("tombstones_xor") if deletes else None,
+        "postings_files": cols["postings_files"],
+        "tombstone_files": cols["tombstone_files"],
     }
 
 
 def bm25_index_compact(spark, store_path: str) -> None:
     """Compact an incremental BM25 index — the maintenance half of the
-    append-only contract (``sources/store.py::compact_store``, applied
-    to BOTH delta stores): a long-lived index accumulates one
+    append-only contract: a long-lived index accumulates one
     ``batch_id`` partition per append until partition DISCOVERY — not
     the merge-on-read fold — dominates load time; compaction collapses
-    each store to a single sentinel partition holding exactly what the
-    loader serves (postings: the disjoint-batch union; stats: the one
-    summed exact-integer row).
+    both substores to a single sentinel partition holding exactly what
+    the loader serves (postings: the disjoint-batch union; stats: the
+    one summed exact-integer row with its manifest).
 
-    The (count, content-xor) witness SURVIVES the rewrite by
-    construction: compaction never changes values, only layout — the
-    compacted stats row's ``n_postings``/``postings_xor`` are the very
-    sums/xors the loader validated against the postings union it is
-    rewriting, so after compaction (and after any crash window inside
-    it — each half's rename-aside swap repairs itself on the next run,
-    and a store caught between the two halves still folds to the same
-    numbers) the witness check still passes and served scores are
-    unchanged (pinned in tests: append ×3 → compact → load ≡ one-shot
-    build, and a post-compaction append still folds in).
+    It runs :func:`bm25_index_vacuum`'s ONE whole-store promotion, not
+    a rewrite per substore: a manifest names files, so a crash between
+    two separate swaps would pair rewritten postings with stats rows
+    recording the old files. A store with pending tombstones is refused
+    — that is the vacuum's job, which applies the deletes on the way.
+    Served scores are unchanged (pinned in tests: append ×3 → compact →
+    load ≡ one-shot build, and a post-compaction append still folds in).
 
-    **Writer-stopped caveat** (the ``compact_store`` Count-Min rule —
-    ``stats/`` is SUM-merged): compact only while the streaming writer
-    is stopped AND its checkpoint has advanced past every batch being
-    compacted. A checkpointed replay of a compacted ``batch_id`` can
-    no longer overwrite its own partition — it would re-APPEND those
-    documents' postings and re-SUM their stats, double-counting both.
+    **Writer-stopped caveat** (``stats/`` is SUM-merged): compact only
+    while the streaming writer is stopped AND its checkpoint has
+    advanced past every batch being compacted. A checkpointed replay of
+    a compacted ``batch_id`` can no longer overwrite its own partition
+    — it would re-APPEND those documents' postings and re-SUM their
+    stats, double-counting both.
     """
-    from ons_utils_spark.sources.store import compact_store, dir_exists
+    from ons_utils_spark.sources.store import dir_exists
 
     if dir_exists(f"{store_path}/tombstones"):
         raise ValueError(
             f"BM25 index at {store_path!r} has pending delete "
-            "tombstones — the two per-substore rewrites cannot apply "
-            "them atomically (a crash between the halves would leave "
-            "live postings paired with decremented stats, or rewritten "
-            "sentinel rows re-killed by stale watermarks). Run "
-            "bm25_index_vacuum instead: it applies the deletes and "
-            "compacts in ONE whole-store promotion."
+            "tombstones — compaction only re-lays-out a tombstone-free "
+            "store. Run bm25_index_vacuum instead: it applies the deletes "
+            "and compacts in ONE whole-store promotion."
         )
-    # Loading validates the witness FIRST — a torn store must fail
-    # loudly here, not get its inconsistency baked into a compaction.
-    postings, stats = load_bm25_index_incremental(spark, store_path)
-    compact_store(postings, f"{store_path}/postings")
-    compact_store(stats, f"{store_path}/stats")
+    bm25_index_vacuum(spark, store_path)
 
 
 def bm25_index_delete(
@@ -2116,11 +1924,10 @@ def bm25_index_delete(
        ≤ ``batch_id``, tombstones < ``batch_id`` — deterministic on
        replay no matter what landed since), so folded idf/avgdl stay
        bit-identical to a one-shot build over the live corpus. The
-       delta row also carries the tombstone partition's (count,
-       content-xor) witness; the loader validates it against the
-       actual tombstone store, so a crash BETWEEN the two writes fails
-       loudly on load (re-run the delete to repair) instead of serving
-       rows without their stats decrement.
+       delta row, written last, carries the manifest of the tombstone
+       files, so a crash BETWEEN the two writes fails loudly on load
+       (re-run the delete to repair) instead of serving rows without
+       their stats decrement.
 
     Every requested id must be LIVE in the store as of ``batch_id`` —
     an unknown id raises (unlike the ANN store, a silent no-op here
@@ -2139,8 +1946,8 @@ def bm25_index_delete(
     from pyspark.sql.types import StructField, StructType
 
     from ons_utils_spark.sources.store import (
-        append_tombstones, apply_tombstones, dir_exists, footer_schema,
-        load_tombstone_watermarks, read_small_store,
+        append_tombstones, apply_tombstones, dir_exists, file_manifest,
+        footer_schema, load_tombstone_watermarks, read_small_store,
     )
 
     if batch_id is None or int(batch_id) < 0:
@@ -2168,18 +1975,17 @@ def bm25_index_delete(
     # both operations statically overwrite stats/batch_id=<id>, so
     # sharing one would silently erase the other's stats row on replay.
     stats_part = f"{store_path}/stats/batch_id={batch_id}"
-    if dir_exists(stats_part):
-        existing = read_small_store(stats_part)
-        if "n_tombstones" not in existing.column_names or any(
-            v not in (None, 0)
-            for v in existing.column("n_postings").to_pylist()
-        ):
-            raise ValueError(
-                f"batch_id {batch_id} already holds an APPEND's stats "
-                f"row at {store_path!r} — appends and deletes must use "
-                "distinct batch_ids (each statically overwrites its own "
-                "stats partition on replay)"
-            )
+    if dir_exists(stats_part) and any(
+        m is not None
+        for m in read_small_store(stats_part, ["postings_files"])
+        .column("postings_files").to_pylist()
+    ):
+        raise ValueError(
+            f"batch_id {batch_id} already holds an APPEND's stats "
+            f"row at {store_path!r} — appends and deletes must use "
+            "distinct batch_ids (each statically overwrites its own "
+            "stats partition on replay)"
+        )
     # The live-as-of-batch_id view: data batches <= batch_id, minus rows
     # killed by EARLIER tombstones — later activity is excluded on both
     # sides, so a checkpointed replay recomputes the identical delta.
@@ -2212,74 +2018,47 @@ def bm25_index_delete(
             "its n-membership cannot be decremented; such documents "
             "cannot be deleted from this store)"
         )
-    n_delta = len(dead)
-    dl_delta = sum(r["dl"] for r in dead)
-    # Tombstones land FIRST; the stats delta (which carries the
-    # tombstone witness) is the commit point — the loader refuses the
-    # in-between state.
+    # Tombstones land FIRST; the stats delta recording their files is
+    # the commit point — the loader refuses the in-between state.
     append_tombstones(ids_df, tomb_path, batch_id)
-    tx = (
-        ids_df.agg(
-            F.coalesce(
-                F.bit_xor(
-                    F.xxhash64("id", F.lit(batch_id).cast("int"))
-                ),
-                F.lit(0),
-            ).alias("tx")
-        ).collect()[0]["tx"]
-    )
-    delta = local_rows_df(
+    local_rows_df(
         spark,
-        [(-n_delta, -dl_delta, 0, 0, len(ids), tx)],
-        "n long, total_dl long, n_postings long, postings_xor long, "
-        "n_tombstones long, tombstones_xor long",
-    )
-    delta.write.mode("overwrite").parquet(stats_part)
+        [(-len(dead), -sum(r["dl"] for r in dead),
+          file_manifest(tomb_path, batch_id))],
+        "n long, total_dl long, tombstone_files string",
+    ).write.mode("overwrite").parquet(stats_part)
 
 
 def bm25_index_vacuum(spark, store_path: str) -> None:
     """Apply an incremental BM25 index's pending tombstones PHYSICALLY
     and compact it, in one crash-safe whole-store promotion: rewrite
-    the live (tombstone-filtered) postings and the exact folded stats —
-    with the (count, content-xor) witness recomputed over the live rows
-    — into a staged sibling, then swap it in with the rename-aside
+    the live (tombstone-filtered) postings into a staged sibling, then
+    the exact folded stats as one row whose manifest names the staged
+    postings files, and swap the staged store in with the rename-aside
     recipe (``sources/store.py::promote_staged_store``; debris from a
     previous crashed vacuum is repaired on entry). The tombstone
     substore vanishes with the old root — deletes, their stats deltas,
-    and the rows they killed retire TOGETHER, which is why this exists
-    instead of two per-substore ``compact_store`` calls (a crash
-    between those halves could pair live postings with decremented
-    stats, and rewriting survivors to the sentinel batch would re-kill
-    every delete-then-reinsert row under the stale watermarks — the
-    same hazard :func:`pq.ivf_pq_table_compact` routes around via a
-    fresh generation; this store has no generation pointer, so the
-    promotion unit is the store root).
+    and the rows they killed retire TOGETHER, and the promotion is one
+    unit, so a crash leaves either the old store or the new one (this
+    store has no generation pointer, so the promotion unit is the store
+    root). Rewriting survivors to the sentinel batch under the old
+    watermarks would re-kill every delete-then-reinsert row — the same
+    hazard :func:`pq.ivf_pq_table_compact` routes around via a fresh
+    generation.
 
-    Valid on a tombstone-free store too (then it is exactly a
-    compaction). The **writer-stopped caveat** applies doubly: a
-    checkpointed replay of any vacuumed batch — append or delete — can
-    no longer overwrite its own partition."""
+    Valid on a tombstone-free store too (then it is exactly
+    :func:`bm25_index_compact`). The **writer-stopped caveat** applies
+    doubly: a checkpointed replay of any vacuumed batch — append or
+    delete — can no longer overwrite its own partition."""
     from pyspark.sql import functions as F
 
     from ons_utils_spark.sources.store import (
-        promote_staged_store, repair_swap_debris,
+        file_manifest, promote_staged_store, repair_swap_debris,
     )
 
     repair_swap_debris(store_path)
-    # Validates both witnesses and applies the watermark filter.
-    postings, _ = load_bm25_index_incremental(spark, store_path)
-    row = _fold_incremental_stats(store_path)
-    live = postings.agg(
-        F.count(F.lit(1)).alias("__np"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64("term", "id", "tf", "dl")), F.lit(0)
-        ).alias("__px"),
-    ).collect()[0]
-    fresh_stats = local_rows_df(
-        spark,
-        [(row["n"], row["total_dl"], live["__np"], live["__px"])],
-        "n long, total_dl long, n_postings long, postings_xor long",
-    )
+    # Checks both manifests and applies the watermark filter.
+    postings, stats = load_bm25_index_incremental(spark, store_path)
     staging = store_path.rstrip("/") + ".__vacuum_tmp"
     (
         postings.withColumn("batch_id", F.lit(-1))
@@ -2288,7 +2067,10 @@ def bm25_index_vacuum(spark, store_path: str) -> None:
         .parquet(f"{staging}/postings")
     )
     (
-        fresh_stats.withColumn("batch_id", F.lit(-1))
+        stats.withColumn(
+            "postings_files", F.lit(file_manifest(f"{staging}/postings"))
+        )
+        .withColumn("batch_id", F.lit(-1))
         .write.mode("overwrite")
         .partitionBy("batch_id")
         .parquet(f"{staging}/stats")

@@ -6417,11 +6417,11 @@ def _rp_oracle(in_dim: int, out_dim: int, seed: int) -> str:
     scale = 1.0 / float(out_dim) ** 0.5
     comps = ", ".join(
         "round(list_dot_product(CAST(embedding AS DOUBLE[]), "
-        f"[{', '.join(repr(v) for v in g)}]) * {scale!r}, 6)"
-        for g in planes
+        f"[{', '.join(repr(v) for v in g)}]) * {scale!r}, 6) AS r{j}"
+        for j, g in enumerate(planes)
     )
     return f"""
-        SELECT vec_id AS id, [{comps}] AS reduced
+        SELECT vec_id AS id, {comps}
         FROM embeddings ORDER BY id
     """
 
@@ -6435,12 +6435,16 @@ def _rp_oracle(in_dim: int, out_dim: int, seed: int) -> str:
     "row-local Catalyst folds (zip_with+aggregate per output dim, "
     "whole-stage codegen, zero shuffle); the oracle inlines the identical "
     "plane constants and reproduces every component bit-for-bit "
-    "(sequential fold ≡ list_dot_product).",
+    "(sequential fold ≡ list_dot_product). Components are emitted as "
+    "scalar columns r0…r15, which every result canonicalizer can sort.",
 )
 def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    return _rp_reduce(
+    reduced = _rp_reduce(
         emb, "vec_id", "embedding", in_dim=64, out_dim=16, seed=42
+    )
+    return reduced.select(
+        "id", *(reduced["reduced"][j].alias(f"r{j}") for j in range(16))
     ).orderBy("id")
 from ons_utils_spark.plans.oracle_xxh64 import (  # noqa: E402
     count_min_estimate_oracle,
@@ -8714,23 +8718,14 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="bm25_idx_")
     try:
         _text.save_bm25_index(postings, stats, tmp)
-        # Deferred witness (r14): the (count, xor) validation rides the
-        # fragment checkpoint below as an observation instead of a
-        # dedicated full-index job. The checkpoint still runs the
-        # scorer's own term predicate (_filter_postings_terms), but its
-        # SCAN now reads the full store — filters never push below the
-        # CollectMetrics node — which is exactly the bytes the removed
-        # witness job read; one full pass total instead of full+pruned.
-        # The scorer's later re-filter of the materialized rows is a
-        # no-op, and ls is driver-local rows (no store-file dependence,
-        # nothing to materialize before the tempdir goes away).
-        lp, ls, validate = _text.load_bm25_index(
-            spark, tmp, defer_witness=True
-        )
+        # The checkpoint runs the scorer's own term predicate
+        # (_filter_postings_terms) before the tempdir goes away; the
+        # scorer's later re-filter of the materialized rows is a no-op,
+        # and ls is driver-local rows (no store-file dependence).
+        lp, ls = _text.load_bm25_index(spark, tmp)
         lp = _text._filter_postings_terms(
             lp, [t.lower() for t in _BM25_IDX_TERMS]
         ).localCheckpoint(eager=True)
-        validate()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return _text.bm25_topk_indexed(lp, ls, _BM25_IDX_TERMS, topk=15)
@@ -8771,15 +8766,15 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Tombstone deletes on the incremental BM25 index "
     "(operators/text.py::bm25_index_delete + the watermark filter and "
-    "delete witness in load_bm25_index_incremental): the store grows "
-    "as base (doc_id < 200) + one appended batch, then one delete "
+    "delete manifest check in load_bm25_index_incremental): the store "
+    "grows as base (doc_id < 200) + one appended batch, then one delete "
     "batch kills a base doc (94), an appended doc (355), and doc 83 — "
     "which is RE-APPENDED at a later batch_id and must score again "
     "(the update idiom). Unlike the ANN table a BM25 delete must keep "
     "the SUM-merged exact corpus statistics honest: the delete writes "
     "the dead documents' exact NEGATIVE (n, total_dl) delta (computed "
-    "from the live-as-of-batch view, deterministic on replay) plus a "
-    "(count, content-xor) tombstone witness the loader validates, so "
+    "from the live-as-of-batch view, deterministic on replay) with the "
+    "manifest of its tombstone files, which the loader checks, so "
     "served idf/avgdl — and therefore every score here — are "
     "bit-identical to a one-shot index over the live corpus, which is "
     "exactly what the oracle replays (the shared indexed-BM25 SQL "
@@ -9217,21 +9212,12 @@ def q_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 docs, "doc_id", "text"
             )
             _text.save_bm25_index(postings, stats, f"{tmp}/bm25")
-            # Deferred witness (r14): the (count, xor) validation rides
-            # the pruned-fragment checkpoint below as an observation —
-            # the checkpoint's scan reads the full store (filters never
-            # push below CollectMetrics), i.e. exactly the bytes the
-            # dedicated witness job used to read, and validate() raises
-            # the same torn-store error before anything serves. ls is
-            # driver-local rows now — no store-file dependence, no
+            # ls is driver-local rows — no store-file dependence, no
             # checkpoint needed before the tempdir goes away.
-            lp, ls, validate = _text.load_bm25_index(
-                spark, f"{tmp}/bm25", defer_witness=True
-            )
+            lp, ls = _text.load_bm25_index(spark, f"{tmp}/bm25")
             lp = _text._filter_postings_terms(
                 lp, union_vocab
             ).localCheckpoint(eager=True)
-            validate()
             return lp, ls
 
         def _ann_chain():
@@ -9383,15 +9369,10 @@ def q_hybrid_retrieval_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 docs, "doc_id", "text"
             )
             _text.save_bm25_index(postings, stats, f"{tmp}/bm25")
-            # Deferred witness + driver-local stats (r14) — see
-            # q_hybrid_retrieval's lexical chain.
-            lp, ls, validate = _text.load_bm25_index(
-                spark, f"{tmp}/bm25", defer_witness=True
-            )
+            lp, ls = _text.load_bm25_index(spark, f"{tmp}/bm25")
             lp = _text._filter_postings_terms(
                 lp, union_vocab
             ).localCheckpoint(eager=True)
-            validate()
             return lp, ls
 
         def _ann_chain():
@@ -9704,7 +9685,7 @@ def q_rag_ingest_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="rag_ingest_")
     try:
         # The ANN chain (build → save → append) and the lexical chain
-        # (two witnessed appends → load → pruned checkpoint) are
+        # (two appends → load → pruned checkpoint) are
         # independent until serving — overlapped driver threads (guide
         # §2.6), same orchestration as q_hybrid_retrieval.
         def _lexical_chain():
@@ -9716,11 +9697,8 @@ def q_rag_ingest_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 more.select("vec_id", "chunk_text"),
                 "vec_id", "chunk_text", f"{tmp}/bm25", batch_id=1,
             )
-            # Deferred witness + driver-local stats (r14) — see
-            # q_hybrid_retrieval's lexical chain; the incremental
-            # loader's stats fold already rides its validation job.
-            lp, ls, validate = _text.load_bm25_index_incremental(
-                spark, f"{tmp}/bm25", defer_witness=True
+            lp, ls = _text.load_bm25_index_incremental(
+                spark, f"{tmp}/bm25"
             )
             union_vocab = sorted({
                 t.lower() for _, terms in _RAG_QUERIES for t in terms
@@ -9728,7 +9706,6 @@ def q_rag_ingest_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
             lp = _text._filter_postings_terms(
                 lp, union_vocab
             ).localCheckpoint(eager=True)
-            validate()
             return lp, ls
 
         def _ann_chain():

@@ -43,6 +43,18 @@ generation record is the pre-generation PQ layout only if
 ``coded_<fingerprint>`` exists — which loads, but refuses every other
 verb — and otherwise an index saved alone, which is not a table.
 
+**BM25 commit manifest.** The BM25 store (``operators/text.py``) keeps
+its ``postings/``, ``stats/`` and ``tombstones/`` ``batch_id`` layout
+and makes each stats row the commit record for the files it pairs
+with: a writer lands its postings (or tombstone) files first, lists
+them (:func:`file_manifest` — relative path → byte size), and writes
+the stats row carrying that listing last. Spark names every part file
+with a per-write UUID, so a rewrite of the same rows gets new names; a
+loader compares each substore's listing with the union of the recorded
+manifests (:func:`check_file_manifest`) on the driver, in 0 jobs, and
+any unrecorded, missing or resized file — a write torn between its
+two halves, or an edit behind the store's back — raises.
+
 LLM-data-pipeline extension (no reference twin — the reference's I/O
 surface stops at CSV/Hive reads, SURVEY.md §2.1).
 """
@@ -91,11 +103,11 @@ def _hidden(name: str) -> bool:
 
 
 def _data_files(path: str):
-    """``(filesystem, [(file, partition values)])`` for every parquet
-    data file under ``path``, sorted by file path. Partition values come
-    from the hive ``k=v`` directories between ``path`` and the file,
-    decoded as ints (every store here partitions by integer columns,
-    which Spark infers as ``int``). Files under a non-partition
+    """``(filesystem, [(file, partition values, bytes)])`` for every
+    parquet data file under ``path``, sorted by file path. Partition
+    values come from the hive ``k=v`` directories between ``path`` and
+    the file, decoded as ints (every store here partitions by integer
+    columns, which Spark infers as ``int``). Files under a non-partition
     subdirectory are not part of the store and are skipped, as are
     hidden names (:func:`_hidden`). Raises ``FileNotFoundError`` if
     ``path`` does not exist."""
@@ -116,7 +128,7 @@ def _data_files(path: str):
         dirs = [p.split("=", 1) for p in parts[:-1]]
         if any(len(d) != 2 for d in dirs):
             continue
-        files.append((info.path, {k: int(v) for k, v in dirs}))
+        files.append((info.path, {k: int(v) for k, v in dirs}, info.size))
     return filesystem, sorted(files)
 
 
@@ -129,8 +141,59 @@ def max_batch_id(path: str) -> "int | None":
     ``batch_id`` partition."""
     _, files = _data_files(path)
     return max(
-        (parts["batch_id"] for _, parts in files if "batch_id" in parts),
+        (parts["batch_id"] for _, parts, _ in files if "batch_id" in parts),
         default=None,
+    )
+
+
+def file_manifest(
+    path: str, batch_id: "int | None" = None, since: "str | None" = None
+) -> str:
+    """The data files under ``path`` as a JSON object, relative path →
+    byte size, from the listing alone — the record a BM25 writer stores
+    with the stats row it commits last. ``batch_id`` lists only that
+    ``batch_id=<k>`` partition (keys stay relative to ``path``);
+    ``since``, an earlier manifest of the same listing, leaves out the
+    files it already names, so a sentinel append records just the files
+    it added. A missing path lists as ``{}``."""
+    import json
+
+    sub = path if batch_id is None else f"{path}/batch_id={int(batch_id)}"
+    files = {}
+    if dir_exists(sub):
+        _, root = _resolve_fs(path)
+        skip = len(root.rstrip("/")) + 1
+        files = {f[skip:]: size for f, _, size in _data_files(sub)[1]}
+    old = json.loads(since) if since else {}
+    return json.dumps({k: v for k, v in files.items() if k not in old})
+
+
+def check_file_manifest(
+    path: str, recorded: "Sequence[str | None]", torn: str
+) -> None:
+    """Raise ``ValueError(torn + details)`` unless the listing of
+    ``path`` equals the union of the ``recorded`` :func:`file_manifest`
+    texts (``None`` entries record nothing): an unrecorded file is a
+    write whose commit record never landed, and a missing or resized
+    one a record whose files were replaced or lost. Driver listing
+    only, no Spark job."""
+    import json
+
+    want: dict = {}
+    for text in recorded:
+        if text is not None:
+            want.update(json.loads(text))
+    have = json.loads(file_manifest(path))
+    if have == want:
+        return
+    extra = sorted(have.keys() - want.keys())
+    missing = sorted(want.keys() - have.keys())
+    resized = sorted(k for k in have.keys() & want.keys()
+                     if have[k] != want[k])
+    raise ValueError(
+        f"{torn} ({len(extra)} unrecorded, {len(missing)} missing and "
+        f"{len(resized)} resized file(s) under {path!r}; first: "
+        f"{(extra + missing + resized)[0]!r})"
     )
 
 
@@ -153,7 +216,7 @@ def footer_schema(path: str):
     filesystem, files = _data_files(path)
     if not files:
         raise ValueError(f"no parquet data files under {path!r}")
-    first, parts = files[0]
+    first, parts, _ = files[0]
     with filesystem.open_input_file(first) as f:
         arrow = papq.read_schema(f)
     stored = (arrow.metadata or {}).get(
@@ -184,7 +247,7 @@ def read_small_store(path: str, columns=None):
 
     filesystem, files = _data_files(path)
     tables = []
-    for file, parts in files:
+    for file, parts, _ in files:
         with filesystem.open_input_file(file) as f:
             table = papq.read_table(f)
         for k, v in parts.items():

@@ -558,9 +558,9 @@ def rag_ingest_writer(
     statically overwrites its two partitions. ``chunk_id_factor``
     bounds the per-document chunk count the key space can hold; the
     writer CHECKS each batch's max chunk_id against it and raises
-    (rather than silently aliasing another document's chunks — the
-    BM25 append would only notice the collision later, via its
-    witness, as a corrupt-store error).
+    (rather than silently aliasing another document's chunks, which
+    the BM25 store cannot tell apart afterwards — both documents'
+    postings would serve under one id).
     The ANN store must exist (index trained offline on a base corpus
     of chunks); the BM25 store is created by its first append;
     checkpoint REQUIRED. Cross-store lag is one trigger at most and

@@ -9,8 +9,8 @@ batch; a LATER append of the same id serves again (delete-then-reinsert
 is the update idiom). The ANN coded tables apply deletes physically via
 a fresh-generation re-save inside compaction; the BM25 store — whose
 stats are SUM-merged exact integers — pairs each tombstone batch with a
-negative stats delta plus a (count, content-xor) witness, and applies
-physically via ``bm25_index_vacuum``'s whole-store promotion.
+negative stats delta recording the tombstone files' manifest, and
+applies physically via ``bm25_index_vacuum``'s whole-store promotion.
 """
 
 from __future__ import annotations
@@ -263,7 +263,7 @@ class TestBm25IndexDelete:
 
     def test_torn_delete_refuses_to_serve(self, spark, bm25_store):
         """Crash between the tombstone write and the stats delta: the
-        loader's tombstone witness must fail loudly, not serve filtered
+        loader's tombstone manifest check must fail loudly, not serve filtered
         postings against undecremented stats."""
         ids_df = spark.createDataFrame([(3,)], "id long")
         append_tombstones(ids_df, bm25_store + "/tombstones", 1)

@@ -1115,7 +1115,7 @@ class TestBm25IncrementalIndex:
     def test_torn_save_detected(self, spark, tmp_path):
         # Overwrite-crash simulation: NEW postings land but the stats
         # overwrite never runs — the stale stats row is internally
-        # intact (1 row), so only the n_postings witness catches it.
+        # intact (1 row), so only its postings manifest catches it.
         import pytest
 
         from ons_utils_spark.operators.text import (
@@ -1145,7 +1145,7 @@ class TestBm25IncrementalIndex:
 
     def test_torn_append_detected(self, spark, tmp_path):
         # Append-crash simulation: a batch's postings land but its
-        # stats delta never does — the incremental loader's witness
+        # stats delta never does — the incremental loader's manifest
         # check must refuse to serve undercounted n/avgdl.
         import pytest
 
@@ -1170,8 +1170,8 @@ class TestBm25IncrementalIndex:
 
     def test_equal_count_tear_detected_by_xor(self, spark, tmp_path):
         # A torn overwrite where the NEW postings coincidentally have
-        # the SAME row count as the stale stats expect — the count
-        # witness passes; only the content xor catches it.
+        # the SAME row count as the stale stats expect — a count cannot
+        # tell; the new postings file names do.
         import pytest
 
         from ons_utils_spark.operators.text import (
@@ -1203,11 +1203,46 @@ class TestBm25IncrementalIndex:
         with pytest.raises(ValueError, match="torn"):
             load_bm25_index(spark, path)
 
-    def test_pre_witness_store_clear_error(self, spark, tmp_path):
-        # A store whose stats lack the witness columns (older/foreign
-        # format) must fail with a rebuild hint, not an opaque
-        # missing-field error.
+    def test_incremental_equal_count_replay_tear_detected(
+        self, spark, tmp_path
+    ):
+        # A crashed replay of batch 1: its postings are re-written with
+        # different text of the SAME posting count, and its stats row
+        # never lands. Counts cannot tell; the new file names do.
         import pytest
+
+        from ons_utils_spark.operators.text import (
+            bm25_index_append,
+            bm25_index_build,
+            load_bm25_index_incremental,
+        )
+        from ons_utils_spark.sources.store import partitioned_delta_append
+
+        store = str(tmp_path / "bm25inc_replay_tear")
+        bm25_index_append(
+            self._docs(spark, [(1, "spark engine")]),
+            "doc_id", "text", store, batch_id=0,
+        )
+        bm25_index_append(
+            self._docs(spark, [(2, "rareword filler")]),
+            "doc_id", "text", store, batch_id=1,
+        )
+        p2, s2 = bm25_index_build(
+            self._docs(spark, [(2, "rareword rareword filler")]),
+            "doc_id", "text",
+        )
+        assert s2.collect()[0]["n_postings"] == 2
+        partitioned_delta_append(p2, f"{store}/postings", batch_id=1)
+        with pytest.raises(ValueError, match="torn"):
+            load_bm25_index_incremental(spark, store)
+
+    def test_pre_witness_store_clear_error(self, spark, tmp_path):
+        # A store whose stats lack the manifest (older/foreign format:
+        # no consistency columns at all, or the (count, xor) witness
+        # columns of the previous format) must fail with a rebuild
+        # hint, not an opaque missing-field error.
+        import pytest
+        from pyspark.sql import functions as F
 
         from ons_utils_spark.operators.text import (
             bm25_index_build,
@@ -1215,26 +1250,30 @@ class TestBm25IncrementalIndex:
             load_bm25_index_incremental,
             save_bm25_index,
         )
+        from ons_utils_spark.sources.store import partitioned_delta_append
 
         df = self._docs(spark, [(1, "spark engine")])
         postings, stats = bm25_index_build(df, "doc_id", "text")
-        path = str(tmp_path / "bm25old")
-        save_bm25_index(postings, stats, path)
-        stats.select("n", "total_dl").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/stats")
-        with pytest.raises(ValueError, match="witness"):
-            load_bm25_index(spark, path)
-        # Incremental loader: same contract.
-        from ons_utils_spark.sources.store import partitioned_delta_append
-
-        store = str(tmp_path / "bm25old_inc")
-        partitioned_delta_append(postings, f"{store}/postings")
-        partitioned_delta_append(
-            stats.select("n", "total_dl"), f"{store}/stats"
-        )
-        with pytest.raises(ValueError, match="witness"):
-            load_bm25_index_incremental(spark, store)
+        old_formats = {
+            "bare": stats.select("n", "total_dl"),
+            "xor_witness": stats.withColumn(
+                "postings_xor", F.lit(0).cast("long")
+            ),
+        }
+        for name, old_stats in old_formats.items():
+            path = str(tmp_path / f"bm25old_{name}")
+            save_bm25_index(postings, stats, path)
+            old_stats.coalesce(1).write.mode("overwrite").parquet(
+                f"{path}/stats"
+            )
+            with pytest.raises(ValueError, match="witness"):
+                load_bm25_index(spark, path)
+            # Incremental loader: same contract.
+            store = str(tmp_path / f"bm25old_inc_{name}")
+            partitioned_delta_append(postings, f"{store}/postings")
+            partitioned_delta_append(old_stats, f"{store}/stats")
+            with pytest.raises(ValueError, match="witness"):
+                load_bm25_index_incremental(spark, store)
 
 
 class TestBm25IndexCompaction:
@@ -1242,8 +1281,8 @@ class TestBm25IndexCompaction:
         return spark.createDataFrame(rows, "doc_id bigint, text string")
 
     def test_compact_preserves_scores_and_witness(self, spark, tmp_path):
-        """append ×3 → compact → load ≡ one-shot build (the witness
-        validates on load, so passing load IS the witness check), the
+        """append ×3 → compact → load ≡ one-shot build (the manifest
+        is checked on load, so passing load IS the consistency check), the
         store collapses to sentinel partitions, and a post-compaction
         append still folds in."""
         import os
@@ -1273,8 +1312,8 @@ class TestBm25IndexCompaction:
                 if d.startswith("batch_id=")
             )
             assert parts == ["batch_id=-1"], (half, parts)
-        # Served scores identical to a one-shot build (load validates
-        # the summed witness against the rewritten postings).
+        # Served scores identical to a one-shot build (load checks the
+        # compacted stats row's manifest against the rewritten postings).
         postings, stats = load_bm25_index_incremental(spark, store)
         whole_p, whole_s = bm25_index_build(
             self._docs(spark, b1 + b2 + b3), "doc_id", "text"
@@ -1295,9 +1334,62 @@ class TestBm25IndexCompaction:
         one = bm25_topk_indexed(whole_p, whole_s, terms, topk=7).collect()
         assert [tuple(r) for r in inc] == [tuple(r) for r in one]
 
+    def test_crashed_compaction_serves_pre_compaction_rows(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash before the whole-store promotion leaves the live
+        store untouched: load serves exactly the pre-compaction rows,
+        and a re-run compacts."""
+        import os
+
+        import pytest as _pytest
+
+        from ons_utils_spark.operators.text import (
+            bm25_index_append,
+            bm25_index_compact,
+            load_bm25_index_incremental,
+        )
+        from ons_utils_spark.sources import store as S
+
+        store = str(tmp_path / "bm25inc")
+        batches = (
+            [(1, "spark spark engine"), (2, "rareword here")],
+            [(3, "spark and filler words")],
+        )
+        for i, b in enumerate(batches):
+            bm25_index_append(
+                self._docs(spark, b), "doc_id", "text", store, batch_id=i
+            )
+
+        def served():
+            postings, stats = load_bm25_index_incremental(spark, store)
+            return (
+                sorted(tuple(r) for r in postings.collect()),
+                [tuple(r) for r in stats.collect()],
+            )
+
+        before = served()
+
+        def crash(*args, **kwargs):
+            raise OSError("injected crash before the promotion")
+
+        with monkeypatch.context() as m:
+            m.setattr(S, "promote_staged_store", crash)
+            with _pytest.raises(OSError, match="injected crash"):
+                bm25_index_compact(spark, store)
+        assert served() == before
+        bm25_index_compact(spark, store)
+        for half in ("postings", "stats"):
+            parts = sorted(
+                d for d in os.listdir(f"{store}/{half}")
+                if d.startswith("batch_id=")
+            )
+            assert parts == ["batch_id=-1"], (half, parts)
+        assert served() == before
+
     def test_compact_refuses_torn_store(self, spark, tmp_path):
         """Compaction must not bake a torn store's inconsistency into a
-        rewrite — the pre-compaction load fails the witness first."""
+        rewrite — the pre-compaction load fails the manifest check first."""
         import shutil
 
         import pytest as _pytest
@@ -1760,11 +1852,10 @@ class TestHashEmbed:
 
 
 class TestDeferredLoadWitness:
-    """r14: the load-side witness rides the first consumer's
-    materialization as an observation instead of a dedicated
-    full-index job — same validation values, same torn-store error,
-    and the observation sees the FULL store even when the consumer
-    prunes (filters never push below CollectMetrics)."""
+    """The load-side consistency check runs inside the load itself — a
+    driver comparison of the postings listing with the manifests the
+    stats rows record, no Spark job — so a torn store raises at load,
+    and a healthy load serves what a one-shot build serves."""
 
     def _docs(self, spark, rows):
         return spark.createDataFrame(rows, "doc_id bigint, text string")
@@ -1782,26 +1873,19 @@ class TestDeferredLoadWitness:
         postings, stats = T.bm25_index_build(df, "doc_id", "text")
         path = str(tmp_path / "bm25def")
         T.save_bm25_index(postings, stats, path)
-        lp_e, ls_e = T.load_bm25_index(spark, path)
-        lp_d, ls_d, validate = T.load_bm25_index(
-            spark, path, defer_witness=True
-        )
-        # Pruned consumer: the fragment filter must NOT prune the
-        # observed witness (it aggregates the whole store).
-        frag = T._filter_postings_terms(lp_d, ["spark"]).localCheckpoint(
+        lp, ls = T.load_bm25_index(spark, path)
+        # Pruned consumer, materialized the way the serving queries do.
+        frag = T._filter_postings_terms(lp, ["spark"]).localCheckpoint(
             eager=True
         )
-        validate()  # healthy store: no error
-        # Served results identical between the two load forms.
-        got = T.bm25_topk_indexed(frag, ls_d, ["spark"], topk=5).collect()
+        got = T.bm25_topk_indexed(frag, ls, ["spark"], topk=5).collect()
         want = T.bm25_topk_indexed(
-            T._filter_postings_terms(lp_e, ["spark"]), ls_e,
-            ["spark"], topk=5,
+            postings, stats, ["spark"], topk=5
         ).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
         # The local stats row carries the stored values.
-        assert [tuple(r) for r in ls_d.collect()] == [
-            tuple(r) for r in ls_e.collect()
+        assert [tuple(r) for r in ls.collect()] == [
+            tuple(r) for r in stats.select("n", "total_dl").collect()
         ]
 
     def test_deferred_torn_save_raises_on_validate(self, spark, tmp_path):
@@ -1824,12 +1908,8 @@ class TestDeferredLoadWitness:
             .write.mode("overwrite")
             .parquet(f"{path}/postings")
         )
-        lp, ls, validate = T.load_bm25_index(
-            spark, path, defer_witness=True
-        )
-        T._filter_postings_terms(lp, ["spark"]).localCheckpoint(eager=True)
         with pytest.raises(ValueError, match="torn"):
-            validate()
+            T.load_bm25_index(spark, path)
 
     def test_deferred_incremental_torn_append_raises(self, spark, tmp_path):
         import pytest
@@ -1846,40 +1926,35 @@ class TestDeferredLoadWitness:
             self._docs(spark, [(2, "rareword appears")]), "doc_id", "text"
         )
         partitioned_delta_append(p2, f"{store}/postings", batch_id=1)
-        lp, ls, validate = T.load_bm25_index_incremental(
-            spark, store, defer_witness=True
-        )
-        T._filter_postings_terms(lp, ["spark"]).localCheckpoint(eager=True)
         with pytest.raises(ValueError, match="torn"):
-            validate()
+            T.load_bm25_index_incremental(spark, store)
 
     def test_deferred_incremental_healthy_matches_eager(
         self, spark, tmp_path
     ):
         from ons_utils_spark.operators import text as T
 
+        b1 = [(1, "spark spark engine"), (2, "rareword here")]
+        b2 = [(3, "spark and filler words")]
         store = str(tmp_path / "bm25def_inc_ok")
         T.bm25_index_append(
-            self._docs(
-                spark, [(1, "spark spark engine"), (2, "rareword here")]
-            ),
-            "doc_id", "text", store, batch_id=0,
+            self._docs(spark, b1), "doc_id", "text", store, batch_id=0,
         )
         T.bm25_index_append(
-            self._docs(spark, [(3, "spark and filler words")]),
-            "doc_id", "text", store, batch_id=1,
+            self._docs(spark, b2), "doc_id", "text", store, batch_id=1,
         )
-        lp_e, ls_e = T.load_bm25_index_incremental(spark, store)
-        lp_d, ls_d, validate = T.load_bm25_index_incremental(
-            spark, store, defer_witness=True
-        )
-        frag = T._filter_postings_terms(lp_d, ["spark"]).localCheckpoint(
+        lp, ls = T.load_bm25_index_incremental(spark, store)
+        frag = T._filter_postings_terms(lp, ["spark"]).localCheckpoint(
             eager=True
         )
-        validate()
-        got = T.bm25_topk_indexed(frag, ls_d, ["spark"], topk=4).collect()
-        want = T.bm25_topk_indexed(lp_e, ls_e, ["spark"], topk=4).collect()
+        whole_p, whole_s = T.bm25_index_build(
+            self._docs(spark, b1 + b2), "doc_id", "text"
+        )
+        got = T.bm25_topk_indexed(frag, ls, ["spark"], topk=4).collect()
+        want = T.bm25_topk_indexed(
+            whole_p, whole_s, ["spark"], topk=4
+        ).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
-        assert [tuple(r) for r in ls_d.collect()] == [
-            tuple(r) for r in ls_e.collect()
+        assert [tuple(r) for r in ls.collect()] == [
+            tuple(r) for r in whole_s.select("n", "total_dl").collect()
         ]

@@ -186,7 +186,7 @@ class TestZeroJobMetadata:
             postings, stats, coded, _ = retrieval.load_hybrid_stores(
                 spark, *hybrid
             )
-        assert len(jobs) <= 4, jobs
+        assert jobs == []
         assert {r["id"] for r in coded.select("id").collect()} == {
             0, 2, 3, 4, 5,
         }
@@ -227,6 +227,51 @@ class TestCodedTableJobs:
         ) == [0, 2, 3, 5]
 
 
+class TestBm25StoreJobs:
+    def test_per_verb_job_counts(self, spark, tmp_path):
+        """The BM25 store's consistency check is a driver comparison of
+        file listings with the manifests its stats rows record, so both
+        loaders run no Spark job, with or without tombstones."""
+        docs = _docs(spark)
+        path = str(tmp_path / "bm25")
+        with count_jobs(spark) as appended:
+            T.bm25_index_append(
+                docs.where("doc_id < 3"), "doc_id", "text", path,
+                batch_id=0,
+            )
+        T.bm25_index_append(
+            docs.where("doc_id >= 3"), "doc_id", "text", path, batch_id=1
+        )
+        with count_jobs(spark) as loaded:
+            T.load_bm25_index_incremental(spark, path)
+        with count_jobs(spark) as compacted:
+            T.bm25_index_compact(spark, path)
+        with count_jobs(spark) as deleted:
+            T.bm25_index_delete(spark, path, [1, 4], batch_id=2)
+        with count_jobs(spark) as loaded_tombstones:
+            postings, _ = T.load_bm25_index_incremental(spark, path)
+        assert {r["id"] for r in postings.collect()} == {0, 2, 3, 5}
+        with count_jobs(spark) as vacuumed:
+            T.bm25_index_vacuum(spark, path)
+        postings_one, stats_one = T.bm25_index_build(docs, "doc_id", "text")
+        one = str(tmp_path / "bm25_one")
+        with count_jobs(spark) as saved:
+            T.save_bm25_index(postings_one, stats_one, one)
+        with count_jobs(spark) as loaded_one:
+            T.load_bm25_index(spark, one)
+        assert loaded == [] and loaded_tombstones == []
+        assert loaded_one == []
+        assert len(appended) <= 6, appended
+        assert len(saved) <= 5, saved
+        assert len(compacted) <= 6, compacted
+        assert len(vacuumed) <= 6, vacuumed
+        assert len(deleted) <= 6, deleted
+        assert {
+            r["id"] for r in
+            T.load_bm25_index_incremental(spark, path)[0].collect()
+        } == {0, 2, 3, 5}
+
+
 class TestDriverReader:
     def test_list_partitioned_coded_table_reads_in_full(self, spark, hybrid):
         _, ann = hybrid
@@ -263,18 +308,13 @@ class TestDriverReader:
         raw = spark.read.option("mergeSchema", "true").parquet(
             f"{bm25}/stats"
         )
-        assert "n_tombstones" in raw.columns
+        assert "tombstone_files" in raw.columns
         want = raw.agg(
             F.sum("n").alias("n"),
             F.sum("total_dl").alias("total_dl"),
-            F.coalesce(F.sum("n_postings"), F.lit(0)).alias("n_postings"),
-            F.coalesce(F.bit_xor("postings_xor"), F.lit(0)).alias(
-                "postings_xor"
-            ),
-            F.coalesce(F.sum("n_tombstones"), F.lit(0)).alias("nt"),
-            F.coalesce(F.bit_xor("tombstones_xor"), F.lit(0)).alias("tx"),
         ).collect()[0].asDict()
-        assert T._fold_incremental_stats(bm25) == want
+        fold = T._fold_incremental_stats(bm25)
+        assert {k: fold[k] for k in want} == want
         cols = raw.columns
         got = read_small_store(f"{bm25}/stats", cols).to_pylist()
         assert sorted(
@@ -287,7 +327,7 @@ class TestDriverReader:
         path = str(tmp_path / "bm25")
         T.bm25_index_append(_docs(spark), "doc_id", "text", path)
         fold = T._fold_incremental_stats(path)
-        assert fold["nt"] is None and fold["tx"] is None
+        assert fold["tombstone_files"] == [None]
         assert fold["n"] == len(TEXTS)
 
     def test_pre_generation_meta_reads_null(self, spark, tmp_path):
