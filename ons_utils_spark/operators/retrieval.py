@@ -207,11 +207,11 @@ def load_hybrid_stores(spark, bm25_store_path: str, ivf_pq_store_path: str):
     codec, which routes :func:`hybrid_batch_topk`'s ANN half) — after
     running :func:`check_hybrid_store_sync`, so a permanently-skewed
     pair warns at the moment someone starts serving from it."""
-    from ons_utils_spark.operators.text import load_bm25_index_incremental
+    from ons_utils_spark.operators.text import load_bm25_index
     from ons_utils_spark.sources.store import coded_table_load
 
     check_hybrid_store_sync(spark, bm25_store_path, ivf_pq_store_path)
-    postings, stats = load_bm25_index_incremental(spark, bm25_store_path)
+    postings, stats = load_bm25_index(spark, bm25_store_path)
     coded, index = coded_table_load(
         ann_store_codec(spark, ivf_pq_store_path), spark, ivf_pq_store_path
     )

@@ -1448,12 +1448,10 @@ def bm25_index_build(df, id_col: str, text_col: str):
     ``postings`` is one row per (document, distinct term):
     ``(term, id, tf, dl)`` — term frequency and document length
     DENORMALIZED onto every posting so a query never joins back to the
-    corpus. ``stats`` is ONE row ``(n, total_dl, n_postings)`` of exact
-    integers: document count and total token count (``avgdl`` is
-    derived at query time by the same single division
-    :func:`bm25_scores` uses, so indexed scores are bit-identical to
-    corpus-scan scores) and the postings row count, each document's
-    distinct terms summed.
+    corpus. ``stats`` is ONE row ``(n, total_dl)`` of exact integers:
+    document count and total token count (``avgdl`` is derived at query
+    time by the same single division :func:`bm25_scores` uses, so
+    indexed scores are bit-identical to corpus-scan scores).
 
     This is the retrieval twin of the PQ serving artifact
     (``pq.save_ivf_pq_table``): :func:`bm25_scores` re-tokenizes the
@@ -1487,38 +1485,65 @@ def bm25_index_build(df, id_col: str, text_col: str):
     stats = toks.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.size("__toks")).alias("total_dl"),
-        F.coalesce(
-            F.sum(F.size(F.array_distinct("__toks"))), F.lit(0)
-        ).cast("long").alias("n_postings"),
     )
     return postings, stats
 
 
 def save_bm25_index(postings, stats, path: str) -> None:
-    """Persist a BM25 index under ``path``: ``postings/`` range-sorted
-    by term (parquet row-group min/max stats on the sort column turn a
-    query's term filter into row-group PRUNING — the scan reads the
-    queried terms' neighborhoods, not the corpus vocabulary), then
-    ``stats/``, one ``(n, total_dl, postings_files)`` row written LAST
-    whose manifest names the postings files just written — the commit
-    record (``sources/store.py``'s BM25 commit manifest). A crash
-    between the two overwrites leaves new postings files that the
-    previous stats row does not name, which :func:`load_bm25_index`
-    refuses."""
+    """Persist a whole BM25 index under ``path`` as the one BM25 store
+    layout: ``postings/batch_id=-1/`` range-sorted by term (parquet
+    row-group min/max stats on the sort column turn a query's term
+    filter into row-group PRUNING — the scan reads the queried terms'
+    neighborhoods, not the corpus vocabulary) and one
+    ``(n, total_dl, postings_files)`` stats row under
+    ``stats/batch_id=-1/``, through :func:`_write_bm25_store`. The
+    store at ``path``, appends and tombstones included, is replaced as
+    one unit; the saved store takes :func:`bm25_index_append`,
+    :func:`bm25_index_delete` and :func:`bm25_index_vacuum` like any
+    other."""
+    _write_bm25_store(
+        postings.repartitionByRange("term").sortWithinPartitions("term"),
+        stats, path,
+    )
+
+
+def _write_bm25_store(postings, stats, path: str) -> None:
+    """The one whole-store BM25 writer (:func:`save_bm25_index`,
+    :func:`bm25_index_vacuum`): into a staged sibling of ``path`` it
+    writes the ``(term, id, tf, dl)`` postings under
+    ``postings/batch_id=-1/``, then the ``(n, total_dl)`` stats row
+    carrying their manifest (``sources/store.py``'s BM25 commit
+    manifest) under ``stats/batch_id=-1/``, and promotes the staging in
+    place of the store by rename-aside
+    (``sources/store.py::promote_staged_store``; debris of a crashed
+    promotion is repaired first). A crash before the promotion leaves
+    the live store untouched, one inside it is repaired by the next
+    writer, so a reader sees the old store or the new one. Both inputs
+    are written out before the promotion moves anything they read."""
     from pyspark.sql import functions as F
 
-    from ons_utils_spark.sources.store import file_manifest
-
-    (
-        postings.repartitionByRange("term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(f"{path}/postings")
+    from ons_utils_spark.sources.store import (
+        file_manifest, promote_staged_store, repair_swap_debris,
     )
-    manifest = file_manifest(f"{path}/postings")
-    stats.select(
-        "n", "total_dl", F.lit(manifest).alias("postings_files")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+
+    repair_swap_debris(path)
+    staging = path.rstrip("/") + ".__save_tmp"
+
+    def write(rows, half):
+        (
+            rows.withColumn("batch_id", F.lit(-1))
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(f"{staging}/{half}")
+        )
+
+    write(postings.select("term", "id", "tf", "dl"), "postings")
+    manifest = file_manifest(f"{staging}/postings")
+    write(
+        stats.select("n", "total_dl", F.lit(manifest).alias("postings_files")),
+        "stats",
+    )
+    promote_staged_store(path, staging, what="BM25 store write")
 
 
 def _local_stats(spark, n, total_dl):
@@ -1529,41 +1554,110 @@ def _local_stats(spark, n, total_dl):
 
 
 def load_bm25_index(spark, path: str):
-    """Load a :func:`save_bm25_index` store → ``(postings, stats)``
-    ready for :func:`bm25_topk_indexed`, in 0 Spark jobs: the one-row
-    stats table is read on the driver
-    (``sources/store.py::read_small_store``), its manifest is checked
-    against the postings listing — a torn save fails loudly, not with
-    garbage scores — and the postings scan takes its schema from one
-    parquet footer."""
+    """Load a BM25 store → ``(postings, stats)`` ready for
+    :func:`bm25_topk_indexed` / :func:`bm25_batch_topk_indexed`, in 0
+    Spark jobs — the one loader for whatever :func:`save_bm25_index`,
+    :func:`bm25_index_append`, :func:`bm25_index_delete` and
+    :func:`bm25_index_vacuum` wrote (a store saved before the layouts
+    merged, with unpartitioned ``postings/`` and one stats row, loads
+    too). Postings from disjoint new-doc batches union without
+    conflict; the per-batch stats rows SUM into the one exact-integer
+    row the scorers expect — so after any number of appends the served
+    scores are bit-identical to a one-shot :func:`bm25_index_build`
+    over the full corpus (pinned in tests).
+
+    Every load checks the commit manifests on the driver
+    (``sources/store.py::check_file_manifest``): the postings listing
+    must be exactly the files the save/append stats rows record, each
+    recorded once, and the tombstone listing exactly the files the
+    delete stats rows record, so a write torn between its two halves —
+    or a copied stats row — fails loudly instead of serving wrong
+    ``n``/``avgdl``, or rows without their stats decrement. Pending
+    :func:`bm25_index_delete` tombstones are applied on read: the
+    folded ``n``/``total_dl`` already carry the deletes' exact negative
+    stats deltas, and the postings read is filtered by the broadcast
+    per-id watermark (``sources/store.py::apply_tombstones``, folded on
+    the driver) — served scores stay bit-identical to a one-shot build
+    over the LIVE corpus.
+
+    The returned ``stats`` is a driver-local one-row relation; the
+    returned ``postings`` is a LAZY scan of the store's files, which a
+    later :func:`bm25_index_vacuum`, :func:`bm25_index_compact` or
+    :func:`save_bm25_index` replaces — collecting it after one fails,
+    so reload after every whole-store write (or materialize first)."""
     from ons_utils_spark.sources.store import (
-        check_file_manifest, footer_schema, read_small_store,
+        apply_tombstones, check_file_manifest, footer_schema,
+        load_tombstone_watermarks,
     )
 
-    stats_path, postings_path = f"{path}/stats", f"{path}/postings"
-    stats = read_small_store(stats_path)
-    if stats.num_rows != 1:
-        raise ValueError(
-            f"BM25 index stats at {path!r} has {stats.num_rows} rows — "
-            "expected exactly 1; the store is torn or not a BM25 index"
-        )
-    row = stats.to_pylist()[0]
-    if row.get("postings_files") is None:
-        raise ValueError(
-            f"BM25 index stats at {path!r} lacks the consistency "
-            "witness (the postings_files manifest) — an older or foreign "
-            "store; rebuild it with bm25_index_build + save_bm25_index"
-        )
+    row = _fold_stats(path)
+    postings_path = f"{path}/postings"
+    tomb_path = f"{path}/tombstones"
     check_file_manifest(
-        postings_path, [row["postings_files"]],
-        f"BM25 index at {path!r} is torn: its postings files are not the "
-        "ones its stats row records — a save crashed between the postings "
-        "and stats halves. Re-run save_bm25_index.",
+        postings_path, row["postings_files"],
+        f"BM25 index at {path!r} is torn: its postings files are not "
+        "the ones its stats rows record — an append crashed between the "
+        "postings and stats halves. Re-run the append with its explicit "
+        "batch_id to repair (the partition overwrite replaces both "
+        "halves).",
     )
-    postings = spark.read.schema(footer_schema(postings_path)).parquet(
+    check_file_manifest(
+        tomb_path, row["tombstone_files"],
+        f"BM25 index at {path!r} has a torn DELETE: its tombstone "
+        "files are not the ones its stats deltas record — a delete "
+        "crashed between its tombstone and stats writes (or the tombstone "
+        "directory was edited). Re-run the delete with its explicit "
+        "batch_id to repair (both partitions are statically overwritten).",
+    )
+    raw_postings = spark.read.schema(footer_schema(postings_path)).parquet(
         postings_path
     )
+    postings = apply_tombstones(
+        raw_postings, load_tombstone_watermarks(spark, tomb_path)
+    ).select("term", "id", "tf", "dl")
     return postings, _local_stats(spark, row["n"], row["total_dl"])
+
+
+#: A second public name for :func:`load_bm25_index`.
+load_bm25_index_incremental = load_bm25_index
+
+
+def _fold_stats(store_path: str) -> dict:
+    """Fold a BM25 store's per-batch stats rows on the driver
+    (``sources/store.py::read_small_store`` — no Spark job) →
+    ``n``/``total_dl`` (the served sums; a column absent from a file
+    reads as NULL there and sums skip NULLs, as the ``mergeSchema``
+    Spark read did) and the recorded ``postings_files`` /
+    ``tombstone_files`` manifests. A save or append row records
+    postings, a delete row tombstones; a row recording neither is from
+    an older format and refused."""
+    from ons_utils_spark.sources.store import read_small_store
+
+    cols = read_small_store(
+        f"{store_path}/stats",
+        ["n", "total_dl", "postings_files", "tombstone_files"],
+    ).to_pydict()
+    if any(
+        p is None and t is None
+        for p, t in zip(cols["postings_files"], cols["tombstone_files"])
+    ):
+        raise ValueError(
+            f"BM25 index at {store_path!r} lacks the "
+            "consistency witness (a postings_files or tombstone_files "
+            "manifest on every stats row) — an older or foreign store; "
+            "rebuild it with save_bm25_index or bm25_index_append"
+        )
+
+    def total(c):
+        v = [x for x in cols[c] if x is not None]
+        return sum(v) if v else None
+
+    return {
+        "n": total("n"),
+        "total_dl": total("total_dl"),
+        "postings_files": cols["postings_files"],
+        "tombstone_files": cols["tombstone_files"],
+    }
 
 
 # Above this many query terms the indexed scan swaps its pushdown
@@ -1726,8 +1820,8 @@ def bm25_index_append(
     store_path: str,
     batch_id: "int | None" = None,
 ) -> None:
-    """Append one batch of NEW documents to an incremental BM25 index —
-    two delta stores under ``store_path`` (the shared
+    """Append one batch of NEW documents to a BM25 index — two delta
+    stores under ``store_path`` (the shared
     ``sources/store.py`` recipe): ``postings/`` (this batch's
     ``(term, id, tf, dl)`` rows) and ``stats/`` (this batch's one-row
     ``(n, total_dl)`` — SUM-mergeable, like the Count-Min cells).
@@ -1746,7 +1840,7 @@ def bm25_index_append(
     written last, carries the manifest of the postings files this
     append wrote (``sources/store.py``'s BM25 commit manifest), so a
     crash in between leaves files no stats row names, which
-    :func:`load_bm25_index_incremental` refuses to serve. Recovery:
+    :func:`load_bm25_index` refuses to serve. Recovery:
     with an explicit ``batch_id``, simply re-run the append — the
     partition overwrite repairs both halves; sentinel
     (``batch_id=None``) appends are NOT retry-safe (a blind re-run
@@ -1771,102 +1865,8 @@ def bm25_index_append(
     )
 
 
-def load_bm25_index_incremental(spark, store_path: str):
-    """Fold an incremental BM25 index store → ``(postings, stats)``
-    ready for :func:`bm25_topk_indexed` /
-    :func:`bm25_batch_topk_indexed`, in 0 Spark jobs. Postings from
-    disjoint new-doc batches union without conflict; the per-batch
-    stats rows SUM into the one exact-integer row the scorers expect —
-    so after any number of appends the served scores are bit-identical
-    to a one-shot :func:`bm25_index_build` over the full corpus (pinned
-    in tests).
-
-    Every load checks the commit manifests on the driver
-    (``sources/store.py::check_file_manifest``): the postings listing
-    must be exactly the files the append stats rows record, and the
-    tombstone listing exactly the files the delete stats rows record,
-    so a write torn between its two halves fails loudly instead of
-    serving wrong ``n``/``avgdl`` — or rows without their stats
-    decrement. Pending :func:`bm25_index_delete` tombstones are applied
-    on read: the folded ``n``/``total_dl`` already carry the deletes'
-    exact negative stats deltas, and the postings read is filtered by
-    the broadcast per-id watermark (``sources/store.py::
-    apply_tombstones``, folded on the driver) — served scores stay
-    bit-identical to a one-shot build over the LIVE corpus. The
-    returned ``stats`` is a driver-local one-row relation."""
-    from ons_utils_spark.sources.store import (
-        apply_tombstones, check_file_manifest, footer_schema,
-        load_tombstone_watermarks,
-    )
-
-    row = _fold_incremental_stats(store_path)
-    postings_path = f"{store_path}/postings"
-    tomb_path = f"{store_path}/tombstones"
-    check_file_manifest(
-        postings_path, row["postings_files"],
-        f"BM25 index at {store_path!r} is torn: its postings files are not "
-        "the ones its stats rows record — an append crashed between the "
-        "postings and stats halves. Re-run the append with its explicit "
-        "batch_id to repair (the partition overwrite replaces both "
-        "halves).",
-    )
-    check_file_manifest(
-        tomb_path, row["tombstone_files"],
-        f"BM25 index at {store_path!r} has a torn DELETE: its tombstone "
-        "files are not the ones its stats deltas record — a delete "
-        "crashed between its tombstone and stats writes (or the tombstone "
-        "directory was edited). Re-run the delete with its explicit "
-        "batch_id to repair (both partitions are statically overwritten).",
-    )
-    raw_postings = spark.read.schema(footer_schema(postings_path)).parquet(
-        postings_path
-    )
-    postings = apply_tombstones(
-        raw_postings, load_tombstone_watermarks(spark, tomb_path)
-    ).select("term", "id", "tf", "dl")
-    return postings, _local_stats(spark, row["n"], row["total_dl"])
-
-
-def _fold_incremental_stats(store_path: str) -> dict:
-    """Fold an incremental BM25 store's per-batch stats rows on the
-    driver (``sources/store.py::read_small_store`` — no Spark job) →
-    ``n``/``total_dl`` (the served sums; a column absent from a file
-    reads as NULL there and sums skip NULLs, as the ``mergeSchema``
-    Spark read did) and the recorded ``postings_files`` /
-    ``tombstone_files`` manifests. An append row records postings, a
-    delete row tombstones; a row recording neither is from an older
-    format and refused."""
-    from ons_utils_spark.sources.store import read_small_store
-
-    cols = read_small_store(
-        f"{store_path}/stats",
-        ["n", "total_dl", "postings_files", "tombstone_files"],
-    ).to_pydict()
-    if any(
-        p is None and t is None
-        for p, t in zip(cols["postings_files"], cols["tombstone_files"])
-    ):
-        raise ValueError(
-            f"incremental BM25 index at {store_path!r} lacks the "
-            "consistency witness (a postings_files or tombstone_files "
-            "manifest on every stats row) — an older or foreign store; "
-            "rebuild it: re-ingest through bm25_index_append"
-        )
-
-    def total(c):
-        v = [x for x in cols[c] if x is not None]
-        return sum(v) if v else None
-
-    return {
-        "n": total("n"),
-        "total_dl": total("total_dl"),
-        "postings_files": cols["postings_files"],
-        "tombstone_files": cols["tombstone_files"],
-    }
-
-
 def bm25_index_compact(spark, store_path: str) -> None:
-    """Compact an incremental BM25 index — the maintenance half of the
+    """Compact a BM25 index — the maintenance half of the
     append-only contract: a long-lived index accumulates one
     ``batch_id`` partition per append until partition DISCOVERY — not
     the merge-on-read fold — dominates load time; compaction collapses
@@ -1874,8 +1874,9 @@ def bm25_index_compact(spark, store_path: str) -> None:
     the loader serves (postings: the disjoint-batch union; stats: the
     one summed exact-integer row with its manifest).
 
-    It runs :func:`bm25_index_vacuum`'s ONE whole-store promotion, not
-    a rewrite per substore: a manifest names files, so a crash between
+    It runs :func:`bm25_index_vacuum`, whose one whole-store write
+    (:func:`_write_bm25_store`, the save's writer) replaces both
+    substores as one unit: a manifest names files, so a crash between
     two separate swaps would pair rewritten postings with stats rows
     recording the old files. A store with pending tombstones is refused
     — that is the vacuum's job, which applies the deletes on the way.
@@ -1907,7 +1908,7 @@ def bm25_index_delete(
     ids: "Sequence",
     batch_id: int,
 ) -> None:
-    """Delete documents from an incremental BM25 index by id — the
+    """Delete documents from a BM25 index by id — the
     retrieval twin of :func:`pq.ivf_pq_table_delete` (the GDPR /
     stale-document maintenance path), adapted to this store's exact
     corpus statistics. Two paired writes, both replay-idempotent
@@ -1939,15 +1940,16 @@ def bm25_index_delete(
     holding an append's row raises. ``batch_id`` must be ≥ 0: a delete
     is only meaningful relative to the append order. O(ids) driver
     memory; the store is never rewritten (see :func:`bm25_index_vacuum`
-    for physical application). The stats partition, the prior
-    tombstones and the postings schema are read on the driver; the
-    live-id lookup over the postings is the one Spark scan."""
+    for physical application). The ids are checked on the driver
+    (``sources/store.py::tombstone_ids``); the stats partition, the
+    prior tombstones and the postings schema are read on the driver;
+    the live-id lookup over the postings is the one Spark scan."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StructField, StructType
 
     from ons_utils_spark.sources.store import (
         append_tombstones, apply_tombstones, dir_exists, file_manifest,
         footer_schema, load_tombstone_watermarks, read_small_store,
+        tombstone_ids,
     )
 
     if batch_id is None or int(batch_id) < 0:
@@ -1958,19 +1960,12 @@ def bm25_index_delete(
         )
     batch_id = int(batch_id)
     ids = list(ids)
-    if not ids:
-        raise ValueError("delete batch is empty — nothing to tombstone")
-    if any(x is None for x in ids):
-        raise ValueError(
-            "delete batch holds a NULL id — a NULL never equi-joins, "
-            "so the delete would silently not happen"
-        )
-    if len(set(ids)) != len(ids):
-        raise ValueError("duplicate ids in delete batch")
     postings_path = f"{store_path}/postings"
     raw_postings = spark.read.schema(footer_schema(postings_path)).parquet(
         postings_path
     )
+    id_type = raw_postings.schema["id"].dataType
+    ids_df = tombstone_ids(spark, ids, id_type)
     # Refuse a batch_id collision with an APPEND before writing anything:
     # both operations statically overwrite stats/batch_id=<id>, so
     # sharing one would silently erase the other's stats row on replay.
@@ -1989,11 +1984,6 @@ def bm25_index_delete(
     # The live-as-of-batch_id view: data batches <= batch_id, minus rows
     # killed by EARLIER tombstones — later activity is excluded on both
     # sides, so a checkpointed replay recomputes the identical delta.
-    id_type = raw_postings.schema["id"].dataType
-    ids_df = local_rows_df(
-        spark, [(x,) for x in ids],
-        StructType([StructField("id", id_type, nullable=False)]),
-    )
     tomb_path = f"{store_path}/tombstones"
     view = apply_tombstones(
         raw_postings.where(F.col("batch_id") <= batch_id),
@@ -2020,7 +2010,7 @@ def bm25_index_delete(
         )
     # Tombstones land FIRST; the stats delta recording their files is
     # the commit point — the loader refuses the in-between state.
-    append_tombstones(ids_df, tomb_path, batch_id)
+    append_tombstones(spark, ids, tomb_path, batch_id, id_type)
     local_rows_df(
         spark,
         [(-len(dead), -sum(r["dl"] for r in dead),
@@ -2030,52 +2020,29 @@ def bm25_index_delete(
 
 
 def bm25_index_vacuum(spark, store_path: str) -> None:
-    """Apply an incremental BM25 index's pending tombstones PHYSICALLY
-    and compact it, in one crash-safe whole-store promotion: rewrite
-    the live (tombstone-filtered) postings into a staged sibling, then
-    the exact folded stats as one row whose manifest names the staged
-    postings files, and swap the staged store in with the rename-aside
-    recipe (``sources/store.py::promote_staged_store``; debris from a
-    previous crashed vacuum is repaired on entry). The tombstone
-    substore vanishes with the old root — deletes, their stats deltas,
-    and the rows they killed retire TOGETHER, and the promotion is one
-    unit, so a crash leaves either the old store or the new one (this
-    store has no generation pointer, so the promotion unit is the store
-    root). Rewriting survivors to the sentinel batch under the old
-    watermarks would re-kill every delete-then-reinsert row — the same
-    hazard :func:`pq.ivf_pq_table_compact` routes around via a fresh
-    generation.
+    """Apply a BM25 index's pending tombstones PHYSICALLY and compact
+    it: load the live (tombstone-filtered) postings and the exact folded
+    stats, and write them back as a fresh store through
+    :func:`_write_bm25_store` — the save's writer, staged and promoted
+    as one unit, so a crash leaves either the old store or the new one
+    (debris from a previous crashed promotion is repaired on entry).
+    The tombstone substore vanishes with the old root — deletes, their
+    stats deltas, and the rows they killed retire TOGETHER. Rewriting
+    survivors to the sentinel batch under the old watermarks would
+    re-kill every delete-then-reinsert row — the same hazard
+    :func:`pq.ivf_pq_table_compact` routes around via a fresh
+    generation. The rows are written unsorted; only
+    :func:`save_bm25_index` pays the term-range sort.
 
     Valid on a tombstone-free store too (then it is exactly
     :func:`bm25_index_compact`). The **writer-stopped caveat** applies
     doubly: a checkpointed replay of any vacuumed batch — append or
     delete — can no longer overwrite its own partition."""
-    from pyspark.sql import functions as F
-
-    from ons_utils_spark.sources.store import (
-        file_manifest, promote_staged_store, repair_swap_debris,
-    )
+    from ons_utils_spark.sources.store import repair_swap_debris
 
     repair_swap_debris(store_path)
     # Checks both manifests and applies the watermark filter.
-    postings, stats = load_bm25_index_incremental(spark, store_path)
-    staging = store_path.rstrip("/") + ".__vacuum_tmp"
-    (
-        postings.withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{staging}/postings")
-    )
-    (
-        stats.withColumn(
-            "postings_files", F.lit(file_manifest(f"{staging}/postings"))
-        )
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{staging}/stats")
-    )
-    promote_staged_store(store_path, staging, what="bm25_index_vacuum")
+    _write_bm25_store(*load_bm25_index(spark, store_path), store_path)
 
 
 def chunk_documents(

@@ -8766,7 +8766,7 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Tombstone deletes on the incremental BM25 index "
     "(operators/text.py::bm25_index_delete + the watermark filter and "
-    "delete manifest check in load_bm25_index_incremental): the store "
+    "delete manifest check in load_bm25_index): the store "
     "grows as base (doc_id < 200) + one appended batch, then one delete "
     "batch kills a base doc (94), an appended doc (355), and doc 83 — "
     "which is RE-APPENDED at a later batch_id and must score again "
@@ -8801,7 +8801,7 @@ def q_bm25_indexed_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.where(F.col("doc_id") == 83), "doc_id", "text", tmp,
             batch_id=2,
         )
-        lp, ls = _text.load_bm25_index_incremental(spark, tmp)
+        lp, ls = _text.load_bm25_index(spark, tmp)
         # Materialize the pruned, tombstone-filtered read off the temp
         # store before it is removed (the q_bm25_indexed pattern — the
         # checkpoint runs the scorer's own In-term predicate, so what
@@ -8911,7 +8911,7 @@ def q_bm25_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         bm25_index_apply_cdc(changes, tmp, "doc_id", "text", batch_id=0)
-        lp, ls = _text.load_bm25_index_incremental(spark, tmp)
+        lp, ls = _text.load_bm25_index(spark, tmp)
         lp = _text._filter_postings_terms(
             lp, [t.lower() for t in _BM25_IDX_TERMS]
         ).localCheckpoint(eager=True)
@@ -9697,9 +9697,7 @@ def q_rag_ingest_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 more.select("vec_id", "chunk_text"),
                 "vec_id", "chunk_text", f"{tmp}/bm25", batch_id=1,
             )
-            lp, ls = _text.load_bm25_index_incremental(
-                spark, f"{tmp}/bm25"
-            )
+            lp, ls = _text.load_bm25_index(spark, f"{tmp}/bm25")
             union_vocab = sorted({
                 t.lower() for _, terms in _RAG_QUERIES for t in terms
             })

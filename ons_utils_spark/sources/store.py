@@ -43,17 +43,21 @@ generation record is the pre-generation PQ layout only if
 ``coded_<fingerprint>`` exists — which loads, but refuses every other
 verb — and otherwise an index saved alone, which is not a table.
 
-**BM25 commit manifest.** The BM25 store (``operators/text.py``) keeps
-its ``postings/``, ``stats/`` and ``tombstones/`` ``batch_id`` layout
-and makes each stats row the commit record for the files it pairs
-with: a writer lands its postings (or tombstone) files first, lists
-them (:func:`file_manifest` — relative path → byte size), and writes
-the stats row carrying that listing last. Spark names every part file
-with a per-write UUID, so a rewrite of the same rows gets new names; a
-loader compares each substore's listing with the union of the recorded
-manifests (:func:`check_file_manifest`) on the driver, in 0 jobs, and
-any unrecorded, missing or resized file — a write torn between its
-two halves, or an edit behind the store's back — raises.
+**BM25 commit manifest.** The BM25 store (``operators/text.py``) has
+one layout: ``postings/``, ``stats/`` and ``tombstones/`` under
+``batch_id`` partitions, whether it was saved whole (the sentinel
+``batch_id=-1``) or grown by appends. Each stats row is the commit
+record for the files it pairs with: a writer lands its postings (or
+tombstone) files first, lists them (:func:`file_manifest` — relative
+path → byte size), and writes the stats row carrying that listing last.
+Spark names every part file with a per-write UUID, so a rewrite of the
+same rows gets new names; a loader compares each substore's listing
+with the union of the recorded manifests (:func:`check_file_manifest`)
+on the driver, in 0 jobs, and any unrecorded, missing, resized or
+doubly-recorded file — a write torn between its two halves, a copied
+stats row, or an edit behind the store's back — raises. Whole-store
+writes (a save, a vacuum) stage the store next to the live one and
+promote it with :func:`promote_staged_store`.
 
 LLM-data-pipeline extension (no reference twin — the reference's I/O
 surface stops at CSV/Hive reads, SURVEY.md §2.1).
@@ -175,14 +179,27 @@ def check_file_manifest(
     ``path`` equals the union of the ``recorded`` :func:`file_manifest`
     texts (``None`` entries record nothing): an unrecorded file is a
     write whose commit record never landed, and a missing or resized
-    one a record whose files were replaced or lost. Driver listing
-    only, no Spark job."""
+    one a record whose files were replaced or lost. A file recorded by
+    more than one stats row also raises — the row was copied, and its
+    statistics would be summed twice. Driver listing only, no Spark
+    job."""
     import json
+    from collections import Counter
 
     want: dict = {}
+    times: Counter = Counter()
     for text in recorded:
         if text is not None:
-            want.update(json.loads(text))
+            files = json.loads(text)
+            want.update(files)
+            times.update(files.keys())
+    doubled = sorted(k for k, n in times.items() if n > 1)
+    if doubled:
+        raise ValueError(
+            f"{path!r}: file {doubled[0]!r} is recorded by "
+            f"{times[doubled[0]]} stats rows — expected exactly 1; a "
+            "copied commit record would count its rows twice"
+        )
     have = json.loads(file_manifest(path))
     if have == want:
         return
@@ -479,10 +496,11 @@ def compact_store(
 def repair_swap_debris(path: str) -> None:
     """Repair the debris a crashed rename-aside promotion may have left
     at ``path`` — run on ENTRY by every operation that promotes a
-    staged rewrite (:func:`compact_store`, the BM25 vacuum): aside
-    present + live missing ⇒ the crash hit between the two renames,
-    restore the aside; both present ⇒ the aside is superseded debris,
-    delete it."""
+    staged rewrite (:func:`compact_store`, the BM25 save and vacuum,
+    ``sources/write.py``'s ``compact_files`` and ``merge_overwrite``):
+    aside present + live missing ⇒ the crash hit between the two
+    renames, restore the aside; both present ⇒ the aside is superseded
+    debris, delete it."""
     from pyarrow import fs as pafs
 
     filesystem, dst = _resolve_fs(path)
@@ -498,11 +516,17 @@ def promote_staged_store(path: str, staging: str, what: str) -> None:
     """Swap a FULLY-WRITTEN staged directory in place of the live one
     via rename-aside (live → ``.__old``, staged → live, drop the
     aside) — two metadata ops, crash-recoverable at every window by
-    :func:`repair_swap_debris`, rollback on a failed promotion. The
-    caller must have finished writing ``staging`` and must not hold
-    lazy plans over ``path`` (checkpoint first)."""
+    :func:`repair_swap_debris`, rollback on a failed promotion. With no
+    live directory the staged one just moves into place. The caller
+    must have finished writing ``staging`` and must not hold lazy plans
+    over ``path`` (checkpoint first)."""
+    from pyarrow import fs as pafs
+
     filesystem, dst = _resolve_fs(path)
     _, src = _resolve_fs(staging)
+    if filesystem.get_file_info(dst).type == pafs.FileType.NotFound:
+        filesystem.move(src, dst)
+        return
     aside = dst.rstrip("/") + ".__old"
     filesystem.move(dst, aside)
     try:
@@ -533,7 +557,36 @@ def dir_exists(path: str) -> bool:
     )
 
 
-def append_tombstones(ids: SparkDF, path: str, batch_id: int) -> None:
+def tombstone_ids(spark, ids: Sequence, id_type) -> SparkDF:
+    """Check a delete batch on the driver and return it as a local
+    one-column ``id`` frame in the store's ``id_type`` (so the
+    watermark equi-join never casts) — the one id check both deletes
+    run, before anything is read or written. An empty batch, a NULL id
+    (a NULL never equi-joins, so the delete would silently not happen)
+    and a duplicate id raise. Builds no Spark job."""
+    from pyspark.sql.types import StructField, StructType
+
+    from ons_utils_spark.functions.localrel import local_rows_df
+
+    ids = list(ids)
+    if not ids:
+        raise ValueError("delete batch is empty — nothing to tombstone")
+    if any(x is None for x in ids):
+        raise ValueError(
+            "delete batch holds a NULL id — a NULL never equi-joins, "
+            "so the delete would silently not happen"
+        )
+    if len(set(ids)) != len(ids):
+        raise ValueError("duplicate ids in delete batch")
+    return local_rows_df(
+        spark, [(x,) for x in ids],
+        StructType([StructField("id", id_type, nullable=False)]),
+    )
+
+
+def append_tombstones(
+    spark, ids: Sequence, path: str, batch_id: int, id_type
+) -> None:
     """Record one delete batch in a store's tombstone substore.
 
     Tombstones are the delete half of the append-only contract: a row
@@ -541,7 +594,9 @@ def append_tombstones(ids: SparkDF, path: str, batch_id: int) -> None:
     written at or before this point is dead*. Loaders fold them into a
     per-id high-water mark (:func:`load_tombstone_watermarks`) and
     filter with :func:`apply_tombstones`; compaction/vacuum applies
-    them physically and clears the substore.
+    them physically and clears the substore. ``ids`` are checked on the
+    driver and written in ``id_type`` (:func:`tombstone_ids`), so the
+    write is the only Spark job.
 
     ``batch_id`` is REQUIRED and non-negative — a delete only means
     something relative to an ordering of appends, and the sentinel
@@ -563,18 +618,9 @@ def append_tombstones(ids: SparkDF, path: str, batch_id: int) -> None:
             "Pass a value >= the newest data batch the delete should "
             "cover (0 for a store that was only base-saved)."
         )
-    if ids.columns != ["id"]:
-        raise ValueError(
-            f"tombstone batch must be exactly one 'id' column (got "
-            f"{ids.columns}) — project before appending"
-        )
-    if ids.where(F.col("id").isNull()).limit(1).count():
-        raise ValueError(
-            "tombstone batch holds a NULL id — a NULL never equi-joins, "
-            "so the delete would silently not happen; fix the batch "
-            "upstream"
-        )
-    partitioned_delta_append(ids, path, batch_id=int(batch_id))
+    partitioned_delta_append(
+        tombstone_ids(spark, ids, id_type), path, batch_id=int(batch_id)
+    )
 
 
 def load_tombstone_watermarks(
@@ -963,32 +1009,15 @@ def coded_table_delete(
     equi-join never casts. Deleting an id the store never held is a
     no-op filter; an append and a delete must not share a
     ``batch_id``."""
-    from pyspark.sql.types import StructField, StructType
-
-    from ons_utils_spark.functions.localrel import local_rows_df
-
     _, generation = coded_table_generation(
         codec, spark, store_path,
         refuse_legacy="its rows carry no order for the tombstone "
         "watermark to compare against",
     )
-    ids = list(ids)
-    if not ids:
-        raise ValueError("delete batch is empty — nothing to tombstone")
-    if any(x is None for x in ids):
-        raise ValueError(
-            "delete batch holds a NULL id — a NULL never equi-joins, "
-            "so the delete would silently not happen"
-        )
-    if len(set(ids)) != len(ids):
-        raise ValueError("duplicate ids in delete batch")
     id_type = footer_schema(f"{store_path}/coded_{generation}")["id"].dataType
-    ids_df = local_rows_df(
-        spark, [(x,) for x in ids],
-        StructType([StructField("id", id_type, nullable=False)]),
-    )
     append_tombstones(
-        ids_df, _tombstones_path(store_path, generation), batch_id
+        spark, ids, _tombstones_path(store_path, generation), batch_id,
+        id_type,
     )
 
 

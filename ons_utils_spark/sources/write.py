@@ -241,16 +241,22 @@ def merge_overwrite(
     path (``<target>.__merge_tmp``) while the original target stays intact —
     the write's lineage reads the live target, so any executor/job failure
     during it just aborts, losing nothing. Only after that write succeeds is
-    the target swapped: ``delete(target)`` then ``move(staging, target)``.
-    The swap is NOT atomic — between the delete and the move the target path
-    is briefly empty, and a crash in that window requires a manual recovery
-    (move ``<target>.__merge_tmp`` into place; the staged snapshot is
-    durable on disk the whole time). Rename is also not atomic across
-    stores, and object stores don't rename at all — which is exactly why
-    production should use a table format with ACID MERGE
+    the snapshot promoted by rename-aside
+    (``sources/store.py::promote_staged_store``: target → ``.__old``,
+    staging → target, drop the aside), so a crash at any point leaves the
+    original or the merged table on disk, and the next call repairs the
+    debris on entry (``repair_swap_debris``). Readers racing the two
+    renames can still see a briefly missing path; rename is also not
+    atomic across stores, and object stores don't rename at all — which is
+    exactly why production should use a table format with ACID MERGE
     (Delta/Iceberg/Hudi) instead of this plain-parquet pattern; the API
     shape is the same.
     """
+    from ons_utils_spark.sources.store import (
+        promote_staged_store, repair_swap_debris,
+    )
+
+    repair_swap_debris(target_path)
     keys = list_convert(key_cols)
     target = spark.read.format(fmt).load(target_path)
     kept = target.join(updates.select(*keys).distinct(), keys, "left_anti")
@@ -258,22 +264,7 @@ def merge_overwrite(
 
     staging_path = target_path.rstrip("/") + ".__merge_tmp"
     merged.write.format(fmt).mode("overwrite").save(staging_path)
-
-    # Swap: delete target, promote staging — via pyarrow.fs (public API;
-    # SURVEY §1.1 bars the spark._jvm/_jsc escape hatch). _resolve_fs
-    # resolves local paths, file://, s3(a)://, hdfs:// alike.
-    from ons_utils_spark.sources.store import _resolve_fs
-
-    filesystem, dst = _resolve_fs(target_path)
-    _, src = _resolve_fs(staging_path)
-    filesystem.delete_dir(dst)
-    try:
-        filesystem.move(src, dst)
-    except Exception as exc:
-        raise IOError(
-            f"merge_overwrite: staged snapshot written to {staging_path} "
-            f"but promoting it to {target_path} failed — recover manually"
-        ) from exc
+    promote_staged_store(target_path, staging_path, what="merge_overwrite")
 
 
 def compact_files(
@@ -288,14 +279,16 @@ def compact_files(
     thousands of tiny files per table, and at 100 TB the NameNode/listing
     pressure plus per-file open cost dominates scan time. Compaction
     reads the table once, repartitions to ``ceil(total_bytes /
-    target_mb)`` partitions, and swaps the rewrite into place with a
-    rename-aside promotion (old root → ``.__old``, staging → root,
+    target_mb)`` partitions, and swaps the rewrite into place with the
+    rename-aside promotion of ``sources/store.py``
+    (``promote_staged_store``: old root → ``.__old``, staging → root,
     delete aside): a crash mid-swap always leaves either the original or
-    the compacted table intact, and the failure path auto-rolls the
-    original back. Readers racing the two renames can still observe a
-    briefly missing path — use an ACID table format in production;
-    ``OPTIMIZE`` in Delta/Iceberg is this operation with a transaction
-    log around it.
+    the compacted table intact, the failure path auto-rolls the original
+    back, and the next run repairs crash debris first
+    (``repair_swap_debris``). Readers racing the two renames can still
+    observe a briefly missing path — use an ACID table format in
+    production; ``OPTIMIZE`` in Delta/Iceberg is this operation with a
+    transaction log around it.
 
     Sizing uses the CURRENT compressed bytes on disk, so the output files
     land near ``target_mb`` after compression without a calibration pass.
@@ -305,22 +298,16 @@ def compact_files(
 
     from pyarrow import fs as pafs
 
-    from ons_utils_spark.sources.store import _resolve_fs
+    from ons_utils_spark.sources.store import (
+        _resolve_fs, promote_staged_store, repair_swap_debris,
+    )
 
-    filesystem, root = _resolve_fs(path)
     # Recover debris from a previous crashed run FIRST — without this,
     # every later compaction wedges on the rename-target-exists error
     # (and if the crash hit between the two renames, the table path
     # itself is missing until the aside is restored).
-    old_aside = root.rstrip("/") + ".__old"
-    if filesystem.get_file_info(old_aside).type != pafs.FileType.NotFound:
-        if filesystem.get_file_info(root).type == pafs.FileType.NotFound:
-            # Crashed between the renames: the aside IS the live table.
-            filesystem.move(old_aside, root)
-        else:
-            # Crashed after promotion, before cleanup: root is the newer
-            # compacted table; the aside is superseded.
-            filesystem.delete_dir(old_aside)
+    repair_swap_debris(path)
+    filesystem, root = _resolve_fs(path)
     all_infos = filesystem.get_file_info(pafs.FileSelector(root, recursive=True))
     infos = [
         i
@@ -353,28 +340,7 @@ def compact_files(
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.save(staging)
-
-    _, src = _resolve_fs(staging)
-    # Promote via rename-aside, NOT delete-then-move: deleting the live
-    # directory first leaves an empty table path for the whole staging
-    # move if the process dies in between — and compaction is routine
-    # maintenance, so that window WILL be hit. Renaming the old root
-    # aside is metadata-only (same cost), the live data survives any
-    # crash, and the failure path can roll the original back.
-    filesystem.move(root, old_aside)
-    try:
-        filesystem.move(src, root)
-    except Exception as exc:
-        try:
-            filesystem.move(old_aside, root)
-            recovered = "original table restored"
-        except Exception:  # noqa: BLE001
-            recovered = f"original preserved at {old_aside} — recover manually"
-        raise IOError(
-            f"compact_files: compacted snapshot at {staging} but promoting "
-            f"it to {path} failed — {recovered}"
-        ) from exc
-    filesystem.delete_dir(old_aside)
+    promote_staged_store(path, staging, what="compact_files")
     after = [
         i
         for i in filesystem.get_file_info(pafs.FileSelector(root, recursive=True))

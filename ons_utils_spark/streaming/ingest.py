@@ -301,7 +301,7 @@ def bm25_index_ingest_writer(
     stream — the retrieval-serving half of ``operators/text.py``'s
     index family: as document shards land, each micro-batch's postings
     + stats deltas append to the durable store, and batch retrieval
-    (``load_bm25_index_incremental`` → ``bm25_topk_indexed``) serves
+    (``load_bm25_index`` → ``bm25_topk_indexed``) serves
     query profiles against EVERYTHING ingested so far without ever
     re-tokenizing the corpus.
 

@@ -20,6 +20,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from ons_utils_spark.operators import pq as PQ
 from ons_utils_spark.operators import similarity as SIM
@@ -265,8 +266,9 @@ class TestBm25IndexDelete:
         """Crash between the tombstone write and the stats delta: the
         loader's tombstone manifest check must fail loudly, not serve filtered
         postings against undecremented stats."""
-        ids_df = spark.createDataFrame([(3,)], "id long")
-        append_tombstones(ids_df, bm25_store + "/tombstones", 1)
+        append_tombstones(
+            spark, [3], bm25_store + "/tombstones", 1, LongType()
+        )
         with pytest.raises(ValueError, match="torn DELETE"):
             T.load_bm25_index_incremental(spark, bm25_store)
         # Recovery contract: re-running the delete with its batch_id
@@ -302,7 +304,7 @@ class TestBm25IndexVacuum:
         )
         T.bm25_index_vacuum(spark, bm25_store)
         assert not (tmp_path / "bm25_store" / "tombstones").exists()
-        assert not (tmp_path / "bm25_store.__vacuum_tmp").exists()
+        assert not (tmp_path / "bm25_store.__save_tmp").exists()
         p, s = T.load_bm25_index_incremental(spark, bm25_store)
         p1, s1 = _live_build(docs, [25])
         assert _rows(p, "term", "id") == _rows(p1, "term", "id")
@@ -342,20 +344,17 @@ class TestBm25IndexVacuum:
 
 class TestTombstoneHelpers:
     def test_append_requires_ordered_batch_id(self, spark, tmp_path):
-        ids = spark.createDataFrame([(1,)], "id long")
         for bad in (None, -1):
             with pytest.raises(ValueError, match="non-negative batch_id"):
-                append_tombstones(ids, str(tmp_path / "t"), bad)
-
-    def test_append_requires_exactly_one_id_column(self, spark, tmp_path):
-        df = spark.createDataFrame([(1, 2)], "id long, other long")
-        with pytest.raises(ValueError, match="one 'id' column"):
-            append_tombstones(df, str(tmp_path / "t"), 0)
+                append_tombstones(
+                    spark, [1], str(tmp_path / "t"), bad, LongType()
+                )
 
     def test_append_refuses_null_ids(self, spark, tmp_path):
-        df = spark.createDataFrame([(None,)], "id long")
         with pytest.raises(ValueError, match="NULL id"):
-            append_tombstones(df, str(tmp_path / "t"), 0)
+            append_tombstones(
+                spark, [None], str(tmp_path / "t"), 0, LongType()
+            )
 
     def test_watermarks_none_without_a_store(self, spark, tmp_path):
         assert load_tombstone_watermarks(
@@ -363,8 +362,7 @@ class TestTombstoneHelpers:
         ) is None
 
     def test_apply_needs_the_batch_column(self, spark, tmp_path):
-        ids = spark.createDataFrame([(1,)], "id long")
-        append_tombstones(ids, str(tmp_path / "t"), 3)
+        append_tombstones(spark, [1], str(tmp_path / "t"), 3, LongType())
         wm = load_tombstone_watermarks(spark, str(tmp_path / "t"))
         rows = spark.createDataFrame([(1, "x")], "id long, v string")
         with pytest.raises(ValueError, match="batch_id column"):
@@ -373,8 +371,7 @@ class TestTombstoneHelpers:
     def test_watermark_kills_at_or_before_and_spares_after(
         self, spark, tmp_path
     ):
-        ids = spark.createDataFrame([(1,)], "id long")
-        append_tombstones(ids, str(tmp_path / "t"), 3)
+        append_tombstones(spark, [1], str(tmp_path / "t"), 3, LongType())
         wm = load_tombstone_watermarks(spark, str(tmp_path / "t"))
         rows = spark.createDataFrame(
             [(1, -1), (1, 3), (1, 4), (2, -1)],

@@ -152,6 +152,37 @@ class TestCompactFiles:
         ) == list(range(500))
         assert not os.path.exists(path + ".__old")
 
+    def test_crash_between_renames_keeps_the_table(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """compact_files promotes through the shared rename-aside pair in
+        sources/store.py: a crash after the live table moved aside leaves
+        only the aside, and the next run restores it and compacts."""
+        import os
+
+        from ons_utils_spark.sources import store as S
+        from ons_utils_spark.sources.write import compact_files
+
+        path = str(tmp_path / "t")
+        spark.range(1000).repartition(4).write.parquet(path)
+
+        def crash(live, staging, what):
+            filesystem, dst = S._resolve_fs(live)
+            filesystem.move(dst, dst + ".__old")
+            raise OSError("injected crash between the renames")
+
+        with monkeypatch.context() as m:
+            m.setattr(S, "promote_staged_store", crash)
+            with pytest.raises(OSError, match="injected crash"):
+                compact_files(spark, path, target_mb=1024)
+        assert not os.path.exists(path)
+        stats = compact_files(spark, path, target_mb=1024)
+        assert stats["files_after"] == 1
+        assert sorted(
+            r["id"] for r in spark.read.parquet(path).collect()
+        ) == list(range(1000))
+        assert not os.path.exists(path + ".__old")
+
 
 class TestHistogramHalfBounds:
     def test_supplied_lo_is_respected(self, spark):

@@ -122,6 +122,36 @@ class TestMergeOverwrite:
         merge_overwrite(spark, path, updates, "id")
         assert spark.read.parquet(path).count() == 3
 
+    def test_crash_between_renames_keeps_the_table(
+        self, spark, df, tmp_path, monkeypatch
+    ):
+        """The merged snapshot is promoted by rename-aside: a crash after
+        the live table moved aside loses nothing, and the next merge
+        restores it before reading."""
+        from ons_utils_spark.sources import store as S
+        from ons_utils_spark.sources.write import merge_overwrite
+
+        path = str(tmp_path / "t")
+        write_table(df, path)
+        updates = spark.createDataFrame(
+            [(2, "a", 99.0)], "id bigint, grp string, val double"
+        )
+
+        def crash(live, staging, what):
+            filesystem, dst = S._resolve_fs(live)
+            filesystem.move(dst, dst + ".__old")
+            raise OSError("injected crash between the renames")
+
+        with monkeypatch.context() as m:
+            m.setattr(S, "promote_staged_store", crash)
+            with pytest.raises(OSError, match="injected crash"):
+                merge_overwrite(spark, path, updates, "id")
+        assert not os.path.exists(path)
+        merge_overwrite(spark, path, updates, "id")
+        back = {r["id"]: r["val"] for r in spark.read.parquet(path).collect()}
+        assert back == {1: 1.5, 2: 99.0, 3: 3.5}
+        assert not os.path.exists(path + ".__old")
+
 
 class TestZorderWrite:
     def test_zorder_value_interleaves_bits(self, spark):

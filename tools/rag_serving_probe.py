@@ -88,7 +88,7 @@ def main() -> None:
         serve_times = []
         for _ in range(k):
             t0 = time.perf_counter()
-            lp, ls = _text.load_bm25_index_incremental(spark, f"{tmp}/bm25")
+            lp, ls = _text.load_bm25_index(spark, f"{tmp}/bm25")
             union_vocab = sorted({
                 t.lower() for _, terms in _RAG_QUERIES for t in terms
             })
