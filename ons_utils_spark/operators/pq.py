@@ -1421,10 +1421,7 @@ def _batch_driver_stage(Q, coarse, codebooks, n_probe, by_residual):
     import numpy as np
 
     CC = np.asarray(coarse, dtype=np.float64)
-    dist = (
-        _fold_sq(Q)[:, None] + _fold_sq(CC)[None, :]
-    ) - 2.0 * _fold_dots(Q, CC)
-    probe_mat = np.argsort(dist, axis=1, kind="stable")[:, :n_probe]
+    probe_mat = _probe_mat(Q, coarse, n_probe)
     cb_arrs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
     cc_subs = [_fold_sq(cb) for cb in cb_arrs]
     m = len(cb_arrs)
@@ -1476,15 +1473,9 @@ def ivf_pq_batch_topk(
     memory is capped (``_BATCH_LUT_MAX_BYTES``): past it the call
     raises a sized error telling the caller to chunk the query table —
     chunks compose exactly because per-query results are independent.
-    The scan reads the UNION of all queries' probed lists (a
-    pushdown-able ``__list IN (...)`` — partition pruning still holds
-    on a ``__list``-partitioned table), and one Arrow pass scores each
-    row against exactly the queries probing its list, in the same
-    sequential IEEE add order as the literal fold. Per-query probe
-    membership ships as ``n_q × n_probe`` sorted lists + positions
-    (searchsorted lookup per batch), never as an ``n_q × n_lists``
-    dense matrix — the closure stays bounded by the probe workload at
-    any ``n_lists``.
+    The scan (:func:`_probed_scores`, shared with IVF×SQ) reads the
+    union of the probed lists and scores each row against exactly the
+    queries probing its list, in the literal fold's IEEE add order.
 
     Top-k is exact and scalable: scores round Spark-side (the same
     ``F.round``), then a TWO-PHASE per-query window — phase 1 ranks
@@ -1495,16 +1486,22 @@ def ivf_pq_batch_topk(
     the single-query ``orderBy().limit()``. Per query, results are
     bit-identical to :func:`ivf_pq_query` (pinned in tests).
     """
-    import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    _check_residual_flag(coded, index.by_residual)
     rows = queries.select(query_id_col, vec_col).collect()
     _check_query_ids([r[0] for r in rows], query_id_col)
-    qids = [r[0] for r in rows]
-    m = index.m
-    dim = index.dim
-    cbs = index.codebooks
+    scored = _ivf_pq_batch_scored(
+        coded, index, rows, queries.schema[query_id_col].dataType,
+        vec_col=vec_col, n_probe=n_probe,
+    )
+    return _two_phase_batch_topk(scored, topk, query_id_col)
+
+
+def _ivf_pq_batch_scored(coded, index, rows, qid_type, vec_col="embedding",
+                         n_probe=2):
+    """:func:`ivf_pq_batch_topk` before its top-``k``: every probed
+    ``(qid, id, adc_dist)`` of the driver-collected query ``rows``
+    (``qid`` first, ``vec_col`` by name; ``qid_type`` the id's Spark
+    type) — the IVF×PQ codec's ``batch_scored``."""
+    _check_residual_flag(coded, index.by_residual)
     coarse = index.coarse_centroids
     if not coarse:
         raise ValueError(
@@ -1513,12 +1510,11 @@ def ivf_pq_batch_topk(
         )
     n_q = len(rows)
     by_residual = index.by_residual
-    k = index.k
     lut_bytes = n_q * _per_query_lut_bytes(index, n_probe)
     if lut_bytes > _BATCH_LUT_MAX_BYTES:
         raise ValueError(
             f"batch LUTs for {n_q} queries at this geometry "
-            f"(m={m}, k={k}"
+            f"(m={index.m}, k={index.k}"
             + (
                 f", n_probe={min(int(n_probe), len(coarse))} residual"
                 if by_residual else ""
@@ -1529,29 +1525,38 @@ def ivf_pq_batch_topk(
             "per-query results are independent, so chunks compose "
             "exactly."
         )
+    probe_mat, lut_all = _batch_driver_stage(
+        _query_matrix(rows, vec_col, index), coarse, index.codebooks,
+        n_probe, by_residual,
+    )
+    return _probed_scores(
+        coded, rows, qid_type, probe_mat, index.round_dp, lambda C: C,
+        lambda C, qi, mask, pos: _np_adc_fold(
+            lut_all[qi], C[mask], pos if by_residual else None
+        ),
+    )
+
+
+def _query_matrix(rows, vec_col: str, index):
+    """The batch scorers' ``(n_q, dim)`` float64 query matrix, rotated
+    when the index carries a rotation. A NULL vector or element, or a
+    wrong dim, raises with ITS query id (contract parity with the BM25
+    batch validation) — the O(n_q · dim) loop stays interpreted for
+    that attribution; the quadratic probe and LUT arithmetic is
+    vectorized (:func:`_batch_driver_stage`)."""
+    import numpy as np
+
     for r in rows:
         x = r[vec_col]
         if x is None or any(v is None for v in x):
-            # Contract parity with bm25_batch_topk's query validation —
-            # a malformed query row raises with ITS id, not an opaque
-            # float(None) traceback.
             raise ValueError(
                 f"query {r[0]!r} has a NULL {vec_col!r} vector or a "
                 "NULL element — every query needs a complete vector"
             )
-        if len(x) != dim:
+        if len(x) != index.dim:
             raise ValueError(
-                f"query {r[0]!r} dim {len(x)} != index dim {dim}"
+                f"query {r[0]!r} dim {len(x)} != index dim {index.dim}"
             )
-    # Vectorized probe selection + LUT construction — the dimension-
-    # major folds (_fold_dots/_fold_sq) reproduce _py_dot's sequential
-    # IEEE order exactly, so probe choices and LUT values are
-    # bit-identical to the single-query path (pinned in tests); the
-    # stable argsort reproduces sorted((dist, j))'s low-id tie-break.
-    # The O(n_q · dim) validation loop above stays interpreted for
-    # per-qid error attribution — it is linear, not the quadratic
-    # n_q × n_lists / n_q × n_probe × m × k arithmetic that made the
-    # interpreted driver stage minutes at 10k+ queries.
     Q = np.asarray(
         [[float(v) for v in r[vec_col]] for r in rows], dtype=np.float64
     )
@@ -1561,26 +1566,47 @@ def ivf_pq_batch_topk(
         # BLAS kernel, and batch ≡ singles is pinned bit-exact.
         R = np.asarray(index.rotation, dtype=np.float64)
         Q = np.stack([R @ Q[i] for i in range(Q.shape[0])])
-    probe_mat, lut_all = _batch_driver_stage(
-        Q, coarse, cbs, n_probe, by_residual
-    )
+    return Q
+
+
+def _probe_mat(Q, coarse, n_probe):
+    """Each query's ``n_probe`` nearest coarse lists (``(n_q, n_probe)``):
+    the dimension-major folds reproduce ``_py_dot``'s sequential IEEE
+    order, and the stable argsort ``sorted((dist, j))``'s low-id
+    tie-break — bit-identical probe choices to the single-query path."""
+    import numpy as np
+
+    CC = np.asarray(coarse, dtype=np.float64)
+    dist = (
+        _fold_sq(Q)[:, None] + _fold_sq(CC)[None, :]
+    ) - 2.0 * _fold_dots(Q, CC)
+    return np.argsort(dist, axis=1, kind="stable")[:, :n_probe]
+
+
+def _probed_scores(coded, rows, qid_type, probe_mat, round_dp, prepare,
+                   score):
+    """The batch ANN scan both codecs share → ``(qid, id, adc_dist)``
+    for every (query, row of a list it probes). The scan reads the
+    UNION of the probed lists (a pushdown-able ``__list IN (...)``);
+    one Arrow pass turns each batch's codes into ``prepare(C)`` once
+    and scores, per query, the rows whose list it probes:
+    ``score(prepared, qi, mask, pos)`` with ``pos`` each row's probe
+    position. Membership ships as per-query SORTED probe lists plus
+    their positions (a searchsorted per batch and query), never an
+    ``n_q × n_lists`` matrix. The distance rounds Spark-side."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    qids = [r[0] for r in rows]
     np_eff = probe_mat.shape[1]
     union_lists = sorted(int(v) for v in np.unique(probe_mat))
     filtered = coded.where(F.col("__list").isin(union_lists))
-    # Row→query probe membership ships as per-query SORTED probe lists
-    # plus their positions in probe order (for residual LUT indexing):
-    # a searchsorted per (batch, query) replaces both the interpreted
-    # per-row membership test (measured bottleneck) and the dense
-    # n_q × n_lists position matrix it was first replaced with (a
-    # multi-GB closure at FAISS-scale n_lists).
     probe_argsort = np.argsort(probe_mat, axis=1, kind="stable").astype(
         np.int64
     )
     probe_sorted = np.take_along_axis(probe_mat, probe_argsort, axis=1)
-
-    qid_field = queries.schema[query_id_col].dataType
     schema = StructType([
-        StructField("qid", qid_field),
+        StructField("qid", qid_type),
         StructField("id", coded.schema["id"].dataType),
         StructField("__adc_sum", DoubleType()),
     ])
@@ -1589,29 +1615,22 @@ def ivf_pq_batch_topk(
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            C = _codes_matrix(pdf["codes"], pdf["id"])
+            prepared = prepare(_codes_matrix(pdf["codes"], pdf["id"]))
             lists = pdf["__list"].to_numpy(dtype=np.int64)
             ids = pdf["id"].to_numpy()
             out_qid, out_id, out_s = [], [], []
-            for qi in range(n_q):
+            for qi, qid in enumerate(qids):
                 sl = probe_sorted[qi]
-                si = np.minimum(
-                    np.searchsorted(sl, lists), np_eff - 1
-                )
+                si = np.minimum(np.searchsorted(sl, lists), np_eff - 1)
                 mask = sl[si] == lists
                 if not mask.any():
                     continue
-                Cm = C[mask]
-                pos = (
-                    probe_argsort[qi][si[mask]] if by_residual else None
-                )
-                s = _np_adc_fold(lut_all[qi], Cm, pos)
-                out_qid.append(np.full(int(mask.sum()), qids[qi]))
+                pos = probe_argsort[qi][si[mask]]
+                out_qid.append(np.full(int(mask.sum()), qid))
                 out_id.append(ids[mask])
-                out_s.append(s)
+                out_s.append(score(prepared, qi, mask, pos))
             if not out_qid:
                 continue
             yield pd.DataFrame({
@@ -1620,12 +1639,9 @@ def ivf_pq_batch_topk(
                 "__adc_sum": np.concatenate(out_s),
             })
 
-    scored = filtered.mapInPandas(gen, schema).select(
-        "qid", "id", F.round(F.col("__adc_sum"), index.round_dp).alias(
-            "adc_dist"
-        ),
+    return filtered.mapInPandas(gen, schema).select(
+        "qid", "id", F.round(F.col("__adc_sum"), round_dp).alias("adc_dist")
     )
-    return _two_phase_batch_topk(scored, topk, query_id_col)
 
 
 def _two_phase_batch_topk(scored, topk: int, query_id_col: str):
@@ -1635,9 +1651,11 @@ def _two_phase_batch_topk(scored, topk: int, query_id_col: str):
     the ≤ ``64·topk`` survivors per query — no single reducer ever
     sees a query's full probed-row stream, and the final (rounded
     dist, id) ordering is identical to the single-query
-    ``orderBy().limit()``. Shared by :func:`ivf_pq_batch_topk` and
-    ``similarity.ivf_sq_batch_topk`` — one copy of the
-    exactness-critical reduction."""
+    ``orderBy().limit()``. Shared by the standalone scorers
+    :func:`ivf_pq_batch_topk` and ``similarity.ivf_sq_batch_topk`` —
+    one copy of the exactness-critical reduction. The hybrid search
+    ranks its ANN candidates in its own fusion tail instead
+    (``retrieval.hybrid_batch_topk``)."""
     from pyspark.sql import Window
 
     salt = F.pmod(F.xxhash64("id"), F.lit(64))
@@ -1821,7 +1839,7 @@ PQ_CODEC = CodedTableCodec(
     save_index=save_ivf_pq_index,
     load_index_with_meta=_load_index_with_meta,
     encode=ivf_pq_encode,
-    batch_topk=ivf_pq_batch_topk,
+    batch_scored=_ivf_pq_batch_scored,
 )
 
 

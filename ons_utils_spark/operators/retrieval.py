@@ -8,19 +8,21 @@ Clarke & Büttcher, SIGIR 2009): fuse rankings by summing
 score scales (a BM25 log-idf sum vs an ADC squared distance) need no
 calibration, and a document strong in EITHER list surfaces.
 
-Scale story: fusion is k-row work. Each input is already a per-query
-top-k list (``topk × n_queries`` rows — the retrievers did the
-corpus-scale work behind their indexes), so the rank windows are over
-k-row partitions, the outer join is between k-row tables, and the
-whole fused plan is driver-trivial no matter the corpus size. The
-expensive halves (`bm25_batch_topk_indexed`, `ivf_pq_batch_topk`)
-each scan only their own pruned store.
+Scale story: fusion is k-row work behind ONE exchange. The systems'
+candidate lists are tagged with their system's index, unioned, and
+hash-partitioned by query id once; each system's rank, the RRF fold and
+the final rank all run on that partitioning — no join between lists, no
+further exchange (local work per partition, one global merge, as in
+REPOSE). `hybrid_batch_topk` sends its retrievers' pre-top-k candidates
+(BM25 per-term contributions, probed ANN distances) through the same
+exchange. The expensive halves each scan only their own pruned store.
 
 Determinism: ranks order by (score, id) — bit-reproducible given the
 retrievers' deterministic scores; the RRF sum folds the systems in
 caller order as a fixed ``coalesce(c0,0) + coalesce(c1,0) + …``
-expression (no groupBy re-association), so the fused score is
-bit-reproducible too and the DuckDB oracle replays it exactly.
+expression of per-system conditional aggregates (no groupBy sum
+re-association), so the fused score is bit-reproducible too and the
+DuckDB oracle replays it exactly.
 """
 
 from __future__ import annotations
@@ -53,10 +55,11 @@ def rrf_fuse(
     paper; it damps the head so one system's #1 cannot drown the
     other's consensus).
 
-    The systems' contributions add in CALLER ORDER as one fixed
-    expression — at two or three systems a full outer join per system
-    beats a union + groupBy sum AND keeps the float addition order
-    deterministic (a groupBy sum re-associates per partitioning).
+    The lists meet in one exchange by query id (:func:`_rrf_tail`):
+    a window ranks each ``(query, system)``, and each system's
+    contribution is a conditional aggregate per ``(query, id)``, added
+    in CALLER ORDER as one fixed expression — a deterministic float
+    addition order, where a groupBy sum would re-associate.
 
     ``weights`` (one per system, default all 1.0) is weighted RRF:
     system ``i`` contributes ``w_i / (k0 + rank)`` — the standard
@@ -65,54 +68,63 @@ def rrf_fuse(
     """
     if not ranked_lists:
         raise ValueError("ranked_lists is empty — nothing to fuse")
+    tagged = None
+    for i, (df, order_col, ascending) in enumerate(ranked_lists):
+        score = F.col(order_col)
+        none = F.lit(None).cast(df.schema[order_col].dataType)
+        part = df.select(
+            F.col(query_id_col).alias("qid"), F.col(id_col).alias("id"),
+            F.lit(i).alias("__sys"),
+            (score if ascending else none).alias("__asc"),
+            (none if ascending else score).alias("__desc"),
+        )
+        tagged = part if tagged is None else tagged.union(part)
+    return _rrf_tail(
+        tagged.repartition("qid"), len(ranked_lists), weights, k0, topk,
+        round_dp, query_id_col, id_col,
+    )
+
+
+def _rrf_tail(candidates, n_systems, weights, k0, topk, round_dp,
+              query_id_col, id_col, system_topk=None):
+    """The one fusion mechanism, over ``(qid, id, __sys, __asc,
+    __desc)`` candidates already hash-partitioned by ``qid`` (a system
+    fills one of the two score columns): rank each system by ``(__asc,
+    __desc desc, id)``, keep rank ≤ ``system_topk`` if given, fold
+    ``w_i / (k0 + rank)`` per ``(qid, id)`` in system order, round, and
+    keep each query's top ``topk`` — all on the input's partitioning."""
     if weights is None:
-        weights = [1.0] * len(ranked_lists)
-    if len(weights) != len(ranked_lists):
+        weights = [1.0] * n_systems
+    if len(weights) != n_systems:
         raise ValueError(
             f"weights has {len(weights)} entries for "
-            f"{len(ranked_lists)} ranked lists — one weight per system"
+            f"{n_systems} ranked lists — one weight per system"
         )
-    fused = None
-    for i, (df, order_col, ascending) in enumerate(ranked_lists):
-        order = (
-            F.col(order_col).asc() if ascending else F.col(order_col).desc()
-        )
-        w = Window.partitionBy(query_id_col).orderBy(
-            order, F.col(id_col).asc()
-        )
-        contrib = (
-            df.select(query_id_col, id_col, order_col)
-            .withColumn("__r", F.row_number().over(w))
-            .select(
-                query_id_col,
-                id_col,
-                (
-                    F.lit(float(weights[i]))
-                    / (F.lit(int(k0)) + F.col("__r"))
-                ).alias(f"__c{i}"),
-            )
-        )
-        fused = (
-            contrib
-            if fused is None
-            else fused.join(contrib, [query_id_col, id_col], "full_outer")
-        )
-    rrf = None
-    for i in range(len(ranked_lists)):
-        term = F.coalesce(F.col(f"__c{i}"), F.lit(0.0))
-        rrf = term if rrf is None else rrf + term
-    scored = fused.select(
-        query_id_col, id_col, F.round(rrf, round_dp).alias("rrf")
+    w = Window.partitionBy("qid", "__sys").orderBy(
+        F.col("__asc").asc(), F.col("__desc").desc(), F.col("id").asc()
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("rrf").desc(), F.col(id_col).asc()
+    ranked = candidates.withColumn("__r", F.row_number().over(w))
+    if system_topk is not None:
+        ranked = ranked.where(F.col("__r") <= system_topk)
+    rrf = None
+    for i, weight in enumerate(weights):
+        term = F.coalesce(F.max(F.when(
+            F.col("__sys") == i,
+            F.lit(float(weight)) / (F.lit(int(k0)) + F.col("__r")),
+        )), F.lit(0.0))
+        rrf = term if rrf is None else rrf + term
+    scored = ranked.groupBy("qid", "id").agg(
+        F.round(rrf, round_dp).alias("rrf")
+    )
+    w2 = Window.partitionBy("qid").orderBy(
+        F.col("rrf").desc(), F.col("id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w2))
         .where(F.col("rank") <= topk)
         .select(
-            query_id_col, id_col, "rrf",
-            F.col("rank").cast("int").alias("rank"),
+            F.col("qid").alias(query_id_col), F.col("id").alias(id_col),
+            "rrf", F.col("rank").cast("int").alias("rank"),
         )
     )
 
@@ -240,40 +252,49 @@ def hybrid_batch_topk(
     RRF → ``(query_id, id, rrf, rank)`` — both serving stores in one
     query: each row of ``queries`` carries a term profile
     (``terms_col``) AND an embedding (``vec_col``); the BM25 inverted
-    index answers the lexical half (`bm25_batch_topk_indexed` — pruned
-    postings read, no corpus scan) and the ANN serving table the ANN
-    half. ``index.codec.batch_topk`` scores it: `ivf_pq_batch_topk`
-    for an :class:`pq.IvfPqIndex` (union-of-probes pruned scan, one
-    Arrow pass), `ivf_sq_batch_topk` for a :class:`similarity.SqIndex`
-    (same shape, grid decode instead of LUTs) — RRF is rank-space, so the
-    fusion is codec-agnostic by construction and the serving matrix's
-    two families are interchangeable here. Each retriever returns its
-    ``retriever_topk`` per query; fusion is k-row work (module
-    docstring). The lexical list ranks by (bm25 desc, id), the ANN
-    list by (adc_dist asc, id), and the RRF sum folds lexical-then-ANN
-    — all deterministic, oracle-replayable. ``weights`` is
-    ``(w_lexical, w_ann)`` for weighted RRF (see :func:`rrf_fuse`);
-    ``None`` = unweighted.
-    """
-    from ons_utils_spark.operators.text import bm25_batch_topk_indexed
+    index answers the lexical half (no corpus scan) and the ANN serving
+    table the ANN half, scored by ``index.codec.batch_scored`` (the
+    pre-top-k form of `ivf_pq_batch_topk` or `ivf_sq_batch_topk`) — RRF
+    is rank-space, so the fusion is codec-agnostic by construction.
 
-    lex = bm25_batch_topk_indexed(
-        postings, stats, queries.select(query_id_col, terms_col),
-        query_id_col=query_id_col, terms_col=terms_col,
-        topk=retriever_topk, k1=k1, b=b, round_dp=round_dp,
+    The query table is driver-sized (the ANN contract) and collected
+    once, terms lowered by Spark: terms and ids are checked on the
+    driver before any other job. Both retrievers' candidates meet in
+    one exchange by query id, after which the exact BM25 fold, each
+    system's rank (lexical by (bm25 desc, id), ANN by (adc_dist asc,
+    id), each kept to ``retriever_topk``), the lexical-then-ANN RRF
+    fold and the final rank run with no further exchange
+    (:func:`_rrf_tail`). Rows equal :func:`rrf_fuse` over
+    `bm25_batch_topk_indexed` and the codec's standalone batch scorer.
+    ``weights`` is ``(w_lexical, w_ann)`` for weighted RRF (see
+    :func:`rrf_fuse`); ``None`` = unweighted.
+    """
+    from ons_utils_spark.operators.pq import _check_query_ids
+    from ons_utils_spark.operators.text import (
+        _bm25_query_contribs, _bm25_sum,
     )
-    if query_id_col != "query_id":
-        # The BM25 batch scorers emit a fixed "query_id" output column
-        # whatever the input name; realign so rrf_fuse's join keys and
-        # the ANN half (which echoes the caller's name) agree.
-        lex = lex.withColumnRenamed("query_id", query_id_col)
-    ann = index.codec.batch_topk(
-        coded, index, queries.select(query_id_col, vec_col),
-        query_id_col=query_id_col, vec_col=vec_col,
-        n_probe=n_probe, topk=retriever_topk,
+
+    rows = queries.select(
+        query_id_col, vec_col,
+        F.transform(terms_col, F.lower).alias("__terms"),
+    ).collect()
+    qid_type = queries.schema[query_id_col].dataType
+    lex = _bm25_query_contribs(
+        postings, stats, [(r[0], r["__terms"]) for r in rows], qid_type,
+        terms_col, k1, b,
     )
-    return rrf_fuse(
-        [(lex, "bm25", False), (ann, "adc_dist", True)],
-        query_id_col=query_id_col, k0=k0, topk=topk, round_dp=round_dp,
-        weights=weights,
+    _check_query_ids([r[0] for r in rows], query_id_col)
+    ann = index.codec.batch_scored(
+        coded, index, rows, qid_type, vec_col=vec_col, n_probe=n_probe
+    )
+    tagged = lex.withColumn("__sys", F.lit(0)).unionByName(
+        ann.withColumn("__sys", F.lit(1)), allowMissingColumns=True
+    )
+    candidates = tagged.repartition("qid").groupBy("qid", "id", "__sys").agg(
+        F.min("adc_dist").alias("__asc"),
+        _bm25_sum("__c", round_dp).alias("__desc"),
+    )
+    return _rrf_tail(
+        candidates, 2, weights, k0, topk, round_dp, query_id_col, "id",
+        system_topk=retriever_topk,
     )

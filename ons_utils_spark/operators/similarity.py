@@ -1042,13 +1042,11 @@ def ivf_sq_batch_topk(
     ``_py_dot`` loop, stable argsort for the low-id tie-break) and the
     mapInPandas closure ships just the grid + the query matrix +
     per-query sorted probe lists (O(n_q · (dim + n_probe)) — no LUT
-    closure cap needed). The scan reads the UNION of all probed lists
-    (pushdown-able ``__list IN (...)`` — partition pruning holds on a
-    ``__list``-partitioned table); one Arrow pass decodes each batch's
-    codes ONCE (``x̂ = vmin + code·Δ``, the same two elementwise
-    roundings as the ``zip_with`` expression) and scores each row
-    against exactly the queries probing its list with the sequential
-    dimension-major squared-difference fold — bit-identical to
+    closure cap needed). The scan is PQ's (``pq._probed_scores``):
+    each batch's codes decode ONCE (``x̂ = vmin + code·Δ``, the same
+    two elementwise roundings as the ``zip_with`` expression) and each
+    row scores against exactly the queries probing its list with the
+    sequential dimension-major squared-difference fold — bit-identical to
     :func:`sq_adc_topk`'s ``aggregate`` fold (pinned in tests). NULL
     codes raise with the offending id (``pq._codes_matrix`` — the same
     message as the single-query guard). Top-k is the shared exact
@@ -1061,15 +1059,27 @@ def ivf_sq_batch_topk(
     the single-query path) and each row picks its probe POSITION via
     the same searchsorted membership; still no per-query LUTs.
     """
+    from ons_utils_spark.operators.pq import (
+        _check_query_ids, _two_phase_batch_topk,
+    )
+
+    rows = queries.select(query_id_col, vec_col).collect()
+    _check_query_ids([r[0] for r in rows], query_id_col)
+    scored = _ivf_sq_batch_scored(
+        coded, index, rows, queries.schema[query_id_col].dataType,
+        vec_col=vec_col, n_probe=n_probe,
+    )
+    return _two_phase_batch_topk(scored, topk, query_id_col)
+
+
+def _ivf_sq_batch_scored(coded, index, rows, qid_type, vec_col="embedding",
+                         n_probe=2):
+    """:func:`ivf_sq_batch_topk` before its top-``k`` — the IVF×SQ
+    codec's ``batch_scored`` (``pq._ivf_pq_batch_scored``'s contract)."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from ons_utils_spark.operators.pq import (
-        _check_query_ids,
-        _codes_matrix,
-        _fold_dots,
-        _fold_sq,
-        _two_phase_batch_topk,
+        _probe_mat, _probed_scores, _query_matrix,
     )
 
     if not index.coarse_centroids:
@@ -1079,108 +1089,40 @@ def ivf_sq_batch_topk(
             "table; use sq_adc_topk for plain-SQ serving"
         )
     _check_residual_flag(coded, index.by_residual)
-    rows = queries.select(query_id_col, vec_col).collect()
-    _check_query_ids([r[0] for r in rows], query_id_col)
-    qids = [r[0] for r in rows]
-    dim = index.dim
-    for r in rows:
-        x = r[vec_col]
-        if x is None or any(v is None for v in x):
-            raise ValueError(
-                f"query {r[0]!r} has a NULL {vec_col!r} vector or a "
-                "NULL element — every query needs a complete vector"
-            )
-        if len(x) != dim:
-            raise ValueError(
-                f"query {r[0]!r} dim {len(x)} != index dim {dim}"
-            )
-    n_q = len(rows)
-    Q = np.asarray(
-        [[float(v) for v in r[vec_col]] for r in rows], dtype=np.float64
-    )
-    if index.rotation is not None:
-        # Per-row gemv, the same arithmetic shape as rotate_query —
-        # batch ≡ singles stays bit-exact (the PQ batch scorer's rule).
-        R = np.asarray(index.rotation, dtype=np.float64)
-        Q = np.stack([R @ Q[i] for i in range(n_q)])
-    CC = np.asarray(index.coarse_centroids, dtype=np.float64)
-    dist = (
-        _fold_sq(Q)[:, None] + _fold_sq(CC)[None, :]
-    ) - 2.0 * _fold_dots(Q, CC)
-    probe_mat = np.argsort(dist, axis=1, kind="stable")[:, :n_probe]
-    np_eff = probe_mat.shape[1]
-    union_lists = sorted(int(v) for v in np.unique(probe_mat))
-    filtered = coded.where(F.col("__list").isin(union_lists))
-    # argsort + take_along_axis (not a plain sort): the residual path
-    # needs each row's PROBE POSITION to pick its query residual.
-    probe_argsort = np.argsort(probe_mat, axis=1, kind="stable").astype(
-        np.int64
-    )
-    probe_sorted = np.take_along_axis(probe_mat, probe_argsort, axis=1)
+    Q = _query_matrix(rows, vec_col, index)
+    probe_mat = _probe_mat(Q, index.coarse_centroids, n_probe)
     by_residual = index.by_residual
-    Qres = Q[:, None, :] - CC[probe_mat] if by_residual else None
+    Qres = (
+        Q[:, None, :]
+        - np.asarray(index.coarse_centroids, dtype=np.float64)[probe_mat]
+        if by_residual else None
+    )
     mn = np.asarray(index.vmin, dtype=np.float64)
     deltas = np.asarray(
         _sq_deltas(index.vmin, index.vmax, bits=index.bits),
         dtype=np.float64,
     )
-    round_dp = index.round_dp
 
-    qid_field = queries.schema[query_id_col].dataType
-    schema = StructType([
-        StructField("qid", qid_field),
-        StructField("id", coded.schema["id"].dataType),
-        StructField("__adc_sum", DoubleType()),
-    ])
+    def decode(C):
+        # Decode ONCE per batch, shared by every query: scaled = code·Δ
+        # then mn + scaled — the zip_with expression's two elementwise
+        # roundings in the same order.
+        return mn[None, :] + C.astype(np.float64) * deltas[None, :]
 
-    def gen(batches):
-        import pandas as pd
+    def score(decoded, qi, mask, pos):
+        q = Qres[qi][pos] if by_residual else Q[qi][None, :]
+        d = q - decoded[mask]
+        sq = d * d
+        # Sequential dimension-major fold from 0.0 — the IEEE image of
+        # F.aggregate(diffs, 0.0, acc + x).
+        s = np.zeros(sq.shape[0], dtype=np.float64)
+        for di in range(sq.shape[1]):
+            s += sq[:, di]
+        return s
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            C = _codes_matrix(pdf["codes"], pdf["id"])
-            # Decode ONCE per batch, shared by every query: scaled =
-            # code·Δ then mn + scaled — the zip_with expression's two
-            # elementwise roundings in the same order.
-            decoded = mn[None, :] + C.astype(np.float64) * deltas[None, :]
-            lists = pdf["__list"].to_numpy(dtype=np.int64)
-            ids = pdf["id"].to_numpy()
-            out_qid, out_id, out_s = [], [], []
-            for qi in range(n_q):
-                sl = probe_sorted[qi]
-                si = np.minimum(np.searchsorted(sl, lists), np_eff - 1)
-                mask = sl[si] == lists
-                if not mask.any():
-                    continue
-                if by_residual:
-                    pos = probe_argsort[qi][si[mask]]
-                    d = Qres[qi][pos] - decoded[mask]
-                else:
-                    d = Q[qi][None, :] - decoded[mask]
-                sq = d * d
-                # Sequential dimension-major fold from 0.0 — the IEEE
-                # image of F.aggregate(diffs, 0.0, acc + x).
-                s = np.zeros(sq.shape[0], dtype=np.float64)
-                for di in range(sq.shape[1]):
-                    s += sq[:, di]
-                out_qid.append(np.full(int(mask.sum()), qids[qi]))
-                out_id.append(ids[mask])
-                out_s.append(s)
-            if not out_qid:
-                continue
-            yield pd.DataFrame({
-                "qid": np.concatenate(out_qid),
-                "id": np.concatenate(out_id),
-                "__adc_sum": np.concatenate(out_s),
-            })
-
-    scored = filtered.mapInPandas(gen, schema).select(
-        "qid", "id",
-        F.round(F.col("__adc_sum"), round_dp).alias("adc_dist"),
+    return _probed_scores(
+        coded, rows, qid_type, probe_mat, index.round_dp, decode, score
     )
-    return _two_phase_batch_topk(scored, topk, query_id_col)
 
 
 #: The IVF×SQ codec of the coded serving table (``sources/store.py``).
@@ -1190,7 +1132,7 @@ SQ_CODEC = CodedTableCodec(
     save_index=save_sq_index,
     load_index_with_meta=_load_sq_index_with_meta,
     encode=ivf_sq_encode,
-    batch_topk=ivf_sq_batch_topk,
+    batch_scored=_ivf_sq_batch_scored,
 )
 
 

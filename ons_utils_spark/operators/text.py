@@ -826,21 +826,35 @@ def _fold_bm25(hits, keys: "list[str]", k1: float, b: float,
     points (scan/indexed × single/batch): select the grouping keys plus
     the shared contribution expression, sum in exact ``decimal(38,18)``
     (order-independent — the package's kmeans-centroid trick), cast back
-    once, round. One copy, four callers — the fold precision and
-    rounding cannot drift between forms."""
-    from pyspark.sql import functions as F
-
+    once, round (:func:`_bm25_sum`, which the hybrid search folds with
+    too). One copy — the fold precision and rounding cannot drift
+    between forms."""
     contrib = _bm25_contrib(k1, b)
     return (
         hits.select(*keys, contrib.alias("__c"))
         .groupBy(*keys)
-        .agg(
-            F.round(
-                F.sum(F.col("__c").cast("decimal(38,18)")).cast("double"),
-                round_dp,
-            ).alias("bm25")
-        )
+        .agg(_bm25_sum("__c", round_dp).alias("bm25"))
     )
+
+
+def _bm25_sum(contrib: str, round_dp: int):
+    """The fold's aggregate over a ``contrib`` column: the exact
+    ``decimal(38,18)`` sum, cast back to double once, rounded —
+    :func:`_fold_bm25`'s and the hybrid search tail's one copy."""
+    from pyspark.sql import functions as F
+
+    return F.round(
+        F.sum(F.col(contrib).cast("decimal(38,18)")).cast("double"),
+        round_dp,
+    )
+
+
+#: The batch forms' malformed-query error (Spark probe and driver check).
+_TERMS_ERROR = (
+    "query {!r} has a NULL or empty {!r} array or a NULL term — every "
+    "query must carry at least one non-NULL term (the single-query "
+    "bm25_scores raises the same way)"
+)
 
 
 def _query_table_vocab(queries, query_id_col: str, terms_col: str):
@@ -865,12 +879,7 @@ def _query_table_vocab(queries, query_id_col: str, terms_col: str):
         .collect()
     )
     if bad:
-        raise ValueError(
-            f"query {bad[0]['qid']!r} has a NULL or empty {terms_col!r} "
-            "array or a NULL term — every query must carry at least one "
-            "non-NULL term (the single-query bm25_scores raises the "
-            "same way)"
-        )
+        raise ValueError(_TERMS_ERROR.format(bad[0]["qid"], terms_col))
     qt = (
         queries.select(
             F.col(query_id_col).alias("qid"),
@@ -1697,6 +1706,23 @@ def _index_stats_fold(stats):
     )
 
 
+def _index_hits(tf, stats, qt=None):
+    """The indexed scorers' scoring rows: postings ``tf`` restricted to
+    the query vocabulary gain ``df`` from a count window partitioned by
+    term — one read of the pruned rows, nothing cached (a cache would
+    serve stale rows after an append) — then fan out to the broadcast
+    ``(qid, term)`` pairs ``qt`` if given, with the one-row stats."""
+    from pyspark.sql import Window, functions as F
+
+    hits = tf.select(
+        "term", "id", "tf", F.col("dl").alias("__dl"),
+        F.count(F.lit(1)).over(Window.partitionBy("term")).alias("df"),
+    )
+    if qt is not None:
+        hits = hits.join(F.broadcast(qt), "term")
+    return hits.crossJoin(F.broadcast(_index_stats_fold(stats)))
+
+
 def bm25_scores_indexed(
     postings,
     stats,
@@ -1717,28 +1743,8 @@ def bm25_scores_indexed(
     semi-join cannot — and a broadcast semi-join past it (wide
     profiles: bounded plan beats pruning).
     """
-    from pyspark.sql import functions as F
-
     qt = _normalize_query_terms(query_terms)
-    # LAZY localCheckpoint, not an eager one (r13): both consumers (the
-    # dfs aggregate's broadcast build and the scoring join) read the
-    # same materialized pruned rows either way, but the eager form paid
-    # one extra driver-blocking job per scorer call before any consumer
-    # ran; lazily, the first consumer's job materializes the blocks.
-    # NOT ``.persist()``: CacheManager matches plan-EQUAL reads (file
-    # reads canonicalize by root path, not by file listing), so a
-    # cached scorer plan over a store path would silently serve STALE
-    # rows to a later scorer call after an append to the same path —
-    # the RDD-scoped checkpoint is invisible to plan matching (pinned
-    # by test_serve_append_serve_sees_fresh_rows).
-    tf = _filter_postings_terms(postings, qt).select(
-        "term", "id", "tf", F.col("dl").alias("__dl")
-    ).localCheckpoint(eager=False)
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    hits = (
-        tf.join(F.broadcast(dfs), "term")
-        .crossJoin(F.broadcast(_index_stats_fold(stats)))
-    )
+    hits = _index_hits(_filter_postings_terms(postings, qt), stats)
     return _fold_bm25(hits, ["id"], k1, b, round_dp)
 
 
@@ -1775,9 +1781,12 @@ def bm25_batch_topk_indexed(
 ):
     """:func:`bm25_batch_topk` answered from a prebuilt index — the
     whole query TABLE scored with no corpus scan: postings semi-join
-    the broadcast union vocabulary (a batch profile is inherently wide,
-    so the semi-join form — not the In-pushdown — is always right
-    here), per-query fan-out happens after the per-(id, term) rows, and
+    the broadcast union vocabulary (here the vocabulary is a Spark
+    frame, never on the driver, so it cannot become an In-pushdown;
+    the hybrid search collects its query table and takes
+    :func:`_filter_postings_terms`' In-filter up to
+    ``_BM25_INDEX_ISIN_MAX`` terms — :func:`_bm25_query_contribs`),
+    per-query fan-out happens after the per-(id, term) rows, and
     top-k is a window partitioned by query. Bit-identical to the
     corpus-scan batch form — the validation, scoring fold, and top-k
     window are the SAME shared helpers (:func:`_query_table_vocab`,
@@ -1786,31 +1795,37 @@ def bm25_batch_topk_indexed(
     from pyspark.sql import functions as F
 
     qt, vocab = _query_table_vocab(queries, query_id_col, terms_col)
-    # LAZY localCheckpoint, not an eager one (r13): both consumers (the
-    # dfs aggregate's broadcast build and the scoring join) read the
-    # same materialized rows either way, but the eager form paid one
-    # extra driver-blocking job per scorer call before any consumer
-    # ran; lazily, the first consumer's job materializes the blocks.
-    # NOT ``.persist()`` (the first r13 form): CacheManager matches
-    # plan-EQUAL reads (file reads canonicalize by root path, not by
-    # file listing), so the cached pruned fragment would silently serve
-    # STALE rows to a plan-identical scorer call issued after an append
-    # to the same store path — the RDD-scoped checkpoint is invisible
-    # to plan matching and each call materializes its own read (pinned
-    # by test_serve_append_serve_sees_fresh_rows).
-    tf = (
-        postings.join(F.broadcast(vocab), "term", "left_semi")
-        .select("term", "id", "tf", F.col("dl").alias("__dl"))
-        .localCheckpoint(eager=False)
-    )
-    dfs = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    hits = (
-        tf.join(F.broadcast(dfs), "term")
-        .join(F.broadcast(qt), "term")
-        .crossJoin(F.broadcast(_index_stats_fold(stats)))
+    hits = _index_hits(
+        postings.join(F.broadcast(vocab), "term", "left_semi"), stats, qt
     )
     scored = _fold_bm25(hits, ["qid", "id"], k1, b, round_dp)
     return _per_query_topk(scored, topk)
+
+
+def _bm25_query_contribs(postings, stats, query_terms, qid_type,
+                         terms_col: str, k1: float, b: float):
+    """The hybrid search's BM25 half before its fold → one ``(qid, id,
+    __c)`` contribution row per matching (query, doc, term), which the
+    caller sums with :func:`_bm25_sum`. ``query_terms`` is ``[(qid,
+    lowered terms)]`` of a query table collected on the driver
+    (``qid_type``: its id's Spark type); the terms are checked and the
+    ``(qid, term)`` pairs and vocabulary built here, before any job."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    pairs: dict = {}
+    for qid, terms in query_terms:
+        if not terms or any(t is None for t in terms):
+            raise ValueError(_TERMS_ERROR.format(qid, terms_col))
+        pairs.update(((qid, t), None) for t in terms)
+    qt = local_rows_df(
+        postings.sparkSession, list(pairs),
+        StructType([
+            StructField("qid", qid_type), StructField("term", StringType()),
+        ]),
+    )
+    vocab = sorted({t for _, t in pairs})
+    hits = _index_hits(_filter_postings_terms(postings, vocab), stats, qt)
+    return hits.select("qid", "id", _bm25_contrib(k1, b).alias("__c"))
 
 
 def bm25_index_append(

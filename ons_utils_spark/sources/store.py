@@ -724,9 +724,10 @@ class CodedTableCodec(NamedTuple):
     #: ``(df, index, id_col, vec_col, method=) -> (id, codes, __list)``
     #: — encode with the stored index, no training.
     encode: Callable
-    #: ``(coded, index, queries, query_id_col=, vec_col=, n_probe=,
-    #: topk=) -> (query_id, id, adc_dist)``.
-    batch_topk: Callable
+    #: ``(coded, index, rows, qid_type, vec_col=, n_probe=) -> (qid,
+    #: id, adc_dist)`` — every probed candidate of a driver-collected
+    #: query table, before any top-k.
+    batch_scored: Callable
 
 
 def write_index_artifact(

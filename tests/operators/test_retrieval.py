@@ -111,6 +111,55 @@ class TestHybridBatchTopk:
         assert rows and all(r["rank"] <= 5 for r in rows)
         assert {r["query_id"] for r in rows} == {1, 2}
 
+    def test_non_default_query_id_col_matches_manual_composition(
+        self, spark
+    ):
+        """A query table keyed ``q`` (string ids, renamed term and vector
+        columns) fuses to the manual composition's rows, keyed ``q``."""
+        docs = spark.createDataFrame(
+            [(i, f"alpha beta doc{i} " + ("spark " * (i % 3)))
+             for i in range(30)],
+            "doc_id bigint, text string",
+        )
+        vecs = [
+            [((i * 7 + j * 3) % 11) / 10.0 for j in range(8)]
+            for i in range(30)
+        ]
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id bigint, embedding array<float>",
+        )
+        postings, stats = text.bm25_index_build(docs, "doc_id", "text")
+        coded, coarse, cbs = pq.ivf_pq_build(
+            emb, dim=8, n_lists=4, m=2, k=2, coarse_iter=1, n_iter=1
+        )
+        idx = pq.make_ivf_pq_index(coarse, cbs)
+        queries = spark.createDataFrame(
+            [("a", ["Spark", "alpha"], vecs[2]), ("b", ["beta"], vecs[9])],
+            "q string, t array<string>, v array<double>",
+        )
+        fused = retrieval.hybrid_batch_topk(
+            postings, stats, coded, idx, queries, query_id_col="q",
+            terms_col="t", vec_col="v", retriever_topk=8, topk=5,
+        )
+        lex = text.bm25_batch_topk_indexed(
+            postings, stats, queries, query_id_col="q", terms_col="t",
+            topk=8,
+        ).withColumnRenamed("query_id", "q")
+        ann = pq.ivf_pq_batch_topk(
+            coded, idx, queries, query_id_col="q", vec_col="v", topk=8
+        )
+        manual = retrieval.rrf_fuse(
+            [(lex, "bm25", False), (ann, "adc_dist", True)],
+            query_id_col="q", topk=5,
+        )
+        assert fused.columns == ["q", "id", "rrf", "rank"]
+        rows = fused.collect()
+        assert {r["q"] for r in rows} == {"a", "b"}
+        assert sorted(map(tuple, rows)) == sorted(
+            map(tuple, manual.collect())
+        )
+
     def test_sq_index_dispatches_to_sq_batch_scorer(self, spark):
         """An SqIndex routes the ANN half through ivf_sq_batch_topk —
         RRF is rank-space, so the codec families are interchangeable;

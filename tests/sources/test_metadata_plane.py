@@ -273,6 +273,57 @@ class TestBm25StoreJobs:
         } == {0, 2, 3, 5}
 
 
+class TestHybridSearchJobs:
+    @pytest.mark.parametrize("family", ["pq", "sq"])
+    def test_search_job_count(self, spark, tmp_path, family):
+        """A hybrid search collects its query table once, and both
+        retrievers' candidates meet in one exchange by query id, so a
+        load plus a search stays within a fixed number of jobs."""
+        bm25, ann = str(tmp_path / "bm25"), str(tmp_path / "ann")
+        docs = _docs(spark)
+        append, delete = _ann_store(spark, docs, ann, family)
+        T.bm25_index_append(docs, "doc_id", "text", bm25, batch_id=0)
+        append(docs, ann, id_col="doc_id", batch_id=0)
+        T.bm25_index_delete(spark, bm25, [1], batch_id=1)
+        delete(spark, ann, [1], batch_id=1)
+        queries = docs.where("doc_id IN (0, 1, 4)").select(
+            F.col("doc_id").alias("query_id"),
+            F.split("text", " ").alias("terms"),
+            "embedding",
+        )
+        with count_jobs(spark) as searched:
+            rows = retrieval.hybrid_batch_topk(
+                *retrieval.load_hybrid_stores(spark, bm25, ann), queries,
+                retriever_topk=3, topk=3,
+            ).collect()
+        assert len(searched) <= 8, searched
+        assert {r["query_id"] for r in rows} == {0, 1, 4}
+        assert 1 not in {r["id"] for r in rows}
+
+    @pytest.mark.parametrize("terms", [
+        "CAST(NULL AS ARRAY<STRING>)", "CAST(array() AS ARRAY<STRING>)",
+        "array('spark', NULL)",
+    ])
+    def test_query_table_checked_before_any_job(self, spark, hybrid, terms):
+        """Malformed terms and duplicate ids raise on the driver, from
+        the one collect of a local query table: no Spark job runs."""
+        stores = retrieval.load_hybrid_stores(spark, *hybrid)
+        vec = "array_repeat(0.5D, 8)"
+        bad = spark.sql(
+            f"SELECT * FROM VALUES (0L, array('spark'), {vec}), "
+            f"(1L, {terms}, {vec}) AS t(query_id, terms, embedding)"
+        )
+        dup = spark.sql(
+            f"SELECT * FROM VALUES (0L, array('spark'), {vec}), "
+            f"(0L, array('engine'), {vec}) AS t(query_id, terms, embedding)"
+        )
+        for queries, match in ((bad, "NULL or empty"), (dup, "duplicate")):
+            with count_jobs(spark) as searched:
+                with pytest.raises(ValueError, match=match):
+                    retrieval.hybrid_batch_topk(*stores, queries)
+            assert searched == [], searched
+
+
 class TestDriverReader:
     def test_list_partitioned_coded_table_reads_in_full(self, spark, hybrid):
         _, ann = hybrid
